@@ -447,10 +447,14 @@ object ExtQueries {
     // reproduce exactly the old `a.source < b.source` pairs. Bounded
     // driver collect per the engine's loud-require pattern.
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-    val srcNames = docs.select(col("source")).distinct().orderBy(col("source"))
+    // NULL is no source: the oracle's `a.source < b.source` never pairs
+    // it, so it takes no bit. limit(64) bounds the collect — one name past
+    // the cap is enough to fail loudly, not the whole dictionary
+    val srcNames = docs.select(col("source")).where(col("source").isNotNull)
+      .distinct().orderBy(col("source")).limit(64)
       .collect().map(_.getString(0))
     require(srcNames.length <= 63,
-      s"source-overlap bitmask supports <=63 sources, got ${srcNames.length}")
+      s"source-overlap bitmask supports <=63 sources, got more than 63")
     import s.implicits._
     val dict = srcNames.toSeq.zipWithIndex.toDF("source", "bit")
     val masks = Dedup.corpusShingles(s, dir)

@@ -175,7 +175,7 @@ object Pipeline {
     * applying the OTHER side's operator chain to a provably empty frame is
     * a value identity that still pays its full join + checkpoint plan,
     * which measured as the dominant share of the per-micro-batch floor
-    * (StreamFoldProfile r8).
+    * (the per-layer breakdown in foldbench/BREAKDOWN.md).
     */
   sealed trait EpochSide
   case object RefreshEpoch extends EpochSide
@@ -352,7 +352,8 @@ object Pipeline {
 
   /** Tag every Spark job started inside `f` with a fold-phase name —
     * free driver-side bookkeeping that makes the per-batch floor
-    * attributable (StreamFoldProfile groups job spans by it) and names
+    * attributable (foldbench groups job spans by it, see
+    * foldbench/BREAKDOWN.md) and names
     * the fold's stages in the Spark UI on a real cluster.
     */
   private[graft] def tagged[A](spark: SparkSession, tag: String)(f: => A): A = {

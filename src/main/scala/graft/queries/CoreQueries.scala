@@ -786,8 +786,8 @@ object CoreQueries {
   // This line's bench cost is the engine's per-micro-batch FLOOR, not a
   // scale cost: ~3 s of fold machinery (r8 — sided-epoch fast path +
   // fused change-set checkpoint cut it from 4.6 s / 37 jobs to ~3 s /
-  // 15-20 jobs; full measured breakdown in
-  // graft.tools.StreamFoldProfile's scaladoc) plus log write + store
+  // 15-20 jobs; per-layer breakdown of a trigger in
+  // foldbench/BREAKDOWN.md) plus log write + store
   // readback. A production stream pays the same floor once per trigger
   // and amortizes it over millions of rows.
   val q_stream_fold_state: QueryDef = QueryDef(

@@ -48,11 +48,20 @@ import graft.state.ChangeSet
   *     index only ever grows by the batch's inserted edge keys.
   *
   * Determinism/idempotence: a redelivered batchId reads the same
-  * predecessor manifest, computes the same touched buckets, overwrites the
-  * same table dirs and rewrites the same MANIFEST — at-least-once delivery
-  * yields exactly-once state. The MANIFEST is written LAST with a
-  * terminator line: a version without a complete manifest is an
-  * uncommitted crash remnant and is never read.
+  * predecessor manifest, computes the same touched buckets, stages the
+  * same rows and arrives at the same MANIFEST — pointers AND per-bucket
+  * content signatures — so the commit accepts it idempotently, while a
+  * DIFFERENT fold racing the same version loses retryably even when it
+  * touched the same buckets. At-least-once delivery yields exactly-once
+  * state. The MANIFEST is written LAST with a terminator line: a version
+  * without a complete manifest is an uncommitted crash remnant and is
+  * never read.
+  *
+  * There is one write path: [[write]] (the graph tables, elected from a
+  * [[ChangeSet]]) and [[TableStore.write]] (any table set, elected from
+  * delta and delete frames) only decide which buckets each table
+  * rewrites and with which rows; [[stageAndCommit]] stages, signs and
+  * commits for both.
   */
 object StateStore {
 
@@ -172,7 +181,9 @@ object StateStore {
         * REDELIVERY (same content, must succeed idempotently) from a
         * DIFFERENT fold that raced the same version and happened to touch
         * the same bucket set (a silent lost update without this line).
-        * Absent in graph-store and pre-r11 manifests — those fall back to
+        * Absent in manifests written before their store recorded
+        * signatures (older generic stores, and graph stores before the
+        * graph tables shared the signed write path) — those fall back to
         * pointer-only comparison.
         */
       sigs: Map[String, Map[Int, Long]] = Map.empty) {
@@ -238,8 +249,7 @@ object StateStore {
     for ((v, d) <- dirs.toSeq.sortBy(_._1))
       sb.append(s"dir:$v=$d\n")
     // content signatures of the buckets this version writes — the CAS's
-    // same-content evidence (see [[Manifest.sigs]]); graph-store writes
-    // pass none, keeping graph manifests byte-stable
+    // same-content evidence (see [[Manifest.sigs]])
     for ((t, m) <- sigs.toSeq.sortBy(_._1); (pt, sg) <- m.toSeq.sorted)
       sb.append(s"sig:$t,$pt=$sg\n")
     // key columns: recorded ONLY for tables without canonical graph keys
@@ -497,6 +507,9 @@ object StateStore {
   /** Write state as version `version`. With a predecessor manifest and a
     * ChangeSet, only buckets containing changed keys are rewritten; the
     * rest inherit the predecessor's pointers. Returns the written pointers.
+    * Stages and commits through [[stageAndCommit]], the one write path it
+    * shares with [[TableStore.write]], so the graph tables' manifests
+    * carry content signatures like every other store's.
     *
     * `st` may be a PARTIAL state (only some buckets loaded, from
     * [[readPartial]]) as long as `loaded` declares which — the write
@@ -506,70 +519,153 @@ object StateStore {
     */
   def write(spark: SparkSession, statePath: String, version: Long, st: State,
       changes: Option[ChangeSet], cfg: Config = Config(),
-      loaded: Option[Map[String, Set[Int]]] = None): Pointers = {
+      loaded: Option[Map[String, Set[Int]]] = None): Pointers =
+    stageAndCommit(spark, statePath, version, cfg, incremental = changes.nonEmpty) { base =>
+      // each version records the schema its state frames carried
+      val schemas: Map[String, StructType] =
+        tables.map(t => t.name -> tableOf(st, t.name).schema).toMap
+
+      // touched buckets per table, from the batch's changed keys — ONE
+      // tagged union+distinct job for every table's set (driver-side
+      // collect of at most `buckets` ints per table) instead of one job
+      // per table: the collects are fixed PER-BATCH latency on the
+      // streaming hot path, so their count matters at every scale
+      val touched: Map[String, Set[Int]] = (base, changes) match {
+        case (Some(_), Some(ch)) =>
+          // idx buckets follow the changed edges' child ids
+          val frames = tables.map(t => (t.name, changesOf(ch, t.name), t.bucketCols)) :+
+            ((idxTable.name, ch.parentOf, Seq("child_id")))
+          val collected = collectBucketsTagged(
+            frames.map { case (n, df, cols) => (n, df, bucket(cols, cfg.buckets)) })
+          (tables :+ idxTable).map(t =>
+            t.name -> collected.getOrElse(t.name, Set.empty)).toMap
+        case _ => (tables :+ idxTable).map(_.name -> Set.empty[Int]).toMap // full write
+      }
+      loaded.foreach { lm =>
+        for (t <- tables)
+          require(touched(t.name).subsetOf(lm.getOrElse(t.name, Set.empty)),
+            s"partial-state write for '${t.name}': touched buckets " +
+              s"${touched(t.name).diff(lm.getOrElse(t.name, Set.empty)).toSeq.sorted.mkString(",")} " +
+              "were never loaded — the state frame cannot hold their full contents")
+      }
+      val full = base.isEmpty
+
+      // a full write stages every bucket; an incremental one rewrites only
+      // the touched buckets — a touched bucket that produced no rows this
+      // version is now EMPTY and drops out of the manifest (inheriting its
+      // old pointer would resurrect deleted rows on read)
+      def stageMain(t: TableSpec): Stager = stage => {
+        val df = tableOf(st, t.name).withColumn("pt", bucket(t.bucketCols, cfg.buckets))
+        if (full) { if (!provablyNoRows(df)) stage(df) }
+        else if (touched(t.name).nonEmpty)
+          stage(df.filter(col("pt").isin(touched(t.name).toSeq: _*)))
+        touched(t.name)
+      }
+
+      // reverse index: full write projects it from parent_of; an incremental
+      // write read-modify-writes ONLY the touched index buckets — old keys of
+      // those buckets (edge keys never change, so no anti-join is needed)
+      // union the batch's changed edge keys, distinct
+      val stageIdx: Stager = stage => {
+        val idxKeys = st.parentOf.select(col("child_id"), col("parent_id"))
+        val tb = touched(idxTable.name)
+        if (full) {
+          // checked BEFORE the distinct, whose exchange hides an empty input
+          if (!provablyNoRows(idxKeys))
+            stage(idxKeys.distinct().withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets)))
+        } else if (tb.nonEmpty) {
+          val oldPaths = base.get.pointers.getOrElse(idxTable.name, Map.empty)
+            .filter { case (pt, _) => tb(pt) }
+            .map { case (pt, v) =>
+              s"${tableDataDir(statePath, base.get.dirs, v, idxTable.name)}/pt=$pt" }.toSeq
+          val old = readPaths(spark, idxTable.schema, oldPaths)
+          val changedKeys = changes.get.parentOf.select(col("child_id"), col("parent_id"))
+          stage(old.unionByName(changedKeys).distinct()
+            .withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets))
+            .filter(col("pt").isin(tb.toSeq: _*)))
+        }
+        tb
+      }
+      (schemas, tables.map(t => t.name -> stageMain(t)) :+ (idxTable.name -> stageIdx))
+    }._1
+
+  /** A frame with ZERO partitions (an empty-state placeholder or empty
+    * ChangeSet) can't hold a row; skipping its write job is free and makes
+    * a sparse write (one populated table of several) cost one table's
+    * I/O. Checked on partition COUNT, not a scan — a big table never pays
+    * for the probe. Only for frames without an exchange: under adaptive
+    * execution, asking for the partitions of a shuffled frame runs its
+    * shuffle.
+    */
+  private[streaming] def provablyNoRows(df: DataFrame): Boolean =
+    df.rdd.getNumPartitions == 0
+
+  /** One table's share of a version, run on the staging pool. It calls
+    * `stage` at most once with the rows of the buckets it rewrites (a
+    * frame carrying the `pt` bucket column) and returns the buckets it
+    * REWROTE against the base manifest; [[stageAndCommit]] points the
+    * buckets those rows landed in at this version, drops rewritten
+    * buckets that came out empty, and inherits every other base pointer.
+    */
+  private[streaming] type Stager = (DataFrame => Unit) => Set[Int]
+
+  /** The one staging-and-commit path behind [[write]] (the graph tables)
+    * and [[TableStore.write]] (any table set). The core owns every step
+    * the callers share:
+    *
+    *  1. the predecessor manifest read. `base` is that manifest when the
+    *     caller asks for an `incremental` write and one exists, else
+    *     `None` (a full write, which inherits nothing);
+    *  2. the checks an incremental write must pass against `base`: the
+    *     same bucket modulus, and a schema that is additive over it;
+    *  3. a writer-unique staging dir, into which the `plan`'s stagers —
+    *     run concurrently on ONE per-call pool (each staging is
+    *     independent, and the commit runs after all complete; the pool's
+    *     threads inherit the caller's job group/description) —
+    *     write their rows partitioned by `pt`;
+    *  4. the per-bucket stats each staging write observes about itself
+    *     (`graft.functions.BucketSig` as an `observe()` metric: content
+    *     signature and row count per bucket, no extra job), which name
+    *     the buckets written and become the manifest's `sig:` lines;
+    *  5. the pointer map, the `dir:` tokens it still references, and the
+    *     signed [[commit]].
+    *
+    * `plan` runs on the caller's thread against `base` and returns the
+    * schema of every table the version records plus each table's
+    * [[Stager]]. Returns the committed pointers and each staged table's
+    * per-bucket (signature, row count).
+    */
+  private[streaming] def stageAndCommit(spark: SparkSession, statePath: String,
+      version: Long, cfg: Config, incremental: Boolean,
+      keys: Map[String, Seq[String]] = Map.empty)(
+      plan: Option[Manifest] => (Map[String, StructType], Seq[(String, Stager)]))
+      : (Pointers, Map[String, Map[Int, (Long, Long)]]) = {
     val prevVersion = latestCommitted(spark, statePath, version - 1)
     val prev = prevVersion.flatMap(v => readManifest(spark, statePath, v))
-    prev.foreach { pm =>
-      require(changes.isEmpty || pm.buckets == cfg.buckets,
+    val base = prev.filter(_ => incremental)
+    base.foreach { pm =>
+      require(pm.buckets == cfg.buckets,
         s"bucket count changed (manifest=${pm.buckets}, config=${cfg.buckets}): " +
           "inherited pointers would be bucketed under the old modulus — " +
-          "rebucket with a full write (changes=None) instead")
+          "rebucket with a full write instead")
     }
-
-    // schema evolution contract: each version records the schema its state
-    // frames carried. An INCREMENTAL write must be additive over its
-    // predecessor (every inherited field present, same type) — inherited
-    // buckets' files then null-fill the added columns under the new read
-    // schema. Dropping or retyping a column needs a full write (every
-    // bucket rewritten, no old files left behind the new schema).
-    val schemas: Map[String, StructType] =
-      tables.map(t => t.name -> tableOf(st, t.name).schema).toMap
-    prev.filter(_ => changes.nonEmpty).foreach { pm =>
-      for (t <- tables) {
-        val old = pm.schemaOf(t.name)
-        val nw = schemas(t.name)
-        val missing = old.fields.filterNot(of =>
+    val (schemas, stagers) = plan(base)
+    // schema evolution contract: an INCREMENTAL write must be additive
+    // over its predecessor (every inherited field present, same type) —
+    // inherited buckets' files then null-fill the added columns under the
+    // new read schema. Dropping or retyping a column needs a full write
+    // (every bucket rewritten, no old files left behind the new schema).
+    base.foreach { pm =>
+      for ((t, nw) <- schemas) {
+        val missing = pm.schemaOf(t).fields.filterNot(of =>
           nw.fields.exists(nf => nf.name == of.name && nf.dataType == of.dataType))
         require(missing.isEmpty,
-          s"incremental write narrows '${t.name}': predecessor fields " +
+          s"incremental write narrows '$t': predecessor fields " +
             s"${missing.map(_.name).mkString(", ")} absent (or retyped) in the new " +
             "schema — inherited buckets would silently disagree with new ones; " +
-            "evolve additively, or rewrite every bucket with a full write (changes=None)")
+            "evolve additively, or rewrite every bucket with a full write")
       }
     }
-
-    // A frame with ZERO partitions (an empty-state placeholder or empty
-    // ChangeSet) can't hold a row; skipping its collect/write job + commit
-    // round-trip is free and makes a sparse write (one populated table of
-    // four) cost one table's I/O. Checked on partition COUNT, not a scan —
-    // a big table never pays for the probe.
-    def provablyNoRows(df: DataFrame): Boolean = df.rdd.getNumPartitions == 0
-
-    // touched buckets per table, from the batch's changed keys — ONE
-    // tagged union+distinct job for every table's set (driver-side
-    // collect of at most `buckets` ints per table) instead of one job
-    // per table: the collects are fixed PER-BATCH latency on the
-    // streaming hot path, so their count matters at every scale
-    val touched: Map[String, Set[Int]] = (prev, changes) match {
-      case (Some(_), Some(ch)) =>
-        // idx buckets follow the changed edges' child ids
-        val frames = tables.map(t => (t.name, changesOf(ch, t.name), t.bucketCols)) :+
-          ((idxTable.name, ch.parentOf, Seq("child_id")))
-        val collected = collectBucketsTagged(
-          frames.map { case (n, df, cols) => (n, df, bucket(cols, cfg.buckets)) })
-        (tables :+ idxTable).map(t =>
-          t.name -> collected.getOrElse(t.name, Set.empty)).toMap
-      case _ => (tables :+ idxTable).map(_.name -> Set.empty[Int]).toMap // full write
-    }
-    loaded.foreach { lm =>
-      for (t <- tables)
-        require(touched(t.name).subsetOf(lm.getOrElse(t.name, Set.empty)),
-          s"partial-state write for '${t.name}': touched buckets " +
-            s"${touched(t.name).diff(lm.getOrElse(t.name, Set.empty)).toSeq.sorted.mkString(",")} " +
-            "were never loaded — the state frame cannot hold their full contents")
-    }
-
-    val full = prev.isEmpty || changes.isEmpty
 
     // data lands in a WRITER-UNIQUE staging dir; commit() moves it under
     // v<version>/ only after the CAS legs pass — a loser detected at
@@ -578,80 +674,68 @@ object StateStore {
     // prune)
     val token = java.util.UUID.randomUUID().toString.take(8)
     val staging = s"$statePath/.staging-v$version-$token"
-    def writeDir(df: DataFrame, name: String): Set[Int] = {
-      df.write.mode("overwrite").partitionBy("pt").parquet(s"$staging/$name")
-      listBuckets(spark, s"$staging/$name")
-    }
-
-    def stageMain(t: TableSpec): (String, Map[Int, Long]) = {
-      val df = tableOf(st, t.name).withColumn("pt", bucket(t.bucketCols, cfg.buckets))
-      val written: Set[Int] =
-        if (full) { if (provablyNoRows(df)) Set.empty else writeDir(df, t.name) }
-        else if (touched(t.name).isEmpty) Set.empty
-        else writeDir(df.filter(col("pt").isin(touched(t.name).toSeq: _*)), t.name)
-      // inherit pointers for UNTOUCHED buckets only: a touched bucket that
-      // produced no rows this version is now EMPTY and must drop out of
-      // the manifest — inheriting its old pointer would resurrect deleted
-      // rows on read (latent today — merges never delete — but the
-      // ChangeSet contract promises supersets are safe, so honor it)
-      val inherited =
-        if (full) Map.empty[Int, Long]
-        else prev.get.pointers.getOrElse(t.name, Map.empty) -- touched(t.name)
-      t.name -> (inherited ++ written.map(_ -> version).toMap)
-    }
-
-    // reverse index: full write projects it from parent_of; an incremental
-    // write read-modify-writes ONLY the touched index buckets — old keys of
-    // those buckets (edge keys never change, so no anti-join is needed)
-    // union the batch's changed edge keys, distinct
-    val idxKeys = st.parentOf.select(col("child_id"), col("parent_id"))
-    def stageIdx(): Map[Int, Long] =
-      if (full) {
-        if (provablyNoRows(idxKeys)) Map.empty
+    // per-table staged bucket stats: pt -> (content signature, row count).
+    // The signature is the order-independent sum of per-row hashes over
+    // the rows ACTUALLY written (columns in sorted order, so a
+    // deterministic redelivery recomputes the identical value from its
+    // own staging): the commit CAS's same-content evidence. Pointer maps
+    // alone cannot tell redelivery from a DIFFERENT fold racing the same
+    // version onto the same bucket set. Computed as an OBSERVED metric of
+    // the staging write itself (graft.functions.BucketSig, BucketSigSpec
+    // pins it), so neither a signature read-back nor a written-bucket
+    // directory listing costs a pass.
+    val stagedStats = scala.collection.concurrent.TrieMap.empty[String, Map[Int, (Long, Long)]]
+    val written = scala.collection.concurrent.TrieMap.empty[String, Set[Int]]
+    def writeDir(name: String)(df: DataFrame): Unit = {
+      // hash functions reject map-typed inputs: sign over the hashable
+      // columns only (a table that is ALL maps degrades to the
+      // pointer-only comparison instead of refusing schemas the store
+      // accepted before signatures existed)
+      val dataCols = df.schema.fields
+        .filter(f => f.name != "pt" && !containsMap(f.dataType))
+        .map(_.name).sorted.toSeq.map(col)
+      val obs = new org.apache.spark.sql.Observation(s"stage-$name-$token")
+      val metric =
+        if (dataCols.isEmpty) collect_set(col("pt")).as("pts")
+        else graft.functions.BucketSig(col("pt"), xxhash64(dataCols: _*)).as("sigs")
+      df.observe(obs, metric)
+        .write.mode("overwrite").partitionBy("pt").parquet(s"$staging/$name")
+      written(name) =
+        if (dataCols.isEmpty)
+          obs.get("pts").asInstanceOf[scala.collection.Seq[Int]].toSet
         else {
-          val df = idxKeys.distinct().withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets))
-          writeDir(df, idxTable.name).map(_ -> version).toMap
+          val stats = obs.get("sigs")
+            .asInstanceOf[scala.collection.Map[Int, org.apache.spark.sql.Row]]
+            .map { case (pt, r) => pt -> ((r.getLong(0), r.getLong(1))) }.toMap
+          // zero-bucket stagings record NO sig entry (the manifest writer
+          // emits no lines for them, so an in-memory empty map would make a
+          // byte-identical redelivery spuriously fail the sig compare — the
+          // exact asymmetry live() normalizes for pointers)
+          if (stats.nonEmpty) stagedStats(name) = stats
+          stats.keySet
         }
-      } else if (touched(idxTable.name).isEmpty) prev.get.pointers.getOrElse(idxTable.name, Map.empty)
+    }
+
+    def run(name: String, s: Stager): (String, Map[Int, Long]) = {
+      val rewritten = s(writeDir(name))
+      val inherited = base.fold(Map.empty[Int, Long])(_.pointers.getOrElse(name, Map.empty))
+      name -> ((inherited -- rewritten) ++
+        written.getOrElse(name, Set.empty[Int]).map(_ -> version))
+    }
+    val pointers: Pointers =
+      if (stagers.sizeIs == 1) Map(run(stagers.head._1, stagers.head._2))
       else {
-        val tb = touched(idxTable.name)
-        val oldPaths = prev.get.pointers.getOrElse(idxTable.name, Map.empty)
-          .filter { case (pt, _) => tb(pt) }
-          .map { case (pt, v) =>
-            s"${tableDataDir(statePath, prev.get.dirs, v, idxTable.name)}/pt=$pt" }.toSeq
-        val old =
-          if (oldPaths.isEmpty) spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], idxTable.schema)
-          else spark.read.schema(idxTable.schema).parquet(oldPaths: _*)
-        val changedKeys = changes.get.parentOf.select(col("child_id"), col("parent_id"))
-        val df = old.unionByName(changedKeys).distinct()
-          .withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets))
-          .filter(col("pt").isin(tb.toSeq: _*))
-        val written = writeDir(df, idxTable.name)
-        (prev.get.pointers.getOrElse(idxTable.name, Map.empty) -- tb) ++
-          written.map(_ -> version).toMap
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(
+          math.min(stagers.size, 5))
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        try scala.concurrent.Await.result(
+          scala.concurrent.Future.traverse(stagers) { case (n, s) =>
+            scala.concurrent.Future(run(n, s)) },
+          scala.concurrent.duration.Duration.Inf).toMap
+        finally pool.shutdown()
       }
 
-    // stage every table concurrently (guide §2.6): each staging is
-    // independent (own staging subdir, pointer math reads only immutable
-    // `prev`/`touched`), and commit() below runs only after all complete.
-    // The per-call pool's threads inherit this caller's thread-local job
-    // group/description; the fold's serial per-batch latency drops by the
-    // overlapped actions' scheduling gaps.
-    val stagePool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(tables.size + 1, 5))
-    implicit val stageEc: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(stagePool)
-    val (mainPointers, idxPointers) =
-      try {
-        val mainsF = scala.concurrent.Future.traverse(tables)(t =>
-          scala.concurrent.Future(stageMain(t)))
-        val idxF = scala.concurrent.Future(stageIdx())
-        scala.concurrent.Await.result(
-          mainsF.zip(idxF).map { case (m, i) => (m.toMap, i) },
-          scala.concurrent.duration.Duration.Inf)
-      } finally stagePool.shutdown()
-    val pointers = mainPointers + (idxTable.name -> idxPointers)
     // dir tokens for every version the pointers still reference: inherited
     // from the predecessor's manifest, plus THIS version's writer-unique
     // token when any bucket was written here; entries for versions no
@@ -661,8 +745,9 @@ object StateStore {
       prev.map(_.dirs).getOrElse(Map.empty).filter { case (v, _) => refVers(v) } ++
         (if (refVers(version)) Map(version -> s"d-$token") else Map.empty)
     commit(spark, statePath, version, cfg, pointers, prevVersion, Some(staging),
-      schemas, dirs, dirName = s"d-$token")
-    pointers
+      schemas, dirs, dirName = s"d-$token", keys = keys,
+      sigs = stagedStats.view.mapValues(_.map { case (pt, (s, _)) => pt -> s }).toMap)
+    (pointers, stagedStats.toMap)
   }
 
   /** Manifest commit with the two compare-and-swap legs that make a
@@ -680,7 +765,7 @@ object StateStore {
     *     idempotently; different content is a genuine second writer and
     *     fails retryably.
     *
-    * Data isolation: [[write]] stages its table dirs under a
+    * Data isolation: [[stageAndCommit]] stages its table dirs under a
     * writer-unique `.staging-v<version>-<token>` dir and commit promotes
     * the WHOLE staging dir in one rename to the equally writer-unique
     * `v<version>/d-<token>/` data dir, whose name the manifest records as
@@ -700,8 +785,8 @@ object StateStore {
     * set, where pointer maps alone are blind — loses retryably instead
     * of silently dropping its data. In-JVM writer races are fully
     * serialized by a per-root commit lock (StoreConcurrencySpec soaks
-    * 4×16 mixed commits); graph-store writes carry no signatures and
-    * keep pointer-only semantics (single logical pipeline by design).
+    * 4×16 mixed commits). A manifest without signatures (written before
+    * its store recorded them) keeps the pointer-only comparison.
     */
   private[streaming] def commit(spark: SparkSession, statePath: String,
       version: Long, cfg: Config, pointers: Pointers,
@@ -781,8 +866,8 @@ object StateStore {
     // touched the same bucket set — that case was a silent lost update
     // (the loser returned "success" with its data dropped). When BOTH
     // sides carry content signatures, they must match; a sig-less side
-    // (graph-store writes, pre-r11 manifests) keeps the pointer-only
-    // comparison for byte-stable redelivery compatibility.
+    // (a manifest written before its store recorded signatures) keeps the
+    // pointer-only comparison, so redelivery over it still succeeds.
     def liveSigs(x: Map[String, Map[Int, Long]]) = x.filter(_._2.nonEmpty)
     def winnerEquals(): Boolean =
       readManifest(spark, statePath, version)
@@ -950,15 +1035,6 @@ object StateStore {
       .collect()
       .groupBy(_._1)
       .map { case (n, rows) => n -> rows.map(_._2).toSet }
-  }
-
-  private[streaming] def listBuckets(spark: SparkSession, tableDir: String): Set[Int] = {
-    val (fs, p) = fsFor(spark, tableDir)
-    if (!fs.exists(p)) Set.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("pt="))
-      .flatMap(s => s.getPath.getName.drop(3).toIntOption)
-      .toSet
   }
 
   // --- read ----------------------------------------------------------------

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import StateStore.{Config, Manifest, Pointers}
+import StateStore.{Config, Manifest}
 
 /** Generic versioned, hash-bucketed table store — [[StateStore]]'s
   * shadow-paging/manifest/CAS machinery opened up to ARBITRARY table
@@ -26,10 +26,11 @@ import StateStore.{Config, Manifest, Pointers}
   *    incremental index maintenance viable at 100 TB.
   *
   * Keys are the bucket columns ([[Spec.bucketCols]]): a row replaces
-  * the stored row with the same key tuple. Determinism/idempotence
-  * inherit from StateStore.commit: a redelivered version recomputes the
-  * same buckets and pointer map and commits idempotently; a racing
-  * writer loses the manifest CAS retryably.
+  * the stored row with the same key tuple. Staging, content signatures
+  * and the commit are [[StateStore.stageAndCommit]], the same core the
+  * graph store writes through: a redelivered version recomputes the
+  * same buckets, pointers and signatures and commits idempotently; a
+  * racing writer loses the manifest CAS retryably.
   */
 object TableStore {
 
@@ -97,7 +98,9 @@ object TableStore {
   /** Returns each staged table's per-bucket (content signature, row
     * count) — the write's own observed stats ([[compact]]'s audit rides
     * them instead of re-reading the store; other callers ignore the
-    * value).
+    * value). Stages and commits through [[StateStore.stageAndCommit]],
+    * the one write path it shares with the graph store: this method only
+    * elects each table's touched buckets and merges their rows.
     */
   def write(spark: SparkSession, statePath: String, version: Long,
       specs: Seq[Spec], frames: Map[String, DataFrame],
@@ -108,202 +111,101 @@ object TableStore {
       s"frames ${frames.keySet.diff(specs.map(_.name).toSet)} not in specs")
     require(deletes.keySet.subsetOf(specs.map(_.name).toSet),
       s"deletes ${deletes.keySet.diff(specs.map(_.name).toSet)} not in specs")
-    val prevVersion = StateStore.latestCommitted(spark, statePath, version - 1)
-    val prev = prevVersion.flatMap(v => StateStore.readManifest(spark, statePath, v))
-    val incremental = delta && prev.nonEmpty
-    prev.foreach { pm =>
-      require(!incremental || pm.buckets == cfg.buckets,
-        s"bucket count changed (manifest=${pm.buckets}, config=${cfg.buckets}): " +
-          "rebucket with a full write instead")
-    }
-    require(deletes.isEmpty || incremental,
-      "deletes need a committed predecessor to retract from — on a full " +
-        "write, filter the rows out of the frame instead")
-    require(incremental || frames.keySet == specs.map(_.name).toSet,
-      "a full write must provide every table's frame " +
-        s"(missing ${specs.map(_.name).toSet.diff(frames.keySet).toSeq.sorted.mkString(", ")})")
+    StateStore.stageAndCommit(spark, statePath, version, cfg, incremental = delta,
+        // record each table's key columns: the manifest alone then fully
+        // describes this store to the DSv2/catalog read path
+        keys = specs.map(t => t.name -> t.bucketCols).toMap) { base =>
+      require(deletes.isEmpty || base.nonEmpty,
+        "deletes need a committed predecessor to retract from — on a full " +
+          "write, filter the rows out of the frame instead")
+      require(base.nonEmpty || frames.keySet == specs.map(_.name).toSet,
+        "a full write must provide every table's frame " +
+          s"(missing ${specs.map(_.name).toSet.diff(frames.keySet).toSeq.sorted.mkString(", ")})")
+      // each version records the schema its tables were written under;
+      // inherited tables carry the predecessor's recorded schema forward
+      val schemas: Map[String, StructType] = specs.map { t =>
+        t.name -> frames.get(t.name).map(_.schema)
+          .orElse(base.map(_.schemaOf(t.name)))
+          .getOrElse(throw new IllegalArgumentException(
+            s"no frame and no predecessor schema for '${t.name}'"))
+      }.toMap
 
-    // each version records the schema its tables were written under;
-    // inherited tables carry the predecessor's recorded schema forward
-    val schemas: Map[String, StructType] = specs.map { t =>
-      t.name -> frames.get(t.name).map(_.schema)
-        .orElse(prev.map(_.schemaOf(t.name)))
-        .getOrElse(throw new IllegalArgumentException(
-          s"no frame and no predecessor schema for '${t.name}'"))
-    }.toMap
-    // incremental schema contract (same as StateStore.write): additive
-    // only — inherited buckets null-fill added columns under the new
-    // read schema; narrowing needs a full rewrite
-    if (incremental) for (t <- specs; df <- frames.get(t.name)) {
-      val old = prev.get.schemaOf(t.name)
-      val missing = old.fields.filterNot(of =>
-        df.schema.fields.exists(nf => nf.name == of.name && nf.dataType == of.dataType))
-      require(missing.isEmpty,
-        s"incremental write narrows '${t.name}': predecessor fields " +
-          s"${missing.map(_.name).mkString(", ")} absent or retyped — evolve " +
-          "additively, or rewrite with a full write")
-    }
-
-    val token = java.util.UUID.randomUUID().toString.take(8)
-    val staging = s"$statePath/.staging-v$version-$token"
-    // per-table staged bucket stats: pt -> (content signature, row count).
-    // The signature is the order-independent sum of per-row hashes over
-    // the rows ACTUALLY written (columns in sorted order, so a
-    // deterministic redelivery recomputes the identical value from its
-    // own staging): the commit CAS's same-content evidence. Pointer maps
-    // alone cannot tell redelivery from a DIFFERENT fold racing the same
-    // version onto the same bucket set — that case silently dropped the
-    // loser's data before r11. r14: computed as an OBSERVED metric of the
-    // staging write itself (graft.functions.BucketSig — bit-identical to
-    // the r11-r13 decimal read-back fold, BucketSigSpec pins it), so the
-    // per-write sig read-back job AND the written-bucket directory
-    // listing both collapse into the one write action (guide §1.2 fewer
-    // passes; the read-back was fixed per-commit latency at every scale).
-    // concurrent: staging runs one thread per table (stageTable below)
-    val stagedStats = scala.collection.concurrent.TrieMap.empty[String, Map[Int, (Long, Long)]]
-    def writeDir(df: DataFrame, name: String): Set[Int] = {
-      // hash functions reject map-typed inputs: sign over the hashable
-      // columns only (a table that is ALL maps degrades to the
-      // pointer-only comparison instead of refusing schemas the store
-      // accepted before r11)
-      val dataCols = df.schema.fields
-        .filter(f => f.name != "pt" && !StateStore.containsMap(f.dataType))
-        .map(_.name).sorted.toSeq.map(col)
-      val obs = new org.apache.spark.sql.Observation(s"stage-$name-$token")
-      val metric =
-        if (dataCols.isEmpty) collect_set(col("pt")).as("pts")
-        else graft.functions.BucketSig(col("pt"), xxhash64(dataCols: _*)).as("sigs")
-      df.observe(obs, metric)
-        .write.mode("overwrite").partitionBy("pt").parquet(s"$staging/$name")
-      if (dataCols.isEmpty)
-        obs.get("pts").asInstanceOf[scala.collection.Seq[Int]].toSet
-      else {
-        val stats = obs.get("sigs")
-          .asInstanceOf[scala.collection.Map[Int, org.apache.spark.sql.Row]]
-          .map { case (pt, r) => pt -> ((r.getLong(0), r.getLong(1))) }.toMap
-        // zero-bucket stagings record NO sig entry (the manifest writer
-        // emits no lines for them, so an in-memory empty map would make a
-        // byte-identical redelivery spuriously fail the sig compare — the
-        // exact asymmetry live() normalizes for pointers)
-        if (stats.nonEmpty) stagedStats(name) = stats
-        stats.keySet
+      def stageTable(t: Spec): StateStore.Stager = stage => {
+        val keyBucket = StateStore.bucket(t.bucketCols, cfg.buckets)
+        // retracted key tuples, reduced to the key columns (a frame with
+        // extra columns is fine — only the key participates)
+        val delKeys: Option[DataFrame] = deletes.get(t.name)
+          .filterNot(StateStore.provablyNoRows)
+          .map(_.select(t.bucketCols.map(col): _*).distinct())
+        (frames.get(t.name), delKeys) match {
+          case (None, None) =>
+            Set.empty // untouched: every bucket pointer carries forward
+          case (Some(df), _) if base.isEmpty =>
+            if (!StateStore.provablyNoRows(df)) stage(df.withColumn("pt", keyBucket))
+            Set.empty
+          case (dfOpt, del) =>
+            // the delta frame feeds TWO actions — the bucket election and
+            // the merged staging write. Lazy re-derivation measured
+            // cheaper than an EAGER localCheckpoint (1.74 s vs 2.21 s on
+            // q_token_incremental: the checkpoint's blocking block write
+            // costs more than a second derivation); a plain lazy persist
+            // gets the single derivation WITHOUT the blocking write —
+            // the election job populates the cache, the staging
+            // write reads it, and it is released right after staging. The
+            // cache is O(delta rows) by the incremental-write contract.
+            val cached = dfOpt.filterNot(StateStore.provablyNoRows)
+              .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+            // every key this commit touches: the delta's keys (upserts —
+            // stored rows of these keys are replaced) plus the retracted
+            // keys (deletes — stored rows of these keys vanish)
+            val touchedKeys = (cached
+              .map(_.select(t.bucketCols.map(col): _*).distinct()).toSeq ++ del.toSeq)
+              .reduceOption(_.unionByName(_)).map(_.distinct())
+            // touched buckets — a bounded driver collect (at most `buckets`
+            // ints), the same shape as StateStore's touched-bucket
+            // election. Computed from the PRE-distinct key projections at
+            // the RDD layer: buckets of keys == buckets
+            // of distinct keys, each branch is then a pure projection, and
+            // the RDD distinct+collect is ONE two-stage job — the SQL
+            // distinct form paid several AQE stage-jobs of scheduling
+            // latency for the same bounded answer (the
+            // StateStore.collectBucketsTagged rationale).
+            val electionFrames = cached.toSeq ++ del.toSeq
+            val touched: Set[Int] = electionFrames
+              .map(_.select(keyBucket.as("pt")).rdd.map(_.getInt(0)))
+              .reduceOption(_ union _)
+              .map(_.distinct(numPartitions = 2).collect().toSet)
+              .getOrElse(Set.empty)
+            try if (touched.nonEmpty) {
+              // read-modify-write ONLY the touched buckets: stored rows
+              // lose to delta/delete rows on key equality, then the delta
+              // rows re-enter (so a key in both survives with the delta's
+              // rows — delete-then-reinsert). A bucket every row left
+              // simply writes nothing, and its pointer drops.
+              val oldPaths = base.get.pointers.getOrElse(t.name, Map.empty[Int, Long])
+                .filter { case (pt, _) => touched(pt) }
+                .map { case (pt, v) =>
+                  s"${StateStore.tableDataDir(statePath, base.get.dirs, v, t.name)}/pt=$pt"
+                }.toSeq
+              val old = StateStore.readPaths(spark, base.get.schemaOf(t.name), oldPaths)
+              // null-SAFE key equality (<=>): a plain usingColumns anti-join
+              // never matches NULL keys, so a stored null-key row could
+              // neither be replaced nor retracted — redelivery would
+              // duplicate it and a tombstone would silently no-op while the
+              // commit reports success. distinct() upstream
+              // already treats nulls as equal, so <=> is the consistent leg.
+              val tk = touchedKeys.get
+              val kept = old.join(tk,
+                t.bucketCols.map(c => old(c) <=> tk(c)).reduce(_ && _), "left_anti")
+              stage(cached.fold(kept)(kept.unionByName(_, allowMissingColumns = true))
+                .withColumn("pt", keyBucket)
+                .filter(col("pt").isin(touched.toSeq: _*)))
+            } finally cached.foreach(_.unpersist(blocking = false))
+            touched
+        }
       }
-    }
-    def provablyNoRows(df: DataFrame): Boolean = df.rdd.getNumPartitions == 0
-
-    // Each table's staging is independent (own staging subdir, own
-    // election, own observed stats) and the commit below only runs after
-    // EVERY table completes — so multi-table versions stage their tables
-    // CONCURRENTLY (guide §2.6: overlap independent jobs so the next
-    // action's tasks back-fill the scheduler latency and task tail of the
-    // current one). The pool is created per call, so its threads inherit
-    // this caller's thread-local job group/description; single-table
-    // writes skip the pool entirely.
-    def stageTable(t: Spec): (String, Map[Int, Long]) = {
-      val keyBucket = StateStore.bucket(t.bucketCols, cfg.buckets)
-      val inherited = prev.map(_.pointers.getOrElse(t.name, Map.empty[Int, Long]))
-        .getOrElse(Map.empty)
-      // retracted key tuples, reduced to the key columns (a frame with
-      // extra columns is fine — only the key participates)
-      val delKeys: Option[DataFrame] = deletes.get(t.name)
-        .filterNot(provablyNoRows)
-        .map(_.select(t.bucketCols.map(col): _*).distinct())
-      t.name -> ((frames.get(t.name), delKeys) match {
-        case (None, None) =>
-          inherited // untouched: every bucket pointer carries forward
-        case (Some(df), _) if !incremental =>
-          if (provablyNoRows(df)) Map.empty[Int, Long]
-          else writeDir(df.withColumn("pt", keyBucket), t.name)
-            .map(_ -> version).toMap
-        case (dfOpt, del) =>
-          // the delta frame feeds TWO actions — the bucket election and
-          // the merged staging write. r13 measured lazy re-derivation
-          // cheaper than an EAGER localCheckpoint (1.74 s vs 2.21 s on
-          // q_token_incremental: the checkpoint's blocking block write
-          // costs more than a second derivation); r14 gets the single
-          // derivation WITHOUT the blocking write with a plain lazy
-          // persist — the election job populates the cache, the staging
-          // write reads it, and it is released right after staging. The
-          // cache is O(delta rows) by the incremental-write contract.
-          val cached = dfOpt.filterNot(provablyNoRows)
-            .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-          // every key this commit touches: the delta's keys (upserts —
-          // stored rows of these keys are replaced) plus the retracted
-          // keys (deletes — stored rows of these keys vanish)
-          val touchedKeys = (cached
-            .map(_.select(t.bucketCols.map(col): _*).distinct()).toSeq ++ del.toSeq)
-            .reduceOption(_.unionByName(_)).map(_.distinct())
-          // touched buckets — a bounded driver collect (at most `buckets`
-          // ints), the same shape as StateStore's touched-bucket
-          // election. Computed from the PRE-distinct key projections at
-          // the RDD layer (r13 optimization): buckets of keys == buckets
-          // of distinct keys, each branch is then a pure projection, and
-          // the RDD distinct+collect is ONE two-stage job — the SQL
-          // distinct form paid several AQE stage-jobs of scheduling
-          // latency for the same bounded answer (the
-          // StateStore.collectBucketsTagged rationale).
-          val electionFrames = cached.toSeq ++ del.toSeq
-          val touched: Set[Int] = electionFrames
-            .map(_.select(keyBucket.as("pt")).rdd.map(_.getInt(0)))
-            .reduceOption(_ union _)
-            .map(_.distinct(numPartitions = 2).collect().toSet)
-            .getOrElse(Set.empty)
-          try if (touched.isEmpty) inherited
-          else {
-            // read-modify-write ONLY the touched buckets: stored rows
-            // lose to delta/delete rows on key equality, then the delta
-            // rows re-enter (so a key in both survives with the delta's
-            // rows — delete-then-reinsert)
-            val oldPaths = inherited
-              .filter { case (pt, _) => touched(pt) }
-              .map { case (pt, v) =>
-                s"${StateStore.tableDataDir(statePath, prev.get.dirs, v, t.name)}/pt=$pt"
-              }.toSeq
-            val old = StateStore.readPaths(spark, prev.get.schemaOf(t.name), oldPaths)
-            // null-SAFE key equality (<=>): a plain usingColumns anti-join
-            // never matches NULL keys, so a stored null-key row could
-            // neither be replaced nor retracted — redelivery would
-            // duplicate it and a tombstone would silently no-op while the
-            // commit reports success (ADVICE r9). distinct() upstream
-            // already treats nulls as equal, so <=> is the consistent leg.
-            val tk = touchedKeys.get
-            val kept = old.join(tk,
-              t.bucketCols.map(c => old(c) <=> tk(c)).reduce(_ && _), "left_anti")
-            val merged = cached.fold(kept)(kept.unionByName(_, allowMissingColumns = true))
-              .withColumn("pt", keyBucket)
-              .filter(col("pt").isin(touched.toSeq: _*))
-            val written = writeDir(merged, t.name)
-            // a bucket every row left simply writes nothing: its pointer
-            // drops here rather than pointing at an empty dir
-            (inherited -- touched) ++ written.map(_ -> version).toMap
-          } finally cached.foreach(_.unpersist(blocking = false))
-      })
-    }
-    val pointers: Pointers =
-      if (specs.size == 1) Map(stageTable(specs.head))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(specs.size, 4))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.traverse(specs)(t =>
-            scala.concurrent.Future(stageTable(t))),
-          scala.concurrent.duration.Duration.Inf).toMap
-        finally pool.shutdown()
-      }
-
-    val refVers = pointers.valuesIterator.flatMap(_.valuesIterator).toSet
-    val dirs: Map[Long, String] =
-      prev.map(_.dirs).getOrElse(Map.empty).filter { case (v, _) => refVers(v) } ++
-        (if (refVers(version)) Map(version -> s"d-$token") else Map.empty)
-    StateStore.commit(spark, statePath, version, cfg, pointers, prevVersion,
-      Some(staging), schemas, dirs, dirName = s"d-$token",
-      // record each table's key columns: the manifest alone then fully
-      // describes this store to the DSv2/catalog read path
-      keys = specs.map(t => t.name -> t.bucketCols).toMap,
-      sigs = stagedStats.view.mapValues(_.map { case (pt, (s, _)) => pt -> s }).toMap)
-    stagedStats.toMap
+      (schemas, specs.map(t => t.name -> stageTable(t)))
+    }._2
   }
 
   /** One table at `version`, resolved through its manifest pointers and

@@ -2,6 +2,8 @@ package graft.temporal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
+import scala.concurrent.duration.Duration
 
 /** Distributed exact selection (k-th smallest) over a LONG column — the
   * scale path for percentiles over FEW HUGE groups, where the per-group
@@ -42,18 +44,8 @@ object Selection {
     */
   def kthSmallestBy(df: DataFrame, valueCol: String, ksOf: Long => Seq[Long],
       nBuckets: Int = 4096, directLimit: Long = 65536): (Long, Seq[Long]) = {
-    // once ranks diverge into different cells, each cell's sub-search is
-    // an independent range scan — overlap them (guide §2.6; the
-    // Synth.snap / store-staging pool pattern). Cached pool: the fan-out
-    // recursion blocks inside pool threads, so a bounded pool could
-    // deadlock; width is bounded by |ks| cells per level. Threads
-    // inherit the caller's job group/description thread-locals.
-    val pool = java.util.concurrent.Executors.newCachedThreadPool()
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val v = col(valueCol)
     val base = df.select(v.as("v")).where(v.isNotNull)
-    try {
     val head = base.agg(min(col("v")), max(col("v")), count(lit(1))).head()
     val n = head.getLong(2)
     // empty (or all-NULL) input: no rank exists — callers get (0, empty)
@@ -67,24 +59,27 @@ object Selection {
     require(hi0 - lo0 >= 0,
       s"value range [$lo0, $hi0] exceeds 2^63 — shift/scale the column first")
 
-    // ranks carry their position in `ks` so the fan-out can return values
-    // positionally whatever order the cells resolve in
-    def rec(lo: Long, hi: Long, ranks: Seq[(Long, Int)], cnt: Long): Seq[(Int, Long)] =
-      if (lo == hi) {
+    // One search step over a candidate cell [lo, hi] holding `cnt` rows:
+    // either resolves its ranks (Left) or narrows them into sub-cells
+    // (Right). Ranks carry their position in `ks` so the cells can
+    // resolve in any order and still return values positionally.
+    def step(c: Cell): Either[Seq[(Int, Long)], Seq[Cell]] =
+      if (c.lo == c.hi) {
         // a single-value range answers every rank with no job at all — a
         // hot value owning billions of rows must NOT fall through to the
         // TakeOrdered (whose driver collect is bounded by directLimit,
         // not by a duplicate-heavy cell's count)
-        ranks.map { case (_, i) => i -> lo }
-      } else if (cnt <= directLimit) {
+        Left(c.ranks.map { case (_, i) => i -> c.lo })
+      } else if (c.cnt <= directLimit) {
         // small candidate set: ONE TakeOrdered up to the largest wanted
         // rank serves every rank in the range (limit is driver-bounded by
         // directLimit; the plan is a top-k, never a sort of the full frame)
-        val maxK = ranks.map(_._1).max
-        val vals = base.where(col("v").between(lo, hi)).orderBy(col("v"))
+        val maxK = c.ranks.map(_._1).max
+        val vals = base.where(col("v").between(c.lo, c.hi)).orderBy(col("v"))
           .limit(maxK.toInt).collect().map(_.getLong(0))
-        ranks.map { case (k, i) => i -> vals(k.toInt - 1) }
+        Left(c.ranks.map { case (k, i) => i -> vals(k.toInt - 1) })
       } else {
+        val (lo, hi) = (c.lo, c.hi)
         // ceil division keeps bucket count <= nBuckets over any range
         val width = math.max(1L, (hi - lo) / nBuckets + 1)
         // integral `div`, NOT `/`: Spark's `/` on longs is DOUBLE division,
@@ -98,7 +93,7 @@ object Selection {
         // prefix(j) = rows in buckets before hist(j); rank k lives in the
         // first bucket with prefix < k <= prefix + count
         val prefix = hist.scanLeft(0L)(_ + _._2)
-        val grouped = ranks.groupBy { case (k, _) =>
+        val grouped = c.ranks.groupBy { case (k, _) =>
           val j = prefix.search(k) match {
             case scala.collection.Searching.Found(idx) => idx - 1
             case scala.collection.Searching.InsertionPoint(idx) => idx - 1
@@ -107,9 +102,8 @@ object Selection {
             "histogram counts did not cover rank — concurrent mutation?")
           j
         }
-        val parts = grouped.toSeq.map { case (j, rs) =>
-          val (b, c) = hist(j)
-          val inCell = rs.map { case (k, i) => (k - prefix(j), i) }
+        Right(grouped.toSeq.map { case (j, rs) =>
+          val (b, cnt) = hist(j)
           // the top cell's raw upper bound lo + (b+1)*width - 1 can exceed
           // Long.MaxValue when the range is near 2^63 (width is ceil'd, so
           // (b+1)*width overshoots hi-lo by up to nBuckets) — exact
@@ -117,18 +111,42 @@ object Selection {
           val cellHi = try {
             math.min(hi, Math.addExact(lo, Math.multiplyExact(b + 1, width) - 1))
           } catch { case _: ArithmeticException => hi }
-          () => rec(lo + b * width, cellHi, inCell, c)
-        }
-        if (parts.sizeIs == 1) parts.head()
-        else {
-          import scala.concurrent.{Await, Future, duration}
-          Await.result(Future.traverse(parts)(p => Future(p())),
-            duration.Duration.Inf).flatten
-        }
+          Cell(lo + b * width, cellHi, rs.map { case (k, i) => (k - prefix(j), i) }, cnt)
+        })
       }
 
-    val resolved = rec(lo0, hi0, ks.zipWithIndex, n).sortBy(_._1).map(_._2)
-    (n, resolved)
+    // Level by level: every cell the ranks diverged into at one level is
+    // an independent range scan, so a level's cells overlap
+    // on a pool of at most MaxConcurrentCells threads — a long rank list
+    // queues its cells instead of starting a thread each. The steps never
+    // wait on each other (only this thread awaits a level), so the fixed
+    // pool cannot deadlock however deep the search goes. The pool's
+    // threads inherit the caller's job group/description thread-locals.
+    var frontier = Seq(Cell(lo0, hi0, ks.zipWithIndex, n))
+    val resolved = Seq.newBuilder[(Int, Long)]
+    // a fixed pool starts its threads on first use: a search that never
+    // diverges starts none
+    implicit val pool: ExecutionContextExecutorService =
+      ExecutionContext.fromExecutorService(
+        java.util.concurrent.Executors.newFixedThreadPool(MaxConcurrentCells))
+    try {
+      while (frontier.nonEmpty) {
+        val results =
+          if (frontier.sizeIs == 1) frontier.map(step)
+          else Await.result(Future.traverse(frontier)(c => Future(step(c))), Duration.Inf)
+        val (done, next) = results.partitionMap(identity)
+        resolved ++= done.flatten
+        frontier = next.flatten
+      }
     } finally pool.shutdown()
+    (n, resolved.result().sortBy(_._1).map(_._2))
   }
+
+  /** A candidate value range [lo, hi] of `cnt` rows and the ranks, relative
+    * to the cell, it must still resolve (each with its position in `ks`).
+    */
+  private final case class Cell(lo: Long, hi: Long, ranks: Seq[(Long, Int)], cnt: Long)
+
+  /** Upper bound on the cells one call scans concurrently. */
+  private val MaxConcurrentCells = 4
 }

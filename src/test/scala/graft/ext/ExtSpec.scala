@@ -554,6 +554,24 @@ class ExtSpec extends AnyFunSuite with SparkSpec with Matchers {
     keys.distinct.length shouldBe keys.length
   }
 
+  test("source_overlap: a 64th source fails loudly; a NULL source takes no bit") {
+    import spark.implicits._
+    def docsDir(sources: Seq[String]): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft_overlap").toString
+      sources.zipWithIndex.map { case (s, i) => (i.toLong, s, s"doc $i text") }
+        .toDF("doc_id", "source", "text")
+        .write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    val ex = intercept[IllegalArgumentException] {
+      ExtQueries.q_source_overlap.fn(spark, docsDir((0 until 64).map(i => f"s$i%02d")))
+    }
+    ex.getMessage should include("supports <=63 sources")
+    // 63 named sources plus NULL still fit: NULL never pairs
+    noException should be thrownBy
+      ExtQueries.q_source_overlap.fn(spark, docsDir((0 until 63).map(i => f"s$i%02d") :+ null))
+  }
+
   test("mix_epochs: full epochs for every doc, at most one partial epoch") {
     val rows = ExtQueries.q_mix_epochs.fn(spark, sf).collect()
       .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("source"),

@@ -80,6 +80,28 @@ class SelectionSpec extends AnyFunSuite with SparkSpec with Matchers {
     check(values, ks, nBuckets = 16, directLimit = 8)
   }
 
+  test("a long rank list stays exact and scans at most 4 cells at once") {
+    // 48 ranks diverge into their own cells within two levels and stay
+    // apart for several more: each level's cells are scanned on a bounded
+    // pool, not one thread per cell. Concurrent jobs are sampled from the
+    // status tracker (a lagging view, so never above the true peak).
+    val rnd = new scala.util.Random(11)
+    val values = Seq.fill(6000)(rnd.nextLong() % 1000000000L)
+    val ks = (1 to 48).map(i => i * 125L - 60L)
+    val tracker = spark.sparkContext.statusTracker
+    @volatile var running = true
+    @volatile var peak = 0
+    val sampler = new Thread(() =>
+      while (running) {
+        peak = math.max(peak, tracker.getActiveJobIds().length)
+        Thread.sleep(2)
+      })
+    sampler.start()
+    try check(values, ks, nBuckets = 4, directLimit = 16)
+    finally { running = false; sampler.join() }
+    peak should be <= 4
+  }
+
   test("out-of-range rank throws") {
     val df = (1L to 10L).toDF("v")
     an[IllegalArgumentException] should be thrownBy
