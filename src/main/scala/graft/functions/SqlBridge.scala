@@ -1,12 +1,16 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.{Cross, Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.logical._
 
 /** Minimal bridge into the `private[sql]` Column↔Expression converters —
   * the standard pattern public Spark extension libraries use to wrap a
   * custom Catalyst `Expression` as a `Column` without registering it in a
   * session's function registry (which would break callers that build their
-  * own SparkSession). Nothing else from the private surface is exposed.
+  * own SparkSession), plus two plan-level helpers that need the
+  * `private[sql]` Dataset-from-plan constructor. Nothing else from the
+  * private surface is exposed.
   */
 object GraftSql {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -52,5 +56,41 @@ object GraftSql {
           lr.copy()(session, Some(stats), Some(lr.constraints)))
       case _ => ck
     }
+  }
+
+  /** Whether `df` provably holds no row, decided WITHOUT running a shuffle.
+    * A sub-plan with no exchange answers by its partition count: a
+    * zero-partition RDD (an empty-state placeholder, an empty ChangeSet)
+    * cannot hold a row, and asking costs no job. Under adaptive execution,
+    * asking a frame WITH an exchange for its partitions runs that
+    * exchange's shuffle as a job of its own, so above an exchange the walk
+    * asks the operator's inputs instead, through operators that emit
+    * nothing from empty inputs. Anything else answers "maybe rows".
+    */
+  def provablyNoRows(df: DataFrame): Boolean = {
+    val session = df.sparkSession.asInstanceOf[classic.SparkSession]
+    def noRows(p: LogicalPlan): Boolean = {
+      val sub = classic.Dataset.ofRows(session, p)
+      val physical = sub.queryExecution.executedPlan match {
+        case a: execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+        case other => other
+      }
+      if (!physical.exists(_.isInstanceOf[execution.exchange.Exchange]))
+        sub.rdd.getNumPartitions == 0
+      else p match {
+        case u @ (_: RepartitionOperation | _: Project | _: Filter | _: Sort |
+            _: Distinct | _: Deduplicate | _: SubqueryAlias) => noRows(u.children.head)
+        case a: Aggregate if a.groupingExpressions.nonEmpty => noRows(a.child)
+        case u: Union => u.children.forall(noRows)
+        case j: Join => j.joinType match {
+          case Inner | Cross | LeftSemi => noRows(j.left) || noRows(j.right)
+          case LeftOuter | LeftAnti => noRows(j.left)
+          case RightOuter => noRows(j.right)
+          case _ => noRows(j.left) && noRows(j.right) // full outer
+        }
+        case _ => false
+      }
+    }
+    noRows(df.queryExecution.analyzed)
   }
 }

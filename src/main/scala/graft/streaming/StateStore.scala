@@ -145,6 +145,16 @@ object StateStore {
   private[streaming] def bucket(keys: Seq[String], buckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(buckets))
 
+  /** Rows whose `pt` bucket is one of `buckets` — the touched-bucket
+    * filter of an incremental write. The set rides as ONE array literal,
+    * which generated code reads through a reference instead of inlining
+    * (an `isin` list is inlined value by value, or as an `InSet` switch),
+    * so the staging write compiles to the same classes whichever buckets
+    * a trigger touches, and a warm trigger finds them in the codegen cache.
+    */
+  private[streaming] def inBuckets(buckets: Set[Int]): Column =
+    array_contains(typedLit(buckets.toSeq.sorted), col("pt"))
+
   // --- manifest ------------------------------------------------------------
 
   /** table -> bucket -> version holding that bucket's files */
@@ -558,7 +568,7 @@ object StateStore {
         val df = tableOf(st, t.name).withColumn("pt", bucket(t.bucketCols, cfg.buckets))
         if (full) { if (!provablyNoRows(df)) stage(df) }
         else if (touched(t.name).nonEmpty)
-          stage(df.filter(col("pt").isin(touched(t.name).toSeq: _*)))
+          stage(df.filter(inBuckets(touched(t.name))))
         touched(t.name)
       }
 
@@ -582,7 +592,7 @@ object StateStore {
           val changedKeys = changes.get.parentOf.select(col("child_id"), col("parent_id"))
           stage(old.unionByName(changedKeys).distinct()
             .withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets))
-            .filter(col("pt").isin(tb.toSeq: _*)))
+            .filter(inBuckets(tb)))
         }
         tb
       }
@@ -593,12 +603,13 @@ object StateStore {
     * ChangeSet) can't hold a row; skipping its write job is free and makes
     * a sparse write (one populated table of several) cost one table's
     * I/O. Checked on partition COUNT, not a scan — a big table never pays
-    * for the probe. Only for frames without an exchange: under adaptive
+    * for the probe. A frame with an exchange is probed below it
+    * ([[org.apache.spark.sql.GraftSql.provablyNoRows]]): under adaptive
     * execution, asking for the partitions of a shuffled frame runs its
     * shuffle.
     */
   private[streaming] def provablyNoRows(df: DataFrame): Boolean =
-    df.rdd.getNumPartitions == 0
+    org.apache.spark.sql.GraftSql.provablyNoRows(df)
 
   /** One table's share of a version, run on the staging pool. It calls
     * `stage` at most once with the rows of the buckets it rewrites (a

@@ -199,7 +199,7 @@ object TableStore {
                 t.bucketCols.map(c => old(c) <=> tk(c)).reduce(_ && _), "left_anti")
               stage(cached.fold(kept)(kept.unionByName(_, allowMissingColumns = true))
                 .withColumn("pt", keyBucket)
-                .filter(col("pt").isin(touched.toSeq: _*)))
+                .filter(StateStore.inBuckets(touched)))
             } finally cached.foreach(_.unpersist(blocking = false))
             touched
         }

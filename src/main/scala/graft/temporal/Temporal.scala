@@ -3,6 +3,7 @@ package graft.temporal
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 /** Temporal / ordering operators (SURVEY.md §2.D). */
 object Temporal {
@@ -109,9 +110,15 @@ object Temporal {
     val (lo, hi) = (head.getLong(0), head.getLong(1))
     if (head.getLong(2) == 0L) return df.withColumn("__epoch", lit(1))
 
-    // two-level global prefix: r(o) = #refreshes at offsets < o
+    // two-level global prefix: r(o) = #refreshes at offsets < o. `lo` and
+    // the width differ from batch to batch; as long literals they would be
+    // inlined into generated code and make every batch compile its own
+    // classes, so they ride as decimal literals, which the code reads by
+    // reference (same range ids as long arithmetic)
     val width = math.max(1L, (hi - lo) / 4096L + 1L)
-    val ranged = df.withColumn("__rg", ((col(seq) - lo) / width).cast("long"))
+    def byRef(v: Long): Column = lit(java.math.BigDecimal.valueOf(v)).cast(DecimalType(20, 0))
+    val ranged = df.withColumn("__rg",
+      ((col(seq).cast(DecimalType(20, 0)) - byRef(lo)) / byRef(width)).cast("long"))
     val perRange = ranged.groupBy(col("__rg"))
       .agg(sum(when(!col(isNil), 1L).otherwise(0L)).as("n"))
       .orderBy(col("__rg")).collect() // <= 4097 rows by construction

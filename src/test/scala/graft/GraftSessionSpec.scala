@@ -17,4 +17,20 @@ class GraftSessionSpec extends AnyFunSuite with SparkSpec with Matchers {
     spark.conf.get("spark.sql.adaptive.skewJoin.enabled") shouldBe "true"
     spark.conf.get("spark.sql.parquet.filterPushdown") shouldBe "true"
   }
+
+  test("the generated-class cache is pinned above the fold's working set") {
+    import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, GenerateUnsafeProjection}
+    import org.apache.spark.sql.types.LongType
+    spark.conf.get("spark.sql.codegen.cache.maxEntries") shouldBe "1024"
+    // the size Spark really built its JVM-global cache with (the static
+    // conf is read once, at the JVM's first code generation): 150 distinct
+    // classes all stay cached, where Spark's default keeps at most 100
+    for (i <- 0 until 150)
+      GenerateUnsafeProjection.generate(Seq(Add(BoundReference(0, LongType, false), Literal(i.toLong))))
+    val cacheOf = CodeGenerator.getClass.getDeclaredMethod("cache")
+    cacheOf.setAccessible(true)
+    val cache = cacheOf.invoke(CodeGenerator)
+    cache.getClass.getMethod("size").invoke(cache).asInstanceOf[Long] should be >= 150L
+  }
 }
