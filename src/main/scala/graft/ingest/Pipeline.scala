@@ -66,13 +66,8 @@ object Pipeline {
     * non-tombstone events carrying per-event `proc_ts` + `offset`. The
     * batch may hold MANY events per key (one tombstone-free segment);
     * upsert inputs are aggregated per merge key, so state application
-    * stays one MERGE per table.
-    */
-  def refresh(st: State, batch: DataFrame, cfg: Config): State =
-    refreshTracked(st, batch, cfg)._1
-
-  /** [[refresh]], also returning the natural keys it upserts per table —
-    * the write-side input for partition-limited sink writes.
+    * stays one MERGE per table. Also returns the natural keys it upserts
+    * per table — the write-side input for partition-limited sink writes.
     */
   def refreshTracked(st: State, batch: DataFrame, cfg: Config): (State, ChangeSet) = {
     val b = batch.select(
@@ -151,13 +146,8 @@ object Pipeline {
   }
 
   /** Expire path (reference: main.go:270-364) for a batch of tombstones
-    * carrying per-event `proc_ts`.
-    */
-  def expire(st: State, tombstones: DataFrame): State =
-    expireTracked(st, tombstones).state
-
-  /** [[expire]], keeping the cascade's persisted intermediates for release
-    * once the resulting state is materialized.
+    * carrying per-event `proc_ts`, keeping the cascade's persisted
+    * intermediates for release once the resulting state is materialized.
     */
   def expireTracked(st: State, tombstones: DataFrame): GraphOps.Cascade = {
     val tb = tombstones.select(
@@ -180,34 +170,21 @@ object Pipeline {
   sealed trait EpochSide
   case object RefreshEpoch extends EpochSide
   case object TombstoneEpoch extends EpochSide
-  case object MixedEpoch extends EpochSide
 
-  /** Apply one epoch: refreshes first, then the expire cascade over the
-    * post-refresh state. (Segment epochs are refresh-only or
-    * tombstone-only, but mixed batches — e.g. a whole micro-batch with no
-    * per-key conflicts — work too with `MixedEpoch`.)
-    */
-  def applyEpoch(st: State, epoch: DataFrame, cfg: Config): State =
-    applyEpochTracked(st, epoch, cfg).state
-
-  /** [[applyEpoch]] returning the cascade's persisted intermediates (the
-    * caller releases them after checkpointing the state) plus the combined
-    * refresh+cascade change set. `side` skips the provably-empty half —
-    * the `is_nil` filters stay in place either way, so a mislabeled side
-    * drops the other half's rows rather than mis-applying them (and the
-    * differential replay/golden-state suites would catch it).
+  /** Apply one single-sided epoch, returning the cascade's persisted
+    * intermediates (the caller releases them after checkpointing the
+    * state) plus the epoch's change set. `side` skips the provably-empty
+    * half — the `is_nil` filters stay in place either way, so a mislabeled
+    * side drops the other half's rows rather than mis-applying them (and
+    * the differential replay/golden-state suites would catch it).
     */
   def applyEpochTracked(st: State, epoch: DataFrame, cfg: Config,
-      side: EpochSide = MixedEpoch): GraphOps.Cascade = side match {
+      side: EpochSide): GraphOps.Cascade = side match {
     case RefreshEpoch =>
       val (refreshed, refreshChanges) = refreshTracked(st, epoch.filter(!col("is_nil")), cfg)
       GraphOps.Cascade(refreshed, refreshChanges, cached = Nil)
     case TombstoneEpoch =>
       expireTracked(st, epoch.filter(col("is_nil")))
-    case MixedEpoch =>
-      val (refreshed, refreshChanges) = refreshTracked(st, epoch.filter(!col("is_nil")), cfg)
-      val casc = expireTracked(refreshed, epoch.filter(col("is_nil")))
-      casc.copy(changes = refreshChanges.union(casc.changes))
   }
 
   /** C6 duplicate-key guard (reference hard-errors on >1 lookup match,
@@ -324,20 +301,11 @@ object Pipeline {
   /** [[fold]], also returning the union of every epoch's changed natural
     * keys — the contract the partition-limited state sink needs. The
     * change frames are eagerly checkpointed (they are batch-key sized), so
-    * they stay valid after the per-epoch caches are released.
-    */
-  def foldWithChanges(
-      spark: SparkSession,
-      st0: State,
-      envelopes: DataFrame,
-      cfg: Config,
-      baseEpochSecs: Long): (State, ChangeSet) =
-    foldImpl(spark, _ => st0, envelopes, cfg, baseEpochSecs, trackChanges = true)
-
-  /** [[foldWithChanges]] with the base state SUPPLIED from the batch's
-    * candidate keys — the bucket-pruned streaming path: the supplier
-    * (typically `StateStore.readPartialLatest`) loads only the state
-    * buckets the batch can touch, so per-epoch merge + checkpoint cost is
+    * they stay valid after the per-epoch caches are released. The base
+    * state is SUPPLIED from the batch's candidate keys — the
+    * bucket-pruned streaming path: the supplier (typically
+    * `StateStore.readPartialLatest`) loads only the state buckets the
+    * batch can touch, so per-epoch merge + checkpoint cost is
     * O(loaded buckets) ~ O(batch), not O(state). The candidate frames are
     * lazy plans over the (persisted) decoded batch; a supplier that
     * ignores them costs nothing.

@@ -645,18 +645,10 @@ object CoreQueries {
         val c = GraphOps.expireCascadeTracked(st,
           Synth.tombstones(s, dir).withColumn("ts", now))
         // the two result checkpoints are independent scans of the cascade's
-        // persisted intermediates — overlap them (guide §2.6, the
-        // Synth.snap / store-staging pool pattern)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val out = try {
-          val fa = scala.concurrent.Future(c.state.assets.localCheckpoint(true))
-          val fp = scala.concurrent.Future(c.state.parentOf.localCheckpoint(true))
-          import scala.concurrent.{Await, duration}
-          CascadeStored(Await.result(fa, duration.Duration.Inf),
-            Await.result(fp, duration.Duration.Inf))
-        } finally pool.shutdown()
+        // persisted intermediates — overlap them
+        val ck = graft.exec.all(s)(
+          Seq(c.state.assets, c.state.parentOf).map(df => () => df.localCheckpoint(true)))
+        val out = CascadeStored(ck(0), ck(1))
         c.cached.foreach(_.unpersist())
         out
       }

@@ -89,50 +89,39 @@ object Synth {
 
   private def snap(spark: SparkSession, dir: String): Snap =
     snapCache.getOrBuild(spark, dir) { graft.Materialize.timed("synth_snapshot") {
-      // the five aggregates are independent full-scan jobs; checkpoint
-      // them CONCURRENTLY (guide §2.6 — the serialized chain paid five
-      // sequential scan latencies). Pool threads inherit the caller's
-      // job group/description thread-locals like the store staging pools
-      // (TableStore.write / StateStore.commit).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      def ck(df: => DataFrame): scala.concurrent.Future[DataFrame] =
-        scala.concurrent.Future(df.localCheckpoint(true))
-      try {
-        val assets = ck(Tables.events(spark, dir)
-          .groupBy((col("user_id") % 50).as("k"))
-          .agg(min("ts").as("first_seen"), max("ts").as("last_seen"))
-          .select(
-            concat(lit("a"), col("k").cast("string")).as("id"),
-            lit("T").as("type"),
-            concat(lit("a"), col("k").cast("string")).as("identifier"),
-            col("first_seen"), col("last_seen"),
-            lit(graft.schema.Schemas.Unexpired).as("expiration")))
-        val teams = ck(Tables.events(spark, dir)
-          .select(tId.as("id"), tId.as("identifier"))
-          .distinct())
-        val owns = ck(Tables.events(spark, dir)
-          .groupBy(tId.as("team_id"), aId.as("asset_id"))
-          .agg(min("ts").as("start_time"),
-            when(max("value") < 100, max("ts")).as("end_time")))
-        val parentOf = ck(Tables.events(spark, dir)
-          .filter(col("user_id") % 10 =!= col("user_id") % 50)
-          .groupBy(
-            concat(lit("a"), (col("user_id") % 10).cast("string")).as("parent_id"),
-            aId.as("child_id"))
-          .agg(min("ts").as("first_seen"), max("ts").as("last_seen"))
-          .withColumn("expiration", lit(graft.schema.Schemas.Unexpired)))
-        val tombstones = ck(Tables.events(spark, dir)
-          .filter(col("event_type") === "error")
-          .select(lit("T").as("asset_type"), aId.as("asset_identifier"),
-            tId.as("team_identifier"))
-          .distinct())
-        import scala.concurrent.{Await, duration}
-        def get(f: scala.concurrent.Future[DataFrame]): DataFrame =
-          Await.result(f, duration.Duration.Inf)
-        Snap(get(assets), get(teams), get(owns), get(parentOf), get(tombstones))
-      } finally pool.shutdown()
+      // the five aggregates are independent full-scan jobs: checkpoint them
+      // CONCURRENTLY (serialized, they paid five scan latencies)
+      val assets = Tables.events(spark, dir)
+        .groupBy((col("user_id") % 50).as("k"))
+        .agg(min("ts").as("first_seen"), max("ts").as("last_seen"))
+        .select(
+          concat(lit("a"), col("k").cast("string")).as("id"),
+          lit("T").as("type"),
+          concat(lit("a"), col("k").cast("string")).as("identifier"),
+          col("first_seen"), col("last_seen"),
+          lit(graft.schema.Schemas.Unexpired).as("expiration"))
+      val teams = Tables.events(spark, dir)
+        .select(tId.as("id"), tId.as("identifier"))
+        .distinct()
+      val owns = Tables.events(spark, dir)
+        .groupBy(tId.as("team_id"), aId.as("asset_id"))
+        .agg(min("ts").as("start_time"),
+          when(max("value") < 100, max("ts")).as("end_time"))
+      val parentOf = Tables.events(spark, dir)
+        .filter(col("user_id") % 10 =!= col("user_id") % 50)
+        .groupBy(
+          concat(lit("a"), (col("user_id") % 10).cast("string")).as("parent_id"),
+          aId.as("child_id"))
+        .agg(min("ts").as("first_seen"), max("ts").as("last_seen"))
+        .withColumn("expiration", lit(graft.schema.Schemas.Unexpired))
+      val tombstones = Tables.events(spark, dir)
+        .filter(col("event_type") === "error")
+        .select(lit("T").as("asset_type"), aId.as("asset_identifier"),
+          tId.as("team_identifier"))
+        .distinct()
+      val ck = graft.exec.all(spark)(
+        Seq(assets, teams, owns, parentOf, tombstones).map(df => () => df.localCheckpoint(true)))
+      Snap(ck(0), ck(1), ck(2), ck(3), ck(4))
     }}
 
   def assets(spark: SparkSession, dir: String): DataFrame = snap(spark, dir).assets

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, Str
 import graft.graph.GraphOps.State
 import graft.schema.Schemas
 import graft.state.ChangeSet
+import scala.util.control.NonFatal
 
 /** Versioned, hash-partitioned snapshot store for the four graph tables —
   * the streaming sink's answer to write amplification (reference sink:
@@ -611,7 +612,7 @@ object StateStore {
   private[streaming] def provablyNoRows(df: DataFrame): Boolean =
     org.apache.spark.sql.GraftSql.provablyNoRows(df)
 
-  /** One table's share of a version, run on the staging pool. It calls
+  /** One table's share of a version, run through [[graft.exec.all]]. It calls
     * `stage` at most once with the rows of the buckets it rewrites (a
     * frame carrying the `pt` bucket column) and returns the buckets it
     * REWROTE against the base manifest; [[stageAndCommit]] points the
@@ -630,9 +631,9 @@ object StateStore {
     *  2. the checks an incremental write must pass against `base`: the
     *     same bucket modulus, and a schema that is additive over it;
     *  3. a writer-unique staging dir, into which the `plan`'s stagers —
-    *     run concurrently on ONE per-call pool (each staging is
-    *     independent, and the commit runs after all complete; the pool's
-    *     threads inherit the caller's job group/description) —
+    *     run concurrently through [[graft.exec.all]] (each staging is
+    *     independent, and the commit runs after all complete; a failed
+    *     staging cancels the others and the dir is deleted) —
     *     write their rows partitioned by `pt`;
     *  4. the per-bucket stats each staging write observes about itself
     *     (`graft.functions.BucketSig` as an `observe()` metric: content
@@ -734,17 +735,11 @@ object StateStore {
         written.getOrElse(name, Set.empty[Int]).map(_ -> version))
     }
     val pointers: Pointers =
-      if (stagers.sizeIs == 1) Map(run(stagers.head._1, stagers.head._2))
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(stagers.size, 5))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.traverse(stagers) { case (n, s) =>
-            scala.concurrent.Future(run(n, s)) },
-          scala.concurrent.duration.Duration.Inf).toMap
-        finally pool.shutdown()
+      try graft.exec.all(spark)(stagers.map { case (n, s) => () => run(n, s) }).toMap
+      catch { case t: Throwable =>
+        try fsFor(spark, statePath)._1.delete(new Path(staging), true)
+        catch { case NonFatal(e) => t.addSuppressed(e) }
+        throw t
       }
 
     // dir tokens for every version the pointers still reference: inherited

@@ -2,8 +2,6 @@ package graft.temporal
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import scala.concurrent.{Await, ExecutionContext, ExecutionContextExecutorService, Future}
-import scala.concurrent.duration.Duration
 
 /** Distributed exact selection (k-th smallest) over a LONG column — the
   * scale path for percentiles over FEW HUGE groups, where the per-group
@@ -115,30 +113,16 @@ object Selection {
         })
       }
 
-    // Level by level: every cell the ranks diverged into at one level is
-    // an independent range scan, so a level's cells overlap
-    // on a pool of at most MaxConcurrentCells threads — a long rank list
-    // queues its cells instead of starting a thread each. The steps never
-    // wait on each other (only this thread awaits a level), so the fixed
-    // pool cannot deadlock however deep the search goes. The pool's
-    // threads inherit the caller's job group/description thread-locals.
+    // Level by level: the cells the ranks diverged into at one level are
+    // independent range scans, overlapped through graft.exec's gate
     var frontier = Seq(Cell(lo0, hi0, ks.zipWithIndex, n))
     val resolved = Seq.newBuilder[(Int, Long)]
-    // a fixed pool starts its threads on first use: a search that never
-    // diverges starts none
-    implicit val pool: ExecutionContextExecutorService =
-      ExecutionContext.fromExecutorService(
-        java.util.concurrent.Executors.newFixedThreadPool(MaxConcurrentCells))
-    try {
-      while (frontier.nonEmpty) {
-        val results =
-          if (frontier.sizeIs == 1) frontier.map(step)
-          else Await.result(Future.traverse(frontier)(c => Future(step(c))), Duration.Inf)
-        val (done, next) = results.partitionMap(identity)
-        resolved ++= done.flatten
-        frontier = next.flatten
-      }
-    } finally pool.shutdown()
+    while (frontier.nonEmpty) {
+      val (done, next) = graft.exec.all(df.sparkSession)(frontier.map(c => () => step(c)))
+        .partitionMap(identity)
+      resolved ++= done.flatten
+      frontier = next.flatten
+    }
     (n, resolved.result().sortBy(_._1).map(_._2))
   }
 
@@ -146,7 +130,4 @@ object Selection {
     * to the cell, it must still resolve (each with its position in `ks`).
     */
   private final case class Cell(lo: Long, hi: Long, ranks: Seq[(Long, Int)], cnt: Long)
-
-  /** Upper bound on the cells one call scans concurrently. */
-  private val MaxConcurrentCells = 4
 }

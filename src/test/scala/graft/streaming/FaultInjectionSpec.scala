@@ -96,6 +96,32 @@ class FaultInjectionSpec extends AnyFunSuite with SparkSpec with Matchers
     checkRecovery(root)
   }
 
+  test("a failed table staging stops its sibling stagings and leaves no staging dir") {
+    val root = tmp(); seedV0(root)
+    // a full two-table v1: assets stage in one slow task (100 ms a row
+    // unless the job is cancelled); teams fail at their first file create,
+    // a second into their job, once the assets job is running
+    def slowly(ms: Long) = org.apache.spark.sql.functions.udf { (s: String) =>
+      graft.JobLog.nap(ms); s }.asNondeterministic()
+    val st = mkState(40, bumped)
+    val multi = st.copy(
+      assets = st.assets.coalesce(1).withColumn("identifier", slowly(100)($"identifier")),
+      teams = Seq(("t1", "t1", "team one")).toDF("id", "identifier", "name")
+        .withColumn("name", slowly(1000)($"name")))
+    FaultyFs.arm("create", "/teams/")
+    graft.JobLog.during(spark) { log =>
+      spark.sparkContext.setJobGroup("faulted-write", "faulted-write")
+      try intercept[Exception] { StateStore.write(spark, root, 1L, multi, changes = None, cfg) }
+      finally spark.sparkContext.clearJobGroup()
+      val staging = log.jobs.filter(_.group.contains("faulted-write"))
+      staging.size should be >= 2
+      all(staging.map(_.ended)) shouldBe true
+    }
+    new java.io.File(root.stripPrefix("faulty://")).list()
+      .filter(_.startsWith(".staging-v1")) shouldBe empty
+    checkRecovery(root)
+  }
+
   test("kill point: promote rename fails") {
     val root = tmp(); seedV0(root)
     // exclude task-attempt I/O: only the store's own promote rename of

@@ -82,9 +82,10 @@ class SelectionSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("a long rank list stays exact and scans at most 4 cells at once") {
     // 48 ranks diverge into their own cells within two levels and stay
-    // apart for several more: each level's cells are scanned on a bounded
-    // pool, not one thread per cell. Concurrent jobs are sampled from the
-    // status tracker (a lagging view, so never above the true peak).
+    // apart for several more: each level's cells are scanned through
+    // graft.exec's gate (4 wide in this local[4] session), not all at once.
+    // Concurrent jobs are sampled from the status tracker (a lagging view,
+    // so never above the true peak).
     val rnd = new scala.util.Random(11)
     val values = Seq.fill(6000)(rnd.nextLong() % 1000000000L)
     val ks = (1 to 48).map(i => i * 125L - 60L)
