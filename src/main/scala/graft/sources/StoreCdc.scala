@@ -4,11 +4,12 @@ import java.util
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -35,7 +36,11 @@ import graft.streaming.StateStore
   * version's WRITE I/O, not by state size. Each input partition diffs
   * ONE changed bucket (old multiset vs new, `exceptAll` semantics —
   * an update appears as its removed old row plus its added new row);
-  * a bucket fits a task by the store's own sizing contract. The base
+  * a bucket fits a task by the store's own sizing contract. Planning
+  * lists the bucket's old and new files on the driver; the task reads
+  * them through Spark's own parquet reader (the one `graft-store` uses,
+  * so the feed carries every column type a table can hold) and keeps
+  * only the diff. The base
   * version must still be committed — a pruned base fails loudly instead
   * of silently skipping changes (the changesSince retention contract).
   *
@@ -158,63 +163,67 @@ class StoreCdcStream(path: String, table: String, baseSchema: StructType,
   override def deserializeOffset(json: String): Offset =
     VersionOffset(json.trim.toLong)
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    def files(dir: Option[String]): FilePartition =
+      StoreTable.filePartition(0, dir.toSeq.flatMap(StoreTable.parquetFiles(_, conf)))
     StateStore.planCdc(spark, path, table,
         start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v,
         streamSchema = Some(baseSchema))
-      .map(s => StoreCdcPartition(s.version, s.oldDir, s.newDir,
-        baseSchema): InputPartition)
+      .map(s => StoreCdcPartition(s.version, files(s.oldDir), files(s.newDir)): InputPartition)
       .toArray
+  }
 
-  override def createReaderFactory(): PartitionReaderFactory = new StoreCdcReaderFactory
+  override def createReaderFactory(): PartitionReaderFactory = new StoreCdcReaderFactory(
+    StoreTable.readerFactory(baseSchema, baseSchema, Array.empty, None), baseSchema)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-case class StoreCdcPartition(version: Long, oldDir: Option[String],
-    newDir: Option[String], tableSchema: StructType) extends InputPartition
+/** One changed bucket of one version: its files before and after. */
+case class StoreCdcPartition(version: Long, oldFiles: FilePartition,
+    newFiles: FilePartition) extends InputPartition
 
-class StoreCdcReaderFactory extends PartitionReaderFactory {
+/** Diffs one changed bucket, reading both sides through `parquet` (Spark's
+  * parquet reader factory) in row mode.
+  */
+class StoreCdcReaderFactory(parquet: PartitionReaderFactory, schema: StructType)
+    extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[StoreCdcPartition]
-    new PartitionReader[InternalRow] {
-      private val added = UTF8String.fromString("added")
-      private val removed = UTF8String.fromString("removed")
+    def tagged(change: String): InternalRow =
+      new GenericInternalRow(Array[Any](UTF8String.fromString(change), p.version))
+    val (added, removed) = (tagged("added"), tagged("removed"))
+    // rows compare by their unsafe bytes, so any column type (maps and
+    // binary included) can key the multiset
+    val key = UnsafeProjection.create(schema)
+    def rows(r: PartitionReader[InternalRow]): Iterator[InternalRow] =
+      Iterator.continually(r).takeWhile(_.next()).map(_.get())
 
-      private def mkRow(vals: Array[Any], change: UTF8String): InternalRow =
-        new GenericInternalRow((vals :+ (change: Any)) :+ (p.version: Any))
-
-      // one changed bucket: old rows into a multiset, new rows matched off
-      // against it — leftovers on either side are the exceptAll diff
-      private val rows: Iterator[InternalRow] = {
-        val old = scala.collection.mutable.HashMap.empty[List[Any], (Array[Any], Int)]
-        p.oldDir.iterator.flatMap(StoreParquet.readDir(_, p.tableSchema)).foreach { r =>
-          val k = r.toList
-          old.updateWith(k) {
-            case Some((row, c)) => Some((row, c + 1))
-            case None => Some((r, 1))
-          }
-        }
-        val addedRows = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
-        p.newDir.iterator.flatMap(StoreParquet.readDir(_, p.tableSchema)).foreach { r =>
-          val k = r.toList
-          old.get(k) match {
-            case Some((_, c)) if c > 0 =>
-              if (c == 1) old.remove(k) else old(k) = (old(k)._1, c - 1)
-            case _ => addedRows += mkRow(r, added)
-          }
-        }
-        val removedRows = old.valuesIterator.flatMap { case (row, c) =>
-          Iterator.fill(c)(mkRow(row, removed))
-        }
-        addedRows.iterator ++ removedRows
+    // one changed bucket: old rows into a multiset, new rows matched off
+    // against it — leftovers on either side are the exceptAll diff
+    val old = scala.collection.mutable.HashMap.empty[UnsafeRow, Int]
+    val oldReader = parquet.createReader(p.oldFiles)
+    try rows(oldReader).foreach { r =>
+      val k = key(r).copy()
+      old(k) = old.getOrElse(k, 0) + 1
+    } finally oldReader.close()
+    val newReader = parquet.createReader(p.newFiles)
+    val out: Iterator[InternalRow] = rows(newReader).flatMap { r =>
+      val k = key(r)
+      old.get(k) match {
+        case Some(1) => old.remove(k); None
+        case Some(c) => old(k) = c - 1; None
+        case None => Some(new JoinedRow(k, added))
       }
+    } ++ old.iterator.flatMap { case (k, c) => Iterator.fill(c)(new JoinedRow(k, removed)) }
 
+    new PartitionReader[InternalRow] {
       private var current: InternalRow = _
-      override def next(): Boolean = { val h = rows.hasNext; if (h) current = rows.next(); h }
+      override def next(): Boolean = { val h = out.hasNext; if (h) current = out.next(); h }
       override def get(): InternalRow = current
-      override def close(): Unit = ()
+      override def close(): Unit = newReader.close()
     }
   }
 }

@@ -3,21 +3,23 @@ package graft.sources
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar}
+import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetReadSupport}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetPartitionReaderFactory
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-import scala.jdk.CollectionConverters._
+import org.apache.spark.util.SerializableConfiguration
 import graft.streaming.StateStore
 
 /** `graft-store` — the versioned snapshot store ([[StateStore]]) exposed
@@ -39,14 +41,17 @@ import graft.streaming.StateStore
   * face of [[StateStore.readPartialLatest]]'s O(batch) point-lookup
   * guarantee; Spark still applies the filter row-level post-scan (bucket
   * pruning is partition-level, a bucket holds other keys too). Column
-  * pruning ([[SupportsPushDownRequiredColumns]]) narrows the emitted rows;
-  * the store's tables are ≤ 6 slim columns, so the win is row width, not
-  * I/O — honest and documented.
+  * pruning ([[SupportsPushDownRequiredColumns]]) narrows the read to the
+  * requested parquet columns.
   *
-  * The reader walks bucket parquet files with parquet-mr's Group API (one
-  * input partition per file) and emits Spark's internal representation
-  * directly: UTF8String for STRING, epoch-micros for TIMESTAMP (both
-  * INT64 µs and legacy INT96 handled). At cluster scale the same plan
+  * The source only plans; Spark reads. Planning lists the kept bucket
+  * dirs once and hands each parquet file to Spark's own
+  * `ParquetPartitionReaderFactory` as one input partition, so every column
+  * type Spark's parquet reader knows reads here too (maps, structs,
+  * decimals, binary, dates, nested arrays), columnar batches feed
+  * whole-stage codegen, and files written under an older (subset) schema
+  * null-fill the columns added since. A bare COUNT(*) is answered by the
+  * same factory from parquet footers. At cluster scale the same plan
   * shape holds — partitions are files, pruning happens before any task
   * launches, and no executor ever lists the store.
   */
@@ -62,6 +67,44 @@ object StoreTable {
           "owns, parent_of — or any table the store's manifest records)"))
     val version = Option(options.get("version")).map(_.toLong)
     StateStore.planScan(SparkSession.active, path, table, version)
+  }
+
+  /** The parquet files of one bucket dir; an absent dir has none. */
+  private[sources] def parquetFiles(dir: String, conf: Configuration): Seq[FileStatus] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** Whole files as one input partition of Spark's file readers. */
+  private[sources] def filePartition(index: Int, files: Seq[FileStatus]): FilePartition =
+    FilePartition(index, files.map(s => PartitionedFile(InternalRow.empty,
+      SparkPath.fromFileStatus(s), 0L, s.getLen, Array.empty[String],
+      s.getModificationTime, s.getLen)).toArray)
+
+  /** Spark's parquet reader over store files of `dataSchema`, emitting
+    * `readSchema` (or, with `aggregation`, its footer-answered result).
+    * The hadoop conf carries what Spark's own parquet scan sets for its
+    * readers, taken from the session's SQL conf.
+    */
+  private[sources] def readerFactory(dataSchema: StructType, readSchema: StructType,
+      filters: Array[Filter], aggregation: Option[Aggregation]): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    val sqlConf = SQLConf.get
+    val hadoopConf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    hadoopConf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, readSchema.json)
+    Seq(SQLConf.SESSION_LOCAL_TIMEZONE, SQLConf.NESTED_SCHEMA_PRUNING_ENABLED,
+        SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
+        SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+        SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+        SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
+      .foreach(e => hadoopConf.set(e.key, String.valueOf(sqlConf.getConf(e))))
+    ParquetPartitionReaderFactory(sqlConf,
+      spark.sparkContext.broadcast(new SerializableConfiguration(hadoopConf)),
+      dataSchema, readSchema, new StructType(), filters, aggregation,
+      new ParquetOptions(Map.empty[String, String], sqlConf))
   }
 }
 
@@ -87,13 +130,12 @@ class StoreDsTable(options: CaseInsensitiveStringMap) extends Table with Support
 
 class StoreScanBuilder(plan: StateStore.ScanPlan) extends ScanBuilder
   with SupportsPushDownFilters with SupportsPushDownRequiredColumns
-  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
-  with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
+  with SupportsPushDownAggregates {
 
   private var required: StructType = plan.schema
   private var pushed: Array[Filter] = Array.empty
   private var bucketRestrict: Option[Set[Int]] = None
-  private var countPushed = false
+  private var countPushed: Option[Aggregation] = None
 
   /** Push a bare COUNT(*) (no grouping, no pushed row filters — a filter
     * would demand row-level evaluation) down to PARQUET FOOTER reads:
@@ -101,33 +143,19 @@ class StoreScanBuilder(plan: StateStore.ScanPlan) extends ScanBuilder
     * pages touched — how a row count over a 100 TB store should run.
     * Partial pushdown: each file emits its count, Spark sums.
     */
-  override def pushAggregation(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
+  override def pushAggregation(agg: Aggregation): Boolean = {
     val ok = agg.groupByExpressions.isEmpty && pushed.isEmpty &&
       agg.aggregateExpressions.length == 1 &&
-      agg.aggregateExpressions.head
-        .isInstanceOf[org.apache.spark.sql.connector.expressions.aggregate.CountStar]
+      agg.aggregateExpressions.head.isInstanceOf[CountStar]
     if (ok) {
-      countPushed = true
-      required = StructType(Seq(StructField("count", org.apache.spark.sql.types.LongType,
-        nullable = false)))
+      countPushed = Some(agg)
+      required = StructType(Seq(StructField("count(*)", LongType, nullable = false)))
     }
     ok
   }
 
-  override def supportCompletePushDown(
-      agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean =
+  override def supportCompletePushDown(agg: Aggregation): Boolean =
     false // per-file partial counts; Spark's final aggregation sums them
-
-  /** Partition-level LIMIT: each bucket reader stops after n rows, so a
-    * `LIMIT 10` peek at a huge store reads ~10 rows per file instead of
-    * every page. Partial by nature (isPartiallyPushed stays true — Spark
-    * applies the global limit on the capped partitions).
-    */
-  private var limitPushed: Option[Int] = None
-  override def pushLimit(limit: Int): Boolean = {
-    limitPushed = Some(limit); true
-  }
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val usable = filters.collect {
@@ -149,8 +177,8 @@ class StoreScanBuilder(plan: StateStore.ScanPlan) extends ScanBuilder
   }
 
   override def pushedFilters(): Array[Filter] = pushed
-  override def pruneColumns(s: StructType): Unit = if (!countPushed) required = s
-  override def build(): Scan = new StoreScan(plan, required, bucketRestrict, countPushed, limitPushed)
+  override def pruneColumns(s: StructType): Unit = if (countPushed.isEmpty) required = s
+  override def build(): Scan = new StoreScan(plan, required, bucketRestrict, pushed, countPushed)
 }
 
 /** Last planned bucket count — a test observability hook: runtime
@@ -160,32 +188,34 @@ class StoreScanBuilder(plan: StateStore.ScanPlan) extends ScanBuilder
   */
 private[sources] object StoreScanProbe {
   @volatile var lastPlannedBuckets: Int = -1
-  @volatile var lastCountMode: String = ""
 }
 
 class StoreScan(plan: StateStore.ScanPlan, required: StructType,
-    bucketRestrict: Option[Set[Int]], countPushed: Boolean = false,
-    limitPushed: Option[Int] = None) extends Scan with Batch
+    bucketRestrict: Option[Set[Int]], pushed: Array[Filter],
+    countPushed: Option[Aggregation]) extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
 
-  /** Real on-disk size of the (restricted) bucket dirs — without it the
+  /** The parquet files of the buckets the pushed filters keep, listed
+    * once per scan: statistics and partition planning both read it, and
+    * a runtime filter only narrows it further.
+    */
+  private lazy val files: Seq[(Int, FileStatus)] = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    plan.bucketDirs.toSeq
+      .filter { case (pt, _) => bucketRestrict.forall(_.contains(pt)) }
+      .sortBy(_._1)
+      .flatMap { case (pt, dir) => StoreTable.parquetFiles(dir, conf).map(pt -> _) }
+  }
+
+  /** Real on-disk size of the (restricted) bucket files — without it the
     * optimizer assumes `defaultSizeInBytes` for a DSv2 relation and a
     * small store table can NEVER auto-broadcast; with it, joining a
     * compact snapshot against a corpus plans the broadcast hash join a
     * human would write. Row count = unknown (would need a footer pass).
     */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val restrict = bucketRestrict
-    val bytes = plan.bucketDirs.toSeq
-      .filter { case (pt, _) => restrict.forall(_.contains(pt)) }
-      .map { case (_, dir) =>
-        val p = new Path(dir)
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) 0L
-        else fs.listStatus(p).filter(_.isFile).map(_.getLen).sum
-      }.sum
+    val bytes = files.map(_._2.getLen).sum
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
@@ -227,163 +257,20 @@ class StoreScan(plan: StateStore.ScanPlan, required: StructType,
   override def toBatch: Batch = this
   override def description(): String = {
     val kept = effectiveRestrict.map(_.size).getOrElse(plan.bucketDirs.size)
-    val mode = if (countPushed) ", count=footers" else ""
+    val mode = if (countPushed.isDefined) ", count=footers" else ""
     s"StoreScan(v${plan.version}, buckets=$kept/${plan.bucketDirs.size}$mode)"
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val restrict = effectiveRestrict
-    val kept = plan.bucketDirs.toSeq
-      .filter { case (pt, _) => restrict.forall(_.contains(pt)) }
-      .sortBy(_._1)
-    StoreScanProbe.lastPlannedBuckets = kept.size
-    kept.flatMap { case (_, dir) =>
-      val p = new Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-        .map(s => StoreFilePartition(s.getPath.toString, required, countPushed,
-          limitPushed): InputPartition)
-    }.toArray
+    StoreScanProbe.lastPlannedBuckets =
+      plan.bucketDirs.keys.count(pt => restrict.forall(_.contains(pt)))
+    files.filter { case (pt, _) => restrict.forall(_.contains(pt)) }
+      .zipWithIndex
+      .map { case ((_, f), i) => StoreTable.filePartition(i, Seq(f)): InputPartition }
+      .toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new StoreReaderFactory
-}
-
-case class StoreFilePartition(file: String, required: StructType,
-    countOnly: Boolean = false, limit: Option[Int] = None) extends InputPartition
-
-class StoreReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[StoreFilePartition]
-    if (p.countOnly) return new PartitionReader[InternalRow] {
-      // COUNT(*) from the parquet FOOTER: metadata only, no data pages
-      private var emitted = false
-      override def next(): Boolean = !emitted && { emitted = true; true }
-      override def get(): InternalRow = {
-        @annotation.nowarn("cat=deprecation")
-        val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-          new Configuration(), new Path(p.file))
-        val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
-        StoreScanProbe.lastCountMode = "footers"
-        new GenericInternalRow(Array[Any](rows))
-      }
-      override def close(): Unit = ()
-    }
-    new PartitionReader[InternalRow] {
-      @annotation.nowarn("cat=deprecation") // builder(ReadSupport, Path): the Group-API form
-      private val reader: ParquetReader[org.apache.parquet.example.data.Group] =
-        ParquetReader.builder(new GroupReadSupport(), new Path(p.file))
-          .withConf(new Configuration()).build()
-      private var current: org.apache.parquet.example.data.Group = _
-      private var emitted = 0
-
-      override def next(): Boolean = {
-        if (p.limit.exists(emitted >= _)) return false // pushed LIMIT: stop early
-        current = reader.read()
-        if (current != null) emitted += 1
-        current != null
-      }
-
-      override def get(): InternalRow =
-        new GenericInternalRow(StoreParquet.convert(current, p.required, p.file))
-
-      override def close(): Unit = reader.close()
-    }
-  }
-}
-
-/** Shared Group-API parquet access for the store's DSv2 readers. */
-private[sources] object StoreParquet {
-
-  /** One parquet Group → Spark-internal values in `required` field order. */
-  def convert(g: org.apache.parquet.example.data.Group, required: StructType,
-      file: String): Array[Any] = {
-    val t = g.getType
-    required.fields.map { f =>
-      // a file written under an older (subset) schema null-fills columns
-      // added since — the additive-evolution read contract
-      if (!t.containsField(f.name)) null
-      else {
-      val i = t.getFieldIndex(f.name)
-      if (g.getFieldRepetitionCount(i) == 0) null
-      else f.dataType match {
-        case StringType => UTF8String.fromBytes(g.getBinary(i, 0).getBytes)
-        case LongType => g.getLong(i, 0)
-        case IntegerType => g.getInteger(i, 0)
-        case DoubleType => g.getDouble(i, 0)
-        case FloatType => g.getFloat(i, 0)
-        case BooleanType => g.getBoolean(i, 0)
-        case TimestampType =>
-          t.getType(i).asPrimitiveType().getPrimitiveTypeName match {
-            case PrimitiveTypeName.INT64 => g.getLong(i, 0) // already µs
-            case PrimitiveTypeName.INT96 => // legacy: nanos-of-day + julian day
-              val b = g.getInt96(i, 0).getBytes
-              val buf = java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-              val nanosOfDay = buf.getLong
-              val julianDay = buf.getInt
-              (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-            case other => throw new IllegalStateException(
-              s"unsupported parquet timestamp physical type $other in $file")
-          }
-        case ArrayType(et, _) =>
-          // Spark's standard 3-level list: optional group f (LIST) {
-          //   repeated group list { optional <elem> element } } — the only
-          // layout the store's own writers produce; anything else (legacy
-          // 2-level) fails loudly rather than misreading
-          val lg = g.getGroup(i, 0)
-          val n = lg.getFieldRepetitionCount(0)
-          val out = new Array[Any](n)
-          var j = 0
-          while (j < n) {
-            val e = lg.getGroup(0, j)
-            out(j) =
-              if (e.getFieldRepetitionCount(0) == 0) null
-              else et match {
-                case LongType => e.getLong(0, 0)
-                case IntegerType => e.getInteger(0, 0)
-                case DoubleType => e.getDouble(0, 0)
-                case FloatType => e.getFloat(0, 0)
-                case StringType => UTF8String.fromBytes(e.getBinary(0, 0).getBytes)
-                case other => throw new IllegalStateException(
-                  s"unsupported store array element type $other in $file")
-              }
-            j += 1
-          }
-          new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-        case other => throw new IllegalStateException(
-          s"graft-store reader supports STRING, numeric, BOOLEAN, TIMESTAMP " +
-            s"and ARRAY-of-primitive columns, got $other in $file")
-      }
-      }
-    }.asInstanceOf[Array[Any]]
-  }
-
-  /** All rows of every parquet file under `dir` (absent dir = no rows) —
-    * bucket-dir granularity, bounded by the store's one-bucket-fits-a-task
-    * sizing contract, which is also why the eager per-file read (reader
-    * closed in `finally`, no consumer-dependent lifetime) is the right
-    * trade over a lazy iterator that leaks on early termination.
-    */
-  def readDir(dir: String, schema: StructType): Iterator[Array[Any]] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(new Configuration())
-    if (!fs.exists(p)) return Iterator.empty
-    fs.listStatus(p).iterator
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .flatMap { s =>
-        val rows = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
-        @annotation.nowarn("cat=deprecation")
-        val reader = ParquetReader.builder(new GroupReadSupport(), s.getPath)
-          .withConf(new Configuration()).build()
-        try {
-          var g = reader.read()
-          while (g != null) { rows += convert(g, schema, s.getPath.toString); g = reader.read() }
-        } finally reader.close()
-        rows
-      }
-  }
+    StoreTable.readerFactory(plan.schema, required, pushed, countPushed)
 }

@@ -182,6 +182,22 @@ class StoreCatalogSpec extends AnyFunSuite with SparkSpec with Matchers {
     }.getMessage should include("TABLE_OR_VIEW_NOT_FOUND")
   }
 
+  test("map, struct, date, binary, decimal and array<struct> columns read through graft-store and SQL") {
+    import graft.streaming.TableStore
+    val root = Files.createTempDirectory("graft_cat_wide").toString
+    WideStore.write(spark, root)
+    val cat = "graftwide"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[StoreCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.path", root)
+    for (v <- 0L to 1L) {
+      val want = WideStore.bag(TableStore.read(spark, root, v, "wide"))
+      want.values.sum shouldBe (if (v == 0L) 12 else 11)
+      WideStore.bag(spark.read.format("graft-store").option("path", root)
+        .option("table", "wide").option("version", v).load()) shouldBe want
+      WideStore.bag(spark.sql(s"SELECT * FROM $cat.wide VERSION AS OF $v")) shouldBe want
+    }
+  }
+
   test("array-typed store columns read through SQL: the shingle and centroid tables") {
     import graft.ext.{CorpusIndex, VectorIndex}
     val root = Files.createTempDirectory("graft_cat_arr").toString

@@ -129,6 +129,27 @@ class StoreCdcSpec extends AnyFunSuite with SparkSpec with Matchers {
     streamed shouldBe batch
   }
 
+  test("the change feed carries struct, date, binary, decimal and array<struct> columns") {
+    import graft.streaming.TableStore
+    import org.apache.spark.sql.functions.lit
+    val base = Files.createTempDirectory("graft_cdc_wide").toString
+    val root = base + "/store"
+    WideStore.write(spark, root)
+    val q = spark.readStream.format("graft-store-cdc")
+      .option("path", root).option("table", "flat").option("startingVersion", -1)
+      .load()
+      .writeStream.format("memory").queryName("cdc_wide")
+      .option("checkpointLocation", base + "/ckpt")
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try q.processAllAvailable() finally q.stop()
+    def batch(v: Long) = spark.table("cdc_wide").where(s"version = $v").drop("version")
+    WideStore.bag(batch(0L)) shouldBe WideStore.bag(
+      TableStore.read(spark, root, 0L, "flat").withColumn("change", lit("added")))
+    val v1 = WideStore.bag(TableStore.diff(spark, root, "flat", 0L, 1L))
+    v1.values.sum shouldBe 3 // row 3 removed and re-added, row 7 removed
+    WideStore.bag(batch(1L)) shouldBe v1
+  }
+
   test("maxVersionsPerTrigger paces a genesis catch-up version by version") {
     val base = Files.createTempDirectory("graft_cdc_pace").toString
     val root = base + "/store"

@@ -116,15 +116,15 @@ class StoreTableSpec extends AnyFunSuite with SparkSpec with Matchers {
 
   test("COUNT(*) answers from parquet footers, no data pages") {
     val (root, _) = store()
-    StoreScanProbe.lastCountMode = ""
-    val cnt = load(root).count()
-    cnt shouldBe 64L
-    StoreScanProbe.lastCountMode shouldBe "footers"
+    // Dataset.count() runs exactly this plan
+    val cnt = load(root).groupBy().count()
+    cnt.queryExecution.executedPlan.toString should include("count=footers")
+    cnt.head().getLong(0) shouldBe 64L
     // a filtered count still evaluates rows (pushed filters veto the
     // aggregate pushdown — bucket pruning is partition-level, not exact)
-    StoreScanProbe.lastCountMode = ""
-    load(root).where(col("id") === "a5").count() shouldBe 1L
-    StoreScanProbe.lastCountMode shouldBe ""
+    val filtered = load(root).where(col("id") === "a5").groupBy().count()
+    filtered.queryExecution.executedPlan.toString should not include "count=footers"
+    filtered.head().getLong(0) shouldBe 1L
   }
 
   test("a pushed LIMIT caps every bucket reader; global result still exact") {

@@ -342,32 +342,35 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
   }
 
   test("a manifest with no terminator is a crash remnant: version invisible, predecessor reads") {
-    val root = Files.createTempDirectory("graft_store").toString
-    val cfg = StateStore.Config(buckets = 16)
-    StateStore.write(spark, root, 0L, mkState(8), None, cfg)
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
-    // truncate v1's manifest mid-write (drop crc+END): the documented
-    // crash-during-commit remnant — not corruption of a COMMITTED manifest
-    val mp = java.nio.file.Paths.get(s"$root/v1/MANIFEST")
-    val text = new String(java.nio.file.Files.readAllBytes(mp), "UTF-8")
-    java.nio.file.Files.write(mp,
-      text.substring(0, text.indexOf("crc=")).getBytes("UTF-8"))
-    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/v1/.MANIFEST.crc"))
-    val (v, st) = StateStore.readLatest(spark, root, Long.MaxValue).get
-    v shouldBe 0L
-    assetRows(st) shouldBe assetRows(mkState(8))
-    // a FRESH remnant is refused retryably (r12 lease/grace: it may be a
-    // cross-process writer mid-commit, not a crash)
-    val fresh = intercept[StateStore.ConcurrentWriteException] {
+    // both manifest publication modes: in-place write and atomic publish
+    for (atomic <- Seq(false, true)) {
+      val root = Files.createTempDirectory("graft_store").toString
+      val cfg = StateStore.Config(buckets = 16, atomicPublish = atomic)
+      StateStore.write(spark, root, 0L, mkState(8), None, cfg)
+      val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
       StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+      // truncate v1's manifest mid-write (drop crc+END): the documented
+      // crash-during-commit remnant — not corruption of a COMMITTED manifest
+      val mp = java.nio.file.Paths.get(s"$root/v1/MANIFEST")
+      val text = new String(java.nio.file.Files.readAllBytes(mp), "UTF-8")
+      java.nio.file.Files.write(mp,
+        text.substring(0, text.indexOf("crc=")).getBytes("UTF-8"))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(s"$root/v1/.MANIFEST.crc"))
+      val (v, st) = StateStore.readLatest(spark, root, Long.MaxValue).get
+      v shouldBe 0L
+      assetRows(st) shouldBe assetRows(mkState(8))
+      // a FRESH remnant is refused retryably (r12 lease/grace: it may be a
+      // cross-process writer mid-commit, not a crash)
+      val fresh = intercept[StateStore.ConcurrentWriteException] {
+        StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+      }
+      fresh.getMessage should include("grace window")
+      // once the remnant ages past the window, a RE-COMMIT of v1 reclaims
+      // it (the redelivery path)
+      mp.toFile.setLastModified(System.currentTimeMillis() - 2 * cfg.remnantGraceMs)
+      StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+      assetRows(StateStore.read(spark, root, 1L)) shouldBe assetRows(mkState(8, Set("a3")))
     }
-    fresh.getMessage should include("grace window")
-    // once the remnant ages past the window, a RE-COMMIT of v1 reclaims
-    // it (the redelivery path)
-    mp.toFile.setLastModified(System.currentTimeMillis() - 2 * cfg.remnantGraceMs)
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
-    assetRows(StateStore.read(spark, root, 1L)) shouldBe assetRows(mkState(8, Set("a3")))
   }
 
   // --- schema evolution (VERDICT r6 next #4) -------------------------------

@@ -44,24 +44,27 @@ class StoreConcurrencySpec extends AnyFunSuite with SparkSpec with Matchers {
     // deltas touching the IDENTICAL bucket set at the same version used
     // to produce identical pointer maps, so the loser passed the
     // idempotence check and its data silently vanished
-    val root = Files.createTempDirectory("graft-conc").toString
-    val spec = TableStore.Spec("t", Seq("k"))
-    def frame(v: String) = Seq((1L, v), (2L, v)).toDF("k", "v")
-    TableStore.write(spark, root, 0L, Seq(spec), Map("t" -> frame("init")))
-    TableStore.write(spark, root, 1L, Seq(spec), Map("t" -> frame("winner")),
-      delta = true)
-    // same keys -> same touched buckets -> same pointer map; only the
-    // content signature can tell this apart from a redelivery
-    val ex = intercept[StateStore.ConcurrentWriteException] {
-      TableStore.write(spark, root, 1L, Seq(spec), Map("t" -> frame("loser")),
-        delta = true)
+    for (atomic <- Seq(false, true)) { // in-place and atomic manifest publish
+      val root = Files.createTempDirectory("graft-conc").toString
+      val spec = TableStore.Spec("t", Seq("k"))
+      val cfg = StateStore.Config(atomicPublish = atomic)
+      def frame(v: String) = Seq((1L, v), (2L, v)).toDF("k", "v")
+      TableStore.write(spark, root, 0L, Seq(spec), Map("t" -> frame("init")), cfg = cfg)
+      TableStore.write(spark, root, 1L, Seq(spec), Map("t" -> frame("winner")),
+        delta = true, cfg = cfg)
+      // same keys -> same touched buckets -> same pointer map; only the
+      // content signature can tell this apart from a redelivery
+      val ex = intercept[StateStore.ConcurrentWriteException] {
+        TableStore.write(spark, root, 1L, Seq(spec), Map("t" -> frame("loser")),
+          delta = true, cfg = cfg)
+      }
+      ex.getMessage should include("different content")
+      // ...while a true byte-identical redelivery still succeeds silently
+      TableStore.write(spark, root, 1L, Seq(spec), Map("t" -> frame("winner")),
+        delta = true, cfg = cfg)
+      TableStore.read(spark, root, 1L, "t").as[(Long, String)].collect().toMap
+        .apply(1L) shouldBe "winner"
     }
-    ex.getMessage should include("different content")
-    // ...while a true byte-identical redelivery still succeeds silently
-    TableStore.write(spark, root, 1L, Seq(spec), Map("t" -> frame("winner")),
-      delta = true)
-    TableStore.read(spark, root, 1L, "t").as[(Long, String)].collect().toMap
-      .apply(1L) shouldBe "winner"
   }
 
   // --- the graph store through the shared signed write path ---------------
@@ -89,20 +92,22 @@ class StoreConcurrencySpec extends AnyFunSuite with SparkSpec with Matchers {
     // the graph twin of the TableStore leg above: two folds of v1 that
     // change the same asset (so the same ChangeSet, the same touched
     // bucket and the same pointer map) but to different values
-    val root = Files.createTempDirectory("graft-conc").toString
-    val cfg = StateStore.Config(buckets = 8)
-    val ch = graft.state.ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    StateStore.write(spark, root, 0L, graphState("2024-01-01 00:00:00"), None, cfg)
-    StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
-    val ex = intercept[StateStore.ConcurrentWriteException] {
-      StateStore.write(spark, root, 1L, graphState("2024-03-01 00:00:00"), Some(ch), cfg)
+    for (atomic <- Seq(false, true)) { // in-place and atomic manifest publish
+      val root = Files.createTempDirectory("graft-conc").toString
+      val cfg = StateStore.Config(buckets = 8, atomicPublish = atomic)
+      val ch = graft.state.ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
+      StateStore.write(spark, root, 0L, graphState("2024-01-01 00:00:00"), None, cfg)
+      StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
+      val ex = intercept[StateStore.ConcurrentWriteException] {
+        StateStore.write(spark, root, 1L, graphState("2024-03-01 00:00:00"), Some(ch), cfg)
+      }
+      ex.getMessage should include("different content")
+      StreamIngest.isRetryable(ex) shouldBe true
+      // ...while a byte-identical redelivery still succeeds silently
+      StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
+      a3Seen(root, 1L) shouldBe java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
+      StateStore.readManifest(spark, root, 1L).get.sigs.keySet should contain("assets")
     }
-    ex.getMessage should include("different content")
-    StreamIngest.isRetryable(ex) shouldBe true
-    // ...while a byte-identical redelivery still succeeds silently
-    StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
-    a3Seen(root, 1L) shouldBe java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
-    StateStore.readManifest(spark, root, 1L).get.sigs.keySet should contain("assets")
   }
 
   test("graph store: a manifest without signatures still reads and takes redelivery, pointer-only") {
