@@ -48,10 +48,7 @@ object GraphOps {
     * org/asset trees is small and bounded. Every frontier is eagerly
     * localCheckpoint'ed so the iterative lineage stays flat (the
     * accumulator's plan is a union of <= maxDepth checkpointed leaves,
-    * not a recursively deepening tree). For adversarially deep graphs the
-    * alternative is path-doubling (closure of the closure, O(log depth)
-    * rounds at O(paths²) intermediate size); hierarchy height bounds make
-    * BFS the cheaper shape here.
+    * not a recursively deepening tree).
     *
     * @param maxDepth hard stop — a non-empty frontier at maxDepth means a
     *        cycle (or a deeper graph than the caller vouched for); throws
@@ -165,63 +162,6 @@ object GraphOps {
     // same (c, p) at several depths whenever a pair is rediscovered along
     // a longer path in a later round; min keeps the shortest
     acc.groupBy(col("c"), col("p")).agg(min(col("depth")).as("depth"))
-  }
-
-  /** Path-doubling variant of [[ancestorsClosure]] for ADVERSARIALLY DEEP
-    * graphs: each round self-joins the closure-so-far with itself, so
-    * reach doubles per round and a depth-d hierarchy closes in
-    * ceil(log2 d) + 1 rounds instead of d — the difference between 10
-    * shuffle rounds and 1000 on a deep dependency chain. The trade: each
-    * round joins pair-set against pair-set (O(|closure|) per side) where
-    * BFS joins frontier-against-edges, so for SHALLOW graphs (org trees,
-    * asset hierarchies) BFS is cheaper — callers pick by expected height.
-    *
-    * Depths stay shortest-path: each round keeps min(depth) per (c, p),
-    * and min-plus composition (d(c,p) = min over m of d(c,m) + d(m,p))
-    * converges to the true shortest hop count once reach covers the
-    * graph's depth.
-    *
-    * Terminates when a round adds no NEW pair AND improves no depth —
-    * on a cyclic graph reach converges to full reachability including a
-    * self-pair for every node on a cycle, which (as in the BFS variant)
-    * throws rather than returning a silently wrong "closure".
-    */
-  def ancestorsClosureDoubling(edges: DataFrame, childCol: String,
-      parentCol: String, maxRounds: Int = 40): DataFrame = {
-    var cl = GraftSql.localCheckpointMeasuredStats(
-      edges.select(col(childCol).as("c"), col(parentCol).as("p"))
-        .distinct()
-        .withColumn("depth", lit(1)))
-    var prevCount = cl.count()
-    // empty edge set: the closure is empty, and the convergence probe's
-    // sum(depth) over zero rows would be null → NPE at getLong (the
-    // Components.lblSum null-sum case; ADVICE r4)
-    if (prevCount == 0) return cl
-    var prevDepthSum = -1L
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      cl = cl.as("f").join(cl.as("g"), col("f.p") === col("g.c"))
-        .select(col("f.c").as("c"), col("g.p").as("p"),
-          (col("f.depth") + col("g.depth")).as("depth"))
-        .unionByName(cl)
-        .groupBy(col("c"), col("p")).agg(min(col("depth")).as("depth"))
-      cl = GraftSql.localCheckpointMeasuredStats(cl)
-      // ONE driver-side row per round decides convergence: pair count
-      // stable AND total depth stable (pairs only ever appear, depths
-      // only ever decrease — (count, sum) is a monotone measure)
-      val stats = cl.agg(count(lit(1)), sum(col("depth"))).head()
-      val (n, dSum) = (stats.getLong(0), stats.getLong(1))
-      converged = n == prevCount && dSum == prevDepthSum
-      prevCount = n
-      prevDepthSum = dSum
-      round += 1
-    }
-    require(converged,
-      s"closure still growing after $maxRounds doubling rounds — cycle or depth > 2^$maxRounds?")
-    require(cl.filter(col("c") === col("p")).isEmpty,
-      "graph contains a cycle (a node reaches itself)")
-    cl
   }
 
   /** C7 — per-asset active-owner quantifier: does ANY active owns edge

@@ -120,13 +120,15 @@ object Inventory {
       statePath: String,
       sinceVersion: Long,
       maxVersion: Long = Long.MaxValue): Option[(Long, Seq[StateStore.TableDiff])] =
-    StateStore.latestCommitted(spark, statePath, maxVersion)
-      .filter(_ > sinceVersion)
-      .map { v =>
-        require(StateStore.readManifest(spark, statePath, sinceVersion).isDefined,
-          s"version $sinceVersion is pruned — the consumer's lag exceeded the " +
-            s"writer's retention (applyBatch keepVersions). Reseed from a full " +
-            s"read of v$v, then resume polling from there.")
-        (v, StateStore.diffVersions(spark, statePath, sinceVersion, v))
+    StateStore.latestManifest(spark, statePath, maxVersion)
+      .filter(_._1 > sinceVersion)
+      .map { head =>
+        // each manifest is read once per poll and handed to the diff
+        val since = StateStore.readManifest(spark, statePath, sinceVersion).getOrElse(
+          throw new IllegalArgumentException(
+            s"version $sinceVersion is pruned — the consumer's lag exceeded the " +
+              s"writer's retention (applyBatch keepVersions). Reseed from a full " +
+              s"read of v${head._1}, then resume polling from there."))
+        (head._1, StateStore.diffVersions(spark, statePath, sinceVersion -> since, head))
       }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 /** The natural keys a fold touched in each snapshot table — the write-side
   * contract that lets the versioned state sink rewrite only the hash
   * partitions a micro-batch actually changed instead of the full snapshot
-  * (O(batch) write amplification, not O(state)).
+  * (O(touched buckets) writes, not O(state)).
   *
   * Key columns: assets `(id)`, teams `(identifier)`, owns
   * `(team_id, asset_id)`, parent_of `(parent_id, child_id)`. Supersets are

@@ -29,9 +29,11 @@ import scala.util.control.NonFatal
   * ever needed. Storage is reclaimed at BUCKET granularity instead:
   * [[prune]] deletes superseded `pt=` dirs the surviving manifests no
   * longer reference (and then empty version dirs), bounding live data to
-  * one copy per bucket per surviving manifest — amortized write cost stays
-  * O(batch) with no periodic O(state) rewrite (the round-3 `maxChain`
-  * full-snapshot compaction is gone).
+  * one copy per bucket per surviving manifest — write cost stays
+  * O(touched buckets) with no periodic O(state) rewrite (the round-3
+  * `maxChain` full-snapshot compaction is gone). A touched bucket is
+  * rewritten whole, so that is not O(batch): a 50-event trigger stages
+  * 228 KB of a 586 KB store.
   *
   * Bucket keys are chosen for the pipeline's POINT-LOOKUP patterns, not
   * just the merge keys (reference: per-key index lookups,
@@ -348,7 +350,25 @@ object StateStore {
     }
   }
 
-  def readManifest(spark: SparkSession, statePath: String, version: Long): Option[Manifest] = {
+  def readManifest(spark: SparkSession, statePath: String, version: Long): Option[Manifest] =
+    lent.get.get((statePath, version)).orElse(readManifestFile(spark, statePath, version))
+
+  /** The committed manifest of `version`; throws when there is none. */
+  private[graft] def manifestAt(spark: SparkSession, statePath: String,
+      version: Long): Manifest =
+    readManifest(spark, statePath, version).getOrElse(
+      throw new IllegalStateException(s"no committed manifest for v$version under $statePath"))
+
+  /** Manifests a caller already holds, lent to [[readManifest]] on this
+    * thread while [[readDiff]] builds a read through the
+    * `graft-store-cdc` format, whose planning looks manifests up by path
+    * and version: a diff reads each manifest once, however many tables it
+    * covers.
+    */
+  private val lent = ThreadLocal.withInitial[Map[(String, Long), Manifest]](() => Map.empty)
+
+  private def readManifestFile(spark: SparkSession, statePath: String,
+      version: Long): Option[Manifest] = {
     val (fs, _) = fsFor(spark, statePath)
     val p = manifestPath(statePath, version)
     if (!fs.exists(p)) return None
@@ -481,7 +501,12 @@ object StateStore {
     * manifests) are skipped the same way the full form skips them.
     */
   def latestCommitted(spark: SparkSession, statePath: String,
-      maxVersion: Long = Long.MaxValue): Option[Long] = {
+      maxVersion: Long = Long.MaxValue): Option[Long] =
+    latestManifest(spark, statePath, maxVersion).map(_._1)
+
+  /** [[latestCommitted]] with the manifest it found. */
+  private[graft] def latestManifest(spark: SparkSession, statePath: String,
+      maxVersion: Long = Long.MaxValue): Option[(Long, Manifest)] = {
     val (fs, root) = fsFor(spark, statePath)
     if (!fs.exists(root)) return None
     fs.listStatus(root).toSeq
@@ -491,7 +516,8 @@ object StateStore {
       .sorted(Ordering[Long].reverse)
       .iterator
       .filter(v => fs.exists(manifestPath(statePath, v)))
-      .find(v => readManifest(spark, statePath, v).isDefined)
+      .flatMap(v => readManifest(spark, statePath, v).map(v -> _))
+      .nextOption()
   }
 
   /** Committed versions in (fromExclusive, toInclusive], ascending — the
@@ -501,7 +527,12 @@ object StateStore {
     * store's history is).
     */
   def committedVersionsBetween(spark: SparkSession, statePath: String,
-      fromExclusive: Long, toInclusive: Long): Seq[Long] = {
+      fromExclusive: Long, toInclusive: Long): Seq[Long] =
+    committedManifestsBetween(spark, statePath, fromExclusive, toInclusive).map(_._1)
+
+  /** [[committedVersionsBetween]] with their manifests. */
+  private def committedManifestsBetween(spark: SparkSession, statePath: String,
+      fromExclusive: Long, toInclusive: Long): Seq[(Long, Manifest)] = {
     val (fs, root) = fsFor(spark, statePath)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
@@ -509,8 +540,8 @@ object StateStore {
       .flatMap(s => s.getPath.getName.drop(1).toLongOption)
       .filter(v => v > fromExclusive && v <= toInclusive)
       .filter(v => fs.exists(manifestPath(statePath, v)))
-      .filter(v => readManifest(spark, statePath, v).isDefined)
-      .sorted
+      .flatMap(v => readManifest(spark, statePath, v).map(v -> _))
+      .sortBy(_._1)
   }
 
   // --- write ---------------------------------------------------------------
@@ -1061,8 +1092,7 @@ object StateStore {
     * `pt` column never surfaces.
     */
   def read(spark: SparkSession, statePath: String, version: Long): State = {
-    val m = readManifest(spark, statePath, version).getOrElse(
-      throw new IllegalStateException(s"no committed manifest for v$version under $statePath"))
+    val m = manifestAt(spark, statePath, version)
     def tbl(spec: TableSpec): DataFrame =
       readPaths(spark, m.schemaOf(spec.name), bucketPaths(statePath, m, spec.name))
     State(tbl(tables(0)), tbl(tables(1)), tbl(tables(2)), tbl(tables(3)))
@@ -1174,8 +1204,7 @@ object StateStore {
     val v = version.getOrElse(
       latestCommitted(spark, statePath).getOrElse(
         throw new IllegalStateException(s"no committed version under $statePath")))
-    val m = readManifest(spark, statePath, v).getOrElse(
-      throw new IllegalStateException(s"no committed manifest for v$v under $statePath"))
+    val m = manifestAt(spark, statePath, v)
     // MANIFEST-FIRST resolution: a generic TableStore table's key columns
     // and schema come from its own manifest (`key:`/`schema:` lines), so
     // any store — the graph state, the corpus frames, the vector indexes
@@ -1196,74 +1225,79 @@ object StateStore {
       })
   }
 
-  /** One changed bucket of one version transition — the planning unit of
-    * the `graft-store-cdc` streaming source. `oldDir` is absent when the
-    * bucket first appears at `version`; `newDir` absent when the version
-    * dropped it.
+  /** One slice of a table's diff between two manifests: old and new
+    * bucket dirs whose rows can only match each other, so one task diffs
+    * the slice alone. The `graft-store-cdc` source reads one input
+    * partition per slice, for its stream and its batch diff alike.
     */
-  private[graft] final case class CdcSlice(version: Long, bucket: Int,
-      oldDir: Option[String], newDir: Option[String])
+  private[graft] final case class DiffSlice(oldDirs: Seq[String], newDirs: Seq[String])
 
-  /** Plan the row-level change feed of `table` for every committed
-    * version in `(fromExclusive, toInclusive]`: one [[CdcSlice]] per
-    * (version, pointer-changed bucket), each diffed against that
-    * version's committed predecessor — the streaming face of
-    * [[diffVersions]], manifest-pruned the same way (same-pointer buckets
-    * are byte-identical by shadow paging and never read).
+  /** The store's one diff-slicing rule: `table`'s change from `mOld`
+    * (None: empty, before the chain's first version) to `mNew`, cut by
+    * bucket residue mod g, the gcd of the two moduli. Slice r holds every
+    * old bucket i ≡ r and every new bucket j ≡ r (mod g). A row lives in
+    * bucket pmod(h, m) of a modulus-m version, and pmod(h, m) mod g =
+    * pmod(h, g) when g divides m, so its old and new buckets share a
+    * slice: each slice's multiset diff is exact, and the slices' diffs
+    * add up to the table's. Only buckets whose pointer changed are kept:
+    * a same-pointer bucket is the same directory on both sides (shadow
+    * paging never rewrites one in place), so its rows cancel within
+    * their slice.
     *
-    * `fromExclusive = -1` means genesis: the chain's first version diffs
-    * against empty. Any other base must still be committed — a pruned
+    * Equal moduli give one slice per changed bucket; a rebucket 8 → 32
+    * gives 8, each one old bucket against the four new buckets its rows
+    * moved to. Manifests that record different key columns for the table
+    * share no bucket rule, and their diff is one slice.
+    */
+  private[graft] def diffSlices(statePath: String, table: String,
+      mOld: Option[Manifest], mNew: Manifest): Seq[DiffSlice] = {
+    val pOld = mOld.flatMap(_.pointers.get(table)).getOrElse(Map.empty[Int, Long])
+    val pNew = mNew.pointers.getOrElse(table, Map.empty[Int, Long])
+    val g = mOld match {
+      case Some(o) if pOld.nonEmpty && pNew.nonEmpty =>
+        if (o.keyColsOf(table) == mNew.keyColsOf(table)) BigInt(o.buckets).gcd(mNew.buckets).toInt
+        else 1
+      // one side holds no rows, so nothing cancels: a slice per bucket
+      case _ => math.max(mOld.fold(0)(_.buckets), mNew.buckets)
+    }
+    def dirs(ps: Map[Int, Long], vDirs: Map[Long, String], pts: Seq[Int]): Seq[String] =
+      pts.flatMap(pt => ps.get(pt).map(pv => s"${tableDataDir(statePath, vDirs, pv, table)}/pt=$pt"))
+    val dirsOld = mOld.fold(Map.empty[Long, String])(_.dirs)
+    (pOld.keySet ++ pNew.keySet).toSeq.sorted
+      .filter(pt => pOld.get(pt) != pNew.get(pt))
+      .groupBy(_ % g).toSeq.sortBy(_._1)
+      .map { case (_, pts) => DiffSlice(dirs(pOld, dirsOld, pts), dirs(pNew, mNew.dirs, pts)) }
+  }
+
+  /** The committed version a change feed from `fromExclusive` diffs
+    * against, with its manifest: the latest committed version <= it, None
+    * at genesis (-1). Any other base must still be committed — a pruned
     * base would silently skip its changes, so it fails loudly instead
     * (the [[graft.graph.Inventory.changesSince]] retention contract).
     */
+  private def diffBase(spark: SparkSession, statePath: String,
+      fromExclusive: Long): Option[(Long, Manifest)] =
+    if (fromExclusive < 0) None
+    else Some(readManifest(spark, statePath, fromExclusive).map(fromExclusive -> _)
+      .orElse(latestManifest(spark, statePath, fromExclusive))
+      .getOrElse(throw new IllegalStateException(
+        s"CDC base version <= $fromExclusive is no longer committed under " +
+          s"$statePath (pruned?) — reseed from a full read, as with changesSince")))
+
+  /** Plan the row-level change feed of `table` for every committed
+    * version in `(fromExclusive, toInclusive]`: each version's
+    * [[diffSlices]] against its committed predecessor, tagged with the
+    * version. Read I/O per version is bounded by that version's writes.
+    */
   private[graft] def planCdc(spark: SparkSession, statePath: String,
       table: String, fromExclusive: Long, toInclusive: Long,
-      streamSchema: Option[StructType] = None): Seq[CdcSlice] = {
-    // manifest-first resolution (the planScan contract): a generic
-    // TableStore table is known through its own manifest's key/schema/
-    // pointer lines, so the CDC stream serves any versioned store —
-    // graph names stay canonical
-    val known = tables.exists(_.name == table) ||
-      latestCommitted(spark, statePath)
-        .flatMap(v => readManifest(spark, statePath, v)).exists(m =>
-          m.keys.contains(table) || m.schemas.contains(table) ||
-            m.pointers.contains(table))
-    require(known,
-      s"unknown table '$table' — not a graph table (${tables.map(_.name).mkString(", ")}) " +
-        "and not recorded in this store's manifest")
-    // manifest probes bounded by the PENDING range + one head probe for
-    // the base — never the whole chain (see committedVersionsBetween)
-    val emit = committedVersionsBetween(spark, statePath, fromExclusive, toInclusive)
+      streamSchema: Option[StructType] = None): Seq[(Long, DiffSlice)] = {
+    // manifest probes bounded by the PENDING range + one probe for the
+    // base — never the whole chain (see committedVersionsBetween)
+    val emit = committedManifestsBetween(spark, statePath, fromExclusive, toInclusive)
     if (emit.isEmpty) return Nil
-    val base = latestCommitted(spark, statePath, fromExclusive)
-    if (base.isEmpty && fromExclusive >= 0)
-      throw new IllegalStateException(
-        s"CDC base version <= $fromExclusive is no longer committed under " +
-          s"$statePath (pruned?) — reseed from a full read, as with changesSince")
-    def mf(v: Long): Manifest = readManifest(spark, statePath, v).getOrElse(
-      throw new IllegalStateException(s"no committed manifest for v$v under $statePath"))
-    var prev = base
-    emit.flatMap { v =>
-      val mNew = mf(v)
-      // A REBUCKET version (modulus change, always a full write) is
-      // emitted as a one-time O(table) change batch: every pointer of a
-      // full write points at the new version while every predecessor
-      // pointer points lower, so the pointer-diff below plans EVERY
-      // bucket of both sides. The per-slice pairing (old pt=X vs new
-      // pt=X) is arbitrary across moduli, but the batch stays EXACT as a
-      // multiset delta: per row r, each slice contributes
-      // added−removed = count_new,slice(r) − count_old,slice(r), and the
-      // per-bucket counts telescope to count_vNew(r) − count_vOld(r).
-      // It is NON-MINIMAL — a row that only moved buckets appears as a
-      // (removed, added) pair of identical rows — which consumers
-      // already absorb: an update is delivered the same way, and the
-      // documented apply order (removes, then adds, per batch) nets it
-      // out. Pinned by StoreCdcSpec's across-rebucket leg.
-      val mOld = prev.map(mf)
-      val pOld = mOld.map(_.pointers.getOrElse(table, Map.empty))
-        .getOrElse(Map.empty[Int, Long])
-      val dirsOld = mOld.map(_.dirs).getOrElse(Map.empty[Long, String])
-      val pNew = mNew.pointers.getOrElse(table, Map.empty)
+    val olds = diffBase(spark, statePath, fromExclusive).map(_._2) +: emit.map(e => Some(e._2))
+    olds.zip(emit).flatMap { case (mOld, (v, mNew)) =>
       // schema-evolution guard: a version written under a schema WIDER
       // than the running stream's row schema cannot be emitted — reading
       // its files through the narrower schema would silently drop the new
@@ -1278,14 +1312,31 @@ object StateStore {
             "are not in this stream's bound schema — emitting would silently drop " +
             "them from the change feed; restart the stream to bind the evolved schema")
       }
-      prev = Some(v)
-      (pOld.keySet ++ pNew.keySet).filter(pt => pOld.get(pt) != pNew.get(pt))
-        .toSeq.sorted.map { pt =>
-          CdcSlice(v, pt,
-            pOld.get(pt).map(pv => s"${tableDataDir(statePath, dirsOld, pv, table)}/pt=$pt"),
-            pNew.get(pt).map(nv => s"${tableDataDir(statePath, mNew.dirs, nv, table)}/pt=$pt"))
-        }
+      diffSlices(statePath, table, mOld, mNew).map(v -> _)
     }
+  }
+
+  /** Plan the batch diff of `table` over `(fromExclusive, toInclusive]`:
+    * its net change as [[diffSlices]] between the base (resolved as for
+    * the stream) and the committed end version, bound to the end's
+    * recorded schema. Additive evolution (the write contract) means old
+    * files null-fill the added columns, so an evolved row diffs as
+    * removed(old shape) + added(new shape); a narrowing change would drop
+    * the base's columns from the feed and is refused.
+    */
+  private[graft] def planDiff(spark: SparkSession, statePath: String,
+      table: String, fromExclusive: Long, toInclusive: Long): (StructType, Seq[DiffSlice]) = {
+    val mNew = manifestAt(spark, statePath, toInclusive)
+    val sc = mNew.schemaOf(table)
+    val base = diffBase(spark, statePath, fromExclusive)
+    base.filter(_._2.pointers.contains(table)).foreach { case (vOld, mOld) =>
+      val older = mOld.schemaOf(table).fields.filterNot(of =>
+        sc.fields.exists(nf => nf.name == of.name && nf.dataType == of.dataType))
+      require(older.isEmpty,
+        s"diff of '$table' across a narrowing schema change (v$vOld fields " +
+          s"${older.map(_.name).mkString(", ")} absent in v$toInclusive) is not defined")
+    }
+    (sc, diffSlices(statePath, table, base.map(_._2), mNew))
   }
 
   /** Schema of `table` at the LATEST committed version (canonical when
@@ -1294,8 +1345,7 @@ object StateStore {
     */
   private[graft] def latestSchema(spark: SparkSession, statePath: String,
       table: String): StructType =
-    latestCommitted(spark, statePath)
-      .flatMap(v => readManifest(spark, statePath, v)).map(_.schemaOf(table))
+    latestManifest(spark, statePath).map(_._2.schemaOf(table))
       .getOrElse(tableSchema(table))
 
   private[graft] def tableSchema(table: String): StructType =
@@ -1317,8 +1367,8 @@ object StateStore {
   // --- version diff (manifest-pruned) --------------------------------------
 
   /** Row-level diff of one table between two committed versions, plus the
-    * exact paths it was computed from (so a test can bound the read I/O
-    * by inspection, like [[Partial]]).
+    * bucket dirs it reads (so a test can bound the read I/O by
+    * inspection, like [[Partial]]).
     */
   final case class TableDiff(table: String, changed: DataFrame,
       pathsOld: Seq[String], pathsNew: Seq[String])
@@ -1326,78 +1376,41 @@ object StateStore {
   /** What changed between two committed versions — the audit/CDC query
     * over the snapshot store (the batch-table analog of D5's as-of diff).
     *
-    * The manifests make this O(changed): a bucket whose pointer is the
-    * SAME in both versions is byte-identical by construction (shadow
-    * paging never rewrites a bucket in place), so only buckets whose
-    * pointers DIFFER are read — per-version write I/O bounds diff read
-    * I/O, however big the state. Within those buckets, rows are compared
-    * whole: a row of vNew absent from vOld is `added`, the reverse is
-    * `removed` (an updated row appears as its removed old version plus
-    * its added new version).
+    * The manifests make this O(changed): only buckets whose pointers
+    * differ are read ([[diffSlices]]), so per-version write I/O bounds
+    * diff read I/O, however big the state. Within those buckets, rows are
+    * compared whole: a row of vNew absent from vOld is `added`, the
+    * reverse is `removed` (an updated row appears as its removed old
+    * version plus its added new version).
     */
   def diffVersions(spark: SparkSession, statePath: String, vOld: Long,
-      vNew: Long): Seq[TableDiff] = {
-    val mOld = readManifest(spark, statePath, vOld).getOrElse(
-      throw new IllegalStateException(s"no committed manifest for v$vOld under $statePath"))
-    val mNew = readManifest(spark, statePath, vNew).getOrElse(
-      throw new IllegalStateException(s"no committed manifest for v$vNew under $statePath"))
-    // unequal moduli (a rebucket between the versions) stay EXACT: the
-    // row-level diff in diffTable is a GLOBAL exceptAll over all changed
-    // buckets, so bucket ids never enter the comparison — it just reads
-    // both versions in full, because a rebucket rewrites every pointer
-    // and pointer pruning keeps nothing (see TableStore.diff)
-    tables.map { t =>
-      val (changed, pathsOld, pathsNew) =
-        diffTable(spark, statePath, t.name, vOld, mOld, vNew, mNew)
-      TableDiff(t.name, changed, pathsOld, pathsNew)
-    }
-  }
+      vNew: Long): Seq[TableDiff] =
+    diffVersions(spark, statePath, vOld -> manifestAt(spark, statePath, vOld),
+      vNew -> manifestAt(spark, statePath, vNew))
 
-  /** One table's row-level diff between two manifests — the bucket-pruned
-    * core shared by [[diffVersions]] (graph tables) and
-    * [[TableStore.diff]] (generic stores). Returns (changed rows with a
-    * `change` column, pruned old paths, pruned new paths).
+  /** [[diffVersions]] between two manifests the caller already read. */
+  private[graft] def diffVersions(spark: SparkSession, statePath: String,
+      old: (Long, Manifest), nw: (Long, Manifest)): Seq[TableDiff] =
+    tables.map { t =>
+      val slices = diffSlices(statePath, t.name, Some(old._2), nw._2)
+      TableDiff(t.name, readDiff(spark, statePath, t.name, old, nw),
+        slices.flatMap(_.oldDirs), slices.flatMap(_.newDirs))
+    }
+
+  /** `table`'s net change from `old` to `nw`: the table's columns plus
+    * `change` (`added`/`removed`), read as a batch scan of the
+    * `graft-store-cdc` source ([[planDiff]]) with the two manifests lent
+    * to its planning.
     */
-  private[streaming] def diffTable(spark: SparkSession, statePath: String,
-      table: String, vOld: Long, mOld: Manifest, vNew: Long,
-      mNew: Manifest): (DataFrame, Seq[String], Seq[String]) = {
-    val pOld = mOld.pointers.getOrElse(table, Map.empty[Int, Long])
-    val pNew = mNew.pointers.getOrElse(table, Map.empty[Int, Long])
-    val changedPts = (pOld.keySet ++ pNew.keySet)
-      .filter(pt => pOld.get(pt) != pNew.get(pt))
-    val pathsOld = bucketPaths(statePath, mOld, table, Some(changedPts))
-    val pathsNew = bucketPaths(statePath, mNew, table, Some(changedPts))
-    // diff under the NEW version's schema: additive evolution (the write
-    // contract) means old files null-fill added columns — an evolved row
-    // then correctly diffs as removed(old shape)+added(new shape)
-    val sc = mNew.schemaOf(table)
-    val older = mOld.schemaOf(table).fields.filterNot(of =>
-      sc.fields.exists(nf => nf.name == of.name && nf.dataType == of.dataType))
-    require(older.isEmpty,
-      s"diff of '$table' across a narrowing schema change (v$vOld fields " +
-        s"${older.map(_.name).mkString(", ")} absent in v$vNew) is not defined")
-    val oldRows = readPaths(spark, sc, pathsOld)
-    val newRows = readPaths(spark, sc, pathsNew)
-    // BOTH diff directions in ONE aggregation pass (r14, guide §1.2):
-    // `new exceptAll old UNION old exceptAll new` planned two aggregate
-    // subtrees, each reading both sides — Spark rewrites every exceptAll
-    // into exactly this union/sum-of-±1/replicate shape, so fusing the
-    // directions halves the diff's scans and shuffles with bit-identical
-    // multiset semantics: per row, exceptAll yields max(cNew-cOld, 0)
-    // copies on the added side and max(cOld-cNew, 0) on the removed side,
-    // which is |d| copies on the side sign(d) picks, d = cNew - cOld.
-    val dataCols = sc.fields.toSeq.map(f => col(f.name))
-    val w = "__graft_diff_w"
-    val d = "__graft_diff_d"
-    val changed = newRows.withColumn(w, lit(1L))
-      .unionByName(oldRows.withColumn(w, lit(-1L)))
-      .groupBy(dataCols: _*).agg(sum(col(w)).as(d))
-      .filter(col(d) =!= 0L)
-      .withColumn("change",
-        when(col(d) > 0, lit("added")).otherwise(lit("removed")))
-      .withColumn(w, explode(sequence(lit(1L), abs(col(d)))))
-      .select(dataCols :+ col("change"): _*)
-    (changed, pathsOld, pathsNew)
+  private[streaming] def readDiff(spark: SparkSession, statePath: String,
+      table: String, old: (Long, Manifest), nw: (Long, Manifest)): DataFrame = {
+    val before = lent.get
+    lent.set(before + ((statePath, old._1) -> old._2) + ((statePath, nw._1) -> nw._2))
+    try spark.read.format("graft-store-cdc")
+      .option("path", statePath).option("table", table)
+      .option("startingVersion", old._1).option("endingVersion", nw._1)
+      .load().drop("version")
+    finally lent.set(before)
   }
 
   // --- prune (per-bucket garbage collection) -------------------------------

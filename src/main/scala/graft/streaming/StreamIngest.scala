@@ -168,8 +168,10 @@ object StreamIngest {
     * candidate keys can touch ([[Pipeline.candidatesOf]] +
     * [[StateStore.readPartialLatest]]), the fold merges and checkpoints
     * only those partial frames, and the write rewrites only the buckets
-    * the change set actually touched — per-batch read, compute AND write
-    * are all O(batch), not O(state). Reprocessing the same batchId
+    * the change set actually touched — per-batch read, compute and write
+    * are O(touched buckets), not O(state). A touched bucket is rewritten
+    * whole, so that is not O(batch): a 50-event trigger stages 228 KB of
+    * a 586 KB store. Reprocessing the same batchId
     * (at-least-once restart) overwrites the same version with the same
     * deterministic result.
     */

@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import StateStore.{Config, Manifest}
+import StateStore.{Config, Manifest, manifestAt}
 
 /** Generic versioned, hash-bucketed table store — [[StateStore]]'s
   * shadow-paging/manifest/CAS machinery opened up to ARBITRARY table
@@ -235,27 +235,21 @@ object TableStore {
       maxVersion: Long = Long.MaxValue): Option[Long] =
     StateStore.latestCommitted(spark, statePath, maxVersion)
 
-  /** Row-level diff of one table between two committed versions —
-    * [[StateStore.diffVersions]] generalized to any store: only the
-    * buckets whose pointers differ are read (O(changed), not O(table)),
-    * and the result carries a `change` column (`added`/`removed`; an
-    * updated row appears as both). The audit/debug face of incremental
-    * maintenance: what did this maintenance commit actually change?
-    */
-  /** Across a [[rebucket]] boundary (unequal moduli) the diff is still
-    * EXACT and minimal — the row-level exceptAll is computed globally
-    * over all changed buckets, so bucket ids never enter the comparison
-    * — but it degrades to a full read of both versions: a rebucket
-    * rewrites every pointer, so pointer pruning keeps nothing. One
-    * O(table) audit read per rebucket, same order as the rebucket write
-    * itself (contract pinned by TableStoreSpec's rebucket-diff leg).
+  /** Row-level diff of one table between two committed versions: the
+    * table's columns plus `change` (`added`/`removed`; an updated row
+    * appears as both). The audit/debug face of incremental maintenance:
+    * what did this maintenance commit actually change? Read through the
+    * store's one diff ([[StateStore.diffSlices]]): only buckets whose
+    * pointers differ are read, O(changed), not O(table). Across a
+    * [[rebucket]] (unequal moduli) the diff is still exact and minimal: a
+    * row moved between buckets sits in one slice on both sides and
+    * cancels. The read is O(table) then, because a rebucket rewrites
+    * every pointer.
     */
   def diff(spark: SparkSession, statePath: String, table: String,
-      vOld: Long, vNew: Long): DataFrame = {
-    val mOld = manifestAt(spark, statePath, vOld)
-    val mNew = manifestAt(spark, statePath, vNew)
-    StateStore.diffTable(spark, statePath, table, vOld, mOld, vNew, mNew)._1
-  }
+      vOld: Long, vNew: Long): DataFrame =
+    StateStore.readDiff(spark, statePath, table,
+      vOld -> manifestAt(spark, statePath, vOld), vNew -> manifestAt(spark, statePath, vNew))
 
   /** Re-bucket the store: full-write every table of the latest version
     * under `cfg`'s (different) bucket count as the next version. THE
@@ -575,10 +569,4 @@ object TableStore {
     }
     (orphan, staging)
   }
-
-  private def manifestAt(spark: SparkSession, statePath: String,
-      version: Long): Manifest =
-    StateStore.readManifest(spark, statePath, version).getOrElse(
-      throw new IllegalStateException(
-        s"no committed manifest for v$version under $statePath"))
 }

@@ -99,7 +99,8 @@ class StreamCorpusIndexSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("the generic store CDC stream serves the frame's maintenance feed") {
     // self-describing manifests make graft-store-cdc work over ANY
     // TableStore root: each maintenance commit (insert + replace at v1,
-    // retraction at v2) must stream out exactly TableStore.diff's rows,
+    // retraction at v2) must stream out exactly the rows that two full
+    // reads and exceptAll give (and TableStore.diff returns),
     // change-and-version tagged — the downstream-consumer path (e.g. a
     // vector index reacting to corpus erasures) with no graph coupling.
     val root = Files.createTempDirectory("graft_streamidx").toString
@@ -122,13 +123,18 @@ class StreamCorpusIndexSpec extends AnyFunSuite with SparkSpec with Matchers {
     val got = spark.table("tok_cdc")
       .select(col("version"), col("change"), col("doc_id"), col("term"), col("pos"))
       .collect().map(_.toString).toSeq.sorted
+    import graft.streaming.{ExceptAllDiff, TableStore}
+    def tagged(v: Long, diff: DataFrame): Seq[String] =
+      diff.select(lit(v).as("version"), col("change"), col("doc_id"),
+        col("term"), col("pos")).collect().map(_.toString).toSeq
     val want = Seq(1L, 2L).flatMap { v =>
-      graft.streaming.TableStore.diff(spark, path, "tokens", v - 1, v)
-        .select(lit(v).as("version"), col("change"), col("doc_id"),
-          col("term"), col("pos"))
-        .collect().map(_.toString)
+      tagged(v, ExceptAllDiff(TableStore.read(spark, path, v - 1, "tokens"),
+        TableStore.read(spark, path, v, "tokens")))
     }.sorted
+    want should not be empty
     got shouldBe want
+    Seq(1L, 2L).flatMap(v =>
+      tagged(v, TableStore.diff(spark, path, "tokens", v - 1, v))).sorted shouldBe want
     // the retraction version emits the erased doc's rows as `removed`
     spark.table("tok_cdc")
       .filter(col("version") === 2L && col("doc_id") === 1L)

@@ -58,29 +58,8 @@ class ClosureSpec extends AnyFunSuite with SparkSpec with Matchers {
       forceDistributed(closure(Seq((1L, 2L), (2L, 1L)), maxDepth = 8))
   }
 
-  private def closureDoubling(edges: Seq[(Long, Long)], maxRounds: Int = 40): Set[(Long, Long, Int)] =
-    GraphOps.ancestorsClosureDoubling(edges.toDF("c", "p"), "c", "p", maxRounds)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-
-  test("path doubling equals BFS on a deep chain, in O(log depth) rounds") {
-    // depth-64 chain: BFS needs 64 join rounds; doubling must close it
-    // within 8 (log2(64) + converge-observation), asserted via maxRounds
-    val chain = (1L until 64L).map(i => (i, i - 1))
-    closureDoubling(chain, maxRounds = 8) shouldBe closure(chain)
-  }
-
   test("an empty edge set yields an empty closure in both variants") {
-    // the doubling variant's convergence probe sums depth — over zero
-    // rows that's a null the loop must never see (ADVICE r4 NPE)
-    closure(Seq.empty) shouldBe Set.empty
-    closureDoubling(Seq.empty) shouldBe Set.empty
-  }
-
-  test("path doubling keeps SHORTEST depths on diamonds and rejects cycles") {
-    closureDoubling(Seq((4L, 3L), (4L, 2L), (3L, 2L))) shouldBe Set(
-      (4L, 3L, 1), (4L, 2L, 1), (3L, 2L, 1))
-    an[IllegalArgumentException] should be thrownBy
-      closureDoubling(Seq((1L, 2L), (2L, 1L)))
+    bothPaths(Seq.empty) shouldBe Set.empty
   }
 
   test("a chain of diamonds matches a BFS reference (no 2^depth frontier blow-up)") {

@@ -127,7 +127,7 @@ class StoreTableSpec extends AnyFunSuite with SparkSpec with Matchers {
     filtered.head().getLong(0) shouldBe 1L
   }
 
-  test("a pushed LIMIT caps every bucket reader; global result still exact") {
+  test("a LIMIT returns distinct rows and a full count reads every bucket") {
     val (root, _) = store()
     val got = load(root).limit(5).collect()
     got.length shouldBe 5

@@ -7,8 +7,8 @@ import graft.streaming.{StateStore, TableStore}
   * numbers and timestamps: map, struct, date, binary, decimal and
   * array of struct. v0 is a full write of twelve rows; v1 updates row 3
   * and deletes row 7. `wide` holds every type; `flat` is the same without
-  * the map column, for reads that group on every column (Spark cannot
-  * group on a map).
+  * the map column, for the `exceptAll` reference diff (Spark's set
+  * operations reject map columns).
   */
 object WideStore {
 
