@@ -45,8 +45,8 @@ object Quickstart {
       spark, log, maxOffsetsPerTrigger = Some(7L))
     val query = graft.streaming.StreamIngest.start(src, statePath, s"$out/ckpt")
     try query.processAllAvailable() finally query.stop()
-    val st = graft.streaming.StreamIngest
-      .loadLatestState(spark, statePath, Long.MaxValue)
+    val (_, st) = graft.streaming.StateStore
+      .readLatest(spark, statePath, Long.MaxValue)
       .getOrElse(sys.error("ingest committed no state version"))
     println(s"[quickstart] ingested: ${st.assets.count()} asset rows, " +
       s"${st.owns.count()} owns edges at $statePath")

@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftSql
 import graft.state.{ChangeSet, Merge, Upserts}
@@ -217,22 +217,15 @@ object GraphOps {
     *                   — `ts` is each tombstone's processing time (the
     *                   set-at-a-time analog of the reference's per-event
     *                   `time.Now()`)
-    */
-  /** Untracked form: the cascade's persisted intermediates stay cached for
-    * the lifetime of the returned plans (the session's cache, until
-    * `clearCache()`). Fine for one-shot queries — the harness clears
-    * between runs — but LOOPS must use [[expireCascadeTracked]] +
-    * `release()` (as Pipeline.fold does) or caches accumulate per call.
-    */
-  def expireCascade(st: State, tombstones: DataFrame): State =
-    expireCascadeTracked(st, tombstones).state
-
-  /** [[expireCascade]], returning the persisted intermediates for release.
-    * `owns2` and `deadAssets` are each referenced by several downstream
-    * plans (quantifier, assets merge, both parent_of join directions) and
-    * Spark does no cross-reference CSE — without the persists the whole
+    *
+    * Returns the persisted intermediates with the state: `owns2` and
+    * `deadAssets` are each referenced by several downstream plans
+    * (quantifier, assets merge, both parent_of join directions) and Spark
+    * does no cross-reference CSE — without the persists the whole
     * resolve→expire-owns→quantifier join tree re-executes per reference
-    * (measured ~3-4x on the cascade queries).
+    * (measured ~3-4x on the cascade queries). They stay cached until
+    * `release()` (as Pipeline.fold calls after checkpointing) or the
+    * session's `clearCache()`.
     */
   def expireCascadeTracked(st: State, tombstones: DataFrame): Cascade = {
     // 1. resolve asset + team; drop no-ops. Per (asset, team): `ts` is
@@ -341,8 +334,4 @@ object GraphOps {
     Cascade(State(assets2, st.teams, owns2, parentOf2), changes,
       Seq(resolved, owns2, deadAssets, touched))
   }
-
-  /** Back-compat form: every tombstone processed at one instant `now`. */
-  def expireCascade(st: State, tombstones: DataFrame, now: Column): State =
-    expireCascade(st, tombstones.withColumn("ts", now))
 }

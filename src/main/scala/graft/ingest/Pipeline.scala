@@ -7,7 +7,7 @@ import graft.graph.GraphOps
 import graft.graph.GraphOps.State
 import graft.normalize.Normalize
 import graft.schema.Schemas
-import graft.state.{ChangeSet, Merge, Upserts}
+import graft.state.{ChangeSet, Upserts}
 import graft.streaming.StateStore
 import graft.temporal.Temporal
 import org.apache.spark.sql.GraftSql
@@ -39,21 +39,12 @@ object Pipeline {
 
   final case class Config(
       awsAccountAnnotationKey: String = "discovery/aws/account",
-      strict: Boolean = true,
-      /** Strict halt-point semantics. `true` (reference parity,
-        * vulcan_test.go:155-165): apply every event BEFORE the first bad
-        * message, persist that prefix, THEN halt. `false`: reject the
-        * whole batch without applying anything.
+      /** Halt at the first bad message (reference parity,
+        * vulcan_test.go:155-165): every event BEFORE it is applied and
+        * persisted, then the fold throws [[StrictHaltException]].
+        * `false` skips bad messages and un-normalizable annotations.
         */
-      strictApplyPrefix: Boolean = true,
-      /** Assert the snapshot tables hold one row per natural key after
-        * each fold. The merge library preserves this by construction
-        * (updates are pre-aggregated per key), so the check is an
-        * O(total-state) audit per batch — wire it on for debugging or
-        * after restoring state of unknown provenance, not in the hot
-        * ingestion path.
-        */
-      verifyStateInvariants: Boolean = false)
+      strict: Boolean = true)
 
   /** Empty snapshot state with the canonical schemas. */
   def emptyState(spark: SparkSession): State = State(
@@ -80,19 +71,11 @@ object Pipeline {
       col("offset"))
 
     // AWS-account parents derived from matching annotations
-    // (reference: main.go:131-138, 223-243)
-    val awsAll = Normalize.matchingAnnotations(b, "annotations", cfg.awsAccountAnnotationKey)
+    // (reference: main.go:131-138, 223-243); an un-normalizable account
+    // id is skipped here — strict mode has already halted before it
+    // (firstInvalid)
+    val aws = Normalize.matchingAnnotations(b, "annotations", cfg.awsAccountAnnotationKey)
       .withColumn("aws_arn", Normalize.normalizeAwsAccountId(col("annotation_value")))
-    if (cfg.strict) {
-      // the reference HALTS the stream on an un-normalizable account id
-      // (main.go:254-262 error propagates through the handler); permissive
-      // mode skips the row instead
-      val bad = awsAll.filter(col("aws_arn").isNull)
-        .select(col("annotation_value")).limit(1).collect()
-      require(bad.isEmpty,
-        s"strict mode: invalid AWS account id format: ${bad.headOption.map(_.getString(0)).getOrElse("")}")
-    }
-    val aws = awsAll
       .filter(col("aws_arn").isNotNull)
       .select(col("type"), col("identifier"), col("aws_arn"), col("proc_ts"))
 
@@ -187,21 +170,6 @@ object Pipeline {
       expireTracked(st, epoch.filter(col("is_nil")))
   }
 
-  /** C6 duplicate-key guard (reference hard-errors on >1 lookup match,
-    * main.go:151-166, 280-282): assert the snapshot tables hold at most
-    * one row per natural key.
-    */
-  def assertNoDuplicates(st: State): Unit = {
-    def check(df: DataFrame, keys: Seq[String], what: String): Unit = {
-      val dups = Merge.duplicateKeys(df, keys).limit(1).collect()
-      require(dups.isEmpty, s"duplicate $what key: ${dups.mkString(",")}")
-    }
-    check(st.assets, Seq("type", "identifier"), "asset")
-    check(st.teams, Seq("identifier"), "team")
-    check(st.owns, Seq("team_id", "asset_id"), "owns")
-    check(st.parentOf, Seq("parent_id", "child_id"), "parent_of")
-  }
-
   /** The key sets a decoded batch can possibly touch in each snapshot
     * table, derived from the batch alone — the read-side contract that
     * lets [[StateStore.readPartialLatest]] load only the buckets a
@@ -287,16 +255,16 @@ object Pipeline {
 
   /** Strict-mode halt (reference: the handler error stops the consumer at
     * the FIRST bad message, main.go:254-262 / vulcan_test.go:155-165).
-    * When `prefix` is set, it holds the state after applying every event
-    * BEFORE `haltOffset` — the reference keeps prior good output — and the
-    * sink persists it before propagating the halt. Extends
+    * `prefix` holds the state after applying every event BEFORE
+    * `haltOffset` — the reference keeps prior good output — and the sink
+    * persists it before propagating the halt. Extends
     * IllegalArgumentException so sink error mapping classifies it
     * non-retryable (the same message fails identically forever).
     */
   final class StrictHaltException(
       msg: String,
       val haltOffset: Long,
-      val prefix: Option[(State, ChangeSet)]) extends IllegalArgumentException(msg)
+      val prefix: (State, ChangeSet)) extends IllegalArgumentException(msg)
 
   /** [[fold]], also returning the union of every epoch's changed natural
     * keys — the contract the partition-limited state sink needs. The
@@ -350,12 +318,6 @@ object Pipeline {
         .withColumn("proc_ts", timestamp_seconds(lit(baseEpochSecs) + col("offset")))
         .persist()
 
-      // the events handed to run() are PRE-VALIDATED by firstInvalid (the
-      // full batch when it found nothing, the clean prefix when it halted),
-      // so the per-epoch strict re-check inside refresh — one blocking
-      // driver action per epoch — is provably a no-op; drop it
-      val epochCfg = cfg.copy(strict = false)
-
       /** Apply all epochs of `evs` (already segment-epoched). `track`
         * forces change-set materialization even on the plain fold path —
         * the strict-halt prefix is always tracked, because the sink
@@ -380,7 +342,7 @@ object Pipeline {
           // run epochs are single-sided by construction (odd=refresh,
           // even=tombstone): skip the other side's whole operator chain
           val side = if (e % 2 == 1) RefreshEpoch else TombstoneEpoch
-          val casc = applyEpochTracked(st, evs.filter(col("__epoch") === e), epochCfg, side)
+          val casc = applyEpochTracked(st, evs.filter(col("__epoch") === e), cfg, side)
           // truncate lineage: each epoch's state feeds the next
           // (measured twice: parallelizing these four jobs does NOT help —
           // the per-epoch wall-clock sits in each plan's sequential AQE
@@ -412,23 +374,18 @@ object Pipeline {
               casc.changes.localCheckpointFused()))
           casc.release()
         }
-        if (cfg.verifyStateInvariants)
-          tagged(spark, "fold:dup-guard")(assertNoDuplicates(st))
         (st, changes)
       }
 
       if (cfg.strict) {
         tagged(spark, "fold:strict-scan")(firstInvalid(decoded, cfg)) match {
-          case Some((off, why)) if cfg.strictApplyPrefix =>
+          case Some((off, why)) =>
             // reference parity: everything BEFORE the first bad message is
             // applied, then the stream halts. Always tracked: the sink
             // persists this prefix through the partition-limited store.
             val prefix = run(events.filter(col("offset") < off), track = true)
             throw new StrictHaltException(
-              s"strict mode: $why at offset $off (valid prefix applied)", off, Some(prefix))
-          case Some((off, why)) =>
-            throw new StrictHaltException(
-              s"strict mode: $why at offset $off (batch rejected)", off, None)
+              s"strict mode: $why at offset $off (valid prefix applied)", off, prefix)
           case None => ()
         }
       }

@@ -28,21 +28,13 @@ final case class ChangeSet(
 
   /** Eagerly materialize + truncate lineage (the frames are batch-key
     * sized; callers checkpoint before releasing the caches the plans
-    * reference).
-    */
-  def localCheckpoint(): ChangeSet = ChangeSet(
-    assets.localCheckpoint(true),
-    teams.localCheckpoint(true),
-    owns.localCheckpoint(true),
-    parentOf.localCheckpoint(true))
-
-  /** [[localCheckpoint]] as ONE driver round trip instead of four: all
-    * key columns are strings, so the four frames union into a single
-    * tagged frame, that union checkpoints once, and the per-table frames
-    * re-emerge as lazy filters over the checkpointed rows. Same contract
-    * (eager, source batch scanned exactly once, survives cache release);
-    * on the streaming hot path the three saved round trips are fixed
-    * per-micro-batch latency.
+    * reference) in ONE driver round trip instead of four: all key columns
+    * are strings, so the four frames union into a single tagged frame,
+    * that union checkpoints once, and the per-table frames re-emerge as
+    * lazy filters over the checkpointed rows. The source batch is scanned
+    * exactly once and the result survives cache release; on the streaming
+    * hot path the three saved round trips are fixed per-micro-batch
+    * latency.
     */
   def localCheckpointFused(): ChangeSet = {
     import org.apache.spark.sql.functions.{col, lit}

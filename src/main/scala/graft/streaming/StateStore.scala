@@ -76,38 +76,22 @@ object StateStore {
     *                predecessor with a DIFFERENT count is refused — the
     *                inherited pointers would be bucketed under the old
     *                modulus (rebucket via a full write instead).
+    *
+    * A manifest appears at its final path only whole: the commit writes
+    * it to a writer-unique tmp and publishes it in one atomic no-replace
+    * step, `link(2)` on `file://` and no-replace `rename` on HDFS
+    * ([[publishManifestAtomic]]).
     */
-  /** `remnantGraceMs` — the cross-process remnant-reclaim LEASE: a
-    * terminator-less manifest younger than this is refused (retryably)
-    * instead of overwritten, because without a clock a fresh remnant is
-    * indistinguishable from a FOREIGN writer's in-flight create on a
-    * filesystem without atomic exclusive create. A healthy manifest
-    * write is milliseconds, so any remnant older than the grace window
-    * really is a crash; the residual race now needs a foreign writer
-    * stalled MID-SMALL-FILE-WRITE for the whole window and resuming
-    * inside the reclaim's re-check gap — pathological, vs r11's
-    * bare millisecond window. The horizon must dominate writer-vs-
-    * filesystem clock skew; 60 s does on any sane deployment.
+  final case class Config(buckets: Int = 32)
+
+  /** How long a terminator-less file at a manifest's final path is
+    * refused before the commit deletes it and publishes over it. Only a
+    * writer that predates the atomic publish can leave one, and a fresh
+    * one may still be such a writer mid-create; a healthy manifest write
+    * takes milliseconds, and 60 s dominates writer-vs-filesystem clock
+    * skew.
     */
-  /** `atomicPublish` — opt-in ATOMIC manifest publication for
-    * filesystems with an atomic no-replace primitive (r13, closing the
-    * lease/grace protocol's documented pathological residual where the
-    * FS supports it): the complete manifest (END terminator included) is
-    * written to a writer-unique tmp and published in ONE atomic
-    * operation — `link(2)` via `Files.createLink` on a local filesystem,
-    * no-replace `rename` on HDFS — so a PARTIAL manifest can never
-    * appear at the final path and a stalled writer's resume can never
-    * clobber a committed one (its publish fails EEXIST and it loses
-    * retryably). A terminator-less file at the final path is then, by
-    * construction, a crashed LEGACY (non-atomic) writer's remnant; it is
-    * still given the grace window (mixed-deployment defense) and then
-    * deleted and re-raced atomically. The impossible-by-construction
-    * guarantee holds when every writer of the store runs atomic mode;
-    * keep the default (lease/grace) on object stores, where rename is a
-    * non-atomic copy.
-    */
-  final case class Config(buckets: Int = 32, remnantGraceMs: Long = 60000L,
-      atomicPublish: Boolean = false)
+  val RemnantGraceMs = 60000L
 
   private final case class TableSpec(name: String, schema: StructType,
       /** columns whose hash places a row in its bucket — a deterministic
@@ -250,9 +234,17 @@ object StateStore {
 
   /** Plain-text manifest: `buckets=N`, one `table pt version` line per
     * live bucket, a `crc=<crc32 hex>` integrity line over everything
-    * above it, then the `END` terminator (a crash mid-write leaves no END
-    * and the version is treated as uncommitted).
+    * above it, then the `END` terminator (a file without END is an
+    * uncommitted remnant).
     */
+  private[streaming] def renderManifest(cfg: Config, pointers: Pointers,
+      schemas: Map[String, StructType], dirs: Map[Long, String],
+      keys: Map[String, Seq[String]],
+      sigs: Map[String, Map[Int, Long]]): String = {
+    val body = manifestBody(cfg, pointers, schemas, dirs, keys, sigs)
+    body + s"crc=${crcOf(body)}\nEND\n"
+  }
+
   private def manifestBody(cfg: Config, pointers: Pointers,
       schemas: Map[String, StructType], dirs: Map[Long, String],
       keys: Map[String, Seq[String]],
@@ -291,42 +283,21 @@ object StateStore {
     f"${c.getValue}%08x"
   }
 
-  /** Write the manifest for `version`. `overwrite = false` is the commit
-    * CAS: exactly ONE racing writer's create succeeds on a correct
-    * FileSystem; the loser sees the winner's file (see [[write]]).
-    */
-  def writeManifest(spark: SparkSession, statePath: String, version: Long,
-      cfg: Config, pointers: Pointers, overwrite: Boolean = true,
-      schemas: Map[String, StructType] = Map.empty,
-      dirs: Map[Long, String] = Map.empty,
-      keys: Map[String, Seq[String]] = Map.empty,
-      sigs: Map[String, Map[Int, Long]] = Map.empty): Unit = {
-    val (fs, _) = fsFor(spark, statePath)
-    val body = manifestBody(cfg, pointers, schemas, dirs, keys, sigs)
-    val out = fs.create(manifestPath(statePath, version), overwrite)
-    try out.write((body + s"crc=${crcOf(body)}\nEND\n").getBytes("UTF-8"))
-    finally out.close()
-  }
-
-  /** Atomic no-replace manifest publication ([[Config.atomicPublish]]):
-    * write the COMPLETE manifest to a writer-unique tmp, then publish in
-    * one atomic operation — `Files.createLink` (POSIX `link(2)`, fails
-    * EEXIST atomically) on a local filesystem, no-replace `rename` on
-    * HDFS. Returns false when the destination already exists (lost the
-    * publish race — the caller re-classifies the winner). The tmp is
-    * removed on every path; a crash between write and publish leaves
-    * only a small dot-tmp inside the version dir, reclaimed with the
-    * dir when prune passes it.
+  /** Atomic no-replace manifest publication: write the COMPLETE manifest
+    * to a writer-unique tmp, then publish in one atomic operation —
+    * `Files.createLink` (POSIX `link(2)`, fails EEXIST atomically) on a
+    * local filesystem, no-replace `rename` on HDFS. Returns false when
+    * the destination already exists (lost the publish race — the caller
+    * re-classifies the winner). The tmp is removed on every path, a
+    * failed write or publish included; a crash between write and publish
+    * leaves only a small dot-tmp inside the version dir, reclaimed with
+    * the dir when prune passes it.
     */
   private def publishManifestAtomic(spark: SparkSession, statePath: String,
-      version: Long, cfg: Config, pointers: Pointers,
-      schemas: Map[String, StructType], dirs: Map[Long, String],
-      keys: Map[String, Seq[String]],
-      sigs: Map[String, Map[Int, Long]]): Boolean = {
+      version: Long, text: String): Boolean = {
     val (fs, _) = fsFor(spark, statePath)
     val dst = manifestPath(statePath, version)
-    val body = manifestBody(cfg, pointers, schemas, dirs, keys, sigs)
-    val bytes = (body + s"crc=${crcOf(body)}\nEND\n").getBytes("UTF-8")
+    val bytes = text.getBytes("UTF-8")
     val tmp = new Path(dst.getParent,
       s".MANIFEST.tmp-${java.util.UUID.randomUUID().toString.take(12)}")
     val scheme = Option(dst.toUri.getScheme).getOrElse(fs.getScheme)
@@ -334,19 +305,19 @@ object StateStore {
       val tmpNio = java.nio.file.Paths.get(tmp.toUri.getPath)
       val dstNio = java.nio.file.Paths.get(dst.toUri.getPath)
       java.nio.file.Files.createDirectories(dstNio.getParent)
-      java.nio.file.Files.write(tmpNio, bytes)
-      try { java.nio.file.Files.createLink(dstNio, tmpNio); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      finally { java.nio.file.Files.deleteIfExists(tmpNio): Unit }
+      try {
+        java.nio.file.Files.write(tmpNio, bytes)
+        try { java.nio.file.Files.createLink(dstNio, tmpNio); true }
+        catch { case _: java.nio.file.FileAlreadyExistsException => false }
+      } finally java.nio.file.Files.deleteIfExists(tmpNio): Unit
     } else {
       fs.mkdirs(dst.getParent)
-      val out = fs.create(tmp, false)
-      try out.write(bytes) finally out.close()
-      val ok =
+      try {
+        val out = fs.create(tmp, false)
+        try out.write(bytes) finally out.close()
         try fs.rename(tmp, dst)
         catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
-      if (!ok) fs.delete(tmp, false): Unit
-      ok
+      } finally fs.delete(tmp, false): Unit
     }
   }
 
@@ -794,13 +765,14 @@ object StateStore {
     *     inherited pointers were computed against a superseded head would
     *     silently drop the interleaver's changes (lost update), so it
     *     fails with a retryable [[ConcurrentWriteException]] instead;
-    *  2. the version's manifest is created EXCLUSIVELY (overwrite=false)
-    *     — of two racers on the same version, exactly one create
-    *     succeeds. The loser (or a redelivered batch) then compares its
-    *     intended manifest against the winner's: identical content is the
-    *     deterministic at-least-once redelivery case and succeeds
-    *     idempotently; different content is a genuine second writer and
-    *     fails retryably.
+    *  2. the version's manifest is published atomically and without
+    *     replace ([[publishManifestAtomic]]) — of two racers on the same
+    *     version, exactly one publish succeeds. The loser (or a
+    *     redelivered batch) then compares its intended manifest against
+    *     the winner's: identical content is the deterministic
+    *     at-least-once redelivery case and succeeds idempotently;
+    *     different content is a genuine second writer and fails
+    *     retryably.
     *
     * Data isolation: [[stageAndCommit]] stages its table dirs under a
     * writer-unique `.staging-v<version>-<token>` dir and commit promotes
@@ -812,11 +784,12 @@ object StateStore {
     * exists anywhere on the commit path). A losing or redelivered
     * attempt's own staging/promoted dirs are deleted; dirs orphaned by a
     * crashed attempt are unreferenced by every manifest and reclaimed by
-    * prune. A manifest file with no END terminator is a
-    * crash-during-commit remnant (never readable) and is reclaimed in
-    * place after a committedness re-check. The equality check compares
-    * pointers AND (r11) per-bucket CONTENT SIGNATURES when both sides
-    * carry them ([[Manifest.sigs]]): a deterministic redelivery
+    * prune. A manifest file with no END terminator (only a writer that
+    * predates the atomic publish can leave one) is never readable; it is
+    * refused for [[RemnantGraceMs]], then deleted and published over.
+    * The equality check compares pointers AND (r11) per-bucket CONTENT
+    * SIGNATURES when both sides carry them ([[Manifest.sigs]]): a
+    * deterministic redelivery
     * recomputes identical signatures and succeeds idempotently, while a
     * DIFFERENT fold racing the same version — even onto the same bucket
     * set, where pointer maps alone are blind — loses retryably instead
@@ -836,12 +809,8 @@ object StateStore {
     // JVM-level serialization of the decision-and-publish window per
     // store root: concurrent writers IN ONE DRIVER (the common topology —
     // several streams/threads maintaining one store; StoreConcurrencySpec
-    // soaks it) otherwise race the exists→classify→write steps — e.g. a
-    // racer reading a half-written in-flight manifest classifies it as a
-    // crash remnant and overwrites the winner in place (a measured lost
-    // update, surfaced by the r11 soak). The CAS legs stay — they carry
-    // the CROSS-PROCESS contract, whose residual window is the remnant
-    // reclassification below (see that branch's note).
+    // soaks it) otherwise race the exists→classify→publish steps. The
+    // CAS legs stay — they carry the CROSS-PROCESS contract.
     commitLockFor(statePath).synchronized {
       commitLocked(spark, statePath, version, cfg, pointers, expectedPrev,
         staging, schemas, dirs, dirName, keys, sigs)
@@ -949,100 +918,51 @@ object StateStore {
         promoted = Some(dest)
       }
     }
-    if (cfg.atomicPublish) {
-      // r13 atomic-publish CAS: the manifest only ever APPEARS complete
-      // (one hardlink/rename of a fully-written tmp), so there is no
-      // re-check-to-write gap to race — a publish either lands first or
-      // fails EEXIST and the loop re-classifies the winner. A
-      // terminator-less file at the final path is a crashed LEGACY
-      // writer's remnant by construction; it still gets the grace window
-      // (mixed-deployment defense), then is deleted and re-raced.
-      var attempts = 0
-      while (true) {
-        attempts += 1
-        if (attempts > 5) {
-          dropStaging()
-          throw new ConcurrentWriteException(
-            s"v$version under $statePath: lost the atomic manifest publish " +
-              s"$attempts times in a row without a readable winner appearing — " +
-              "another writer is churning this version; retry the fold")
-        }
-        if (readManifest(spark, statePath, version).isDefined) {
-          if (!winnerEquals()) loseTo("atomic publish raced")
-          dropStaging() // identical winner: idempotent redelivery
-          return
-        }
-        if (fs.exists(p)) {
-          val age = System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime
-          if (age < cfg.remnantGraceMs) {
-            dropStaging()
-            throw new ConcurrentWriteException(
-              s"terminator-less manifest for v$version under $statePath is " +
-                s"${age}ms old — younger than the ${cfg.remnantGraceMs}ms remnant " +
-                "grace window; a LEGACY (non-atomic) writer may be mid-commit; " +
-                "retry after the window")
-          }
-          fs.delete(p, false): Unit // aged legacy remnant: clear, then re-race
-        }
-        if (publishManifestAtomic(spark, statePath, version, cfg, pointers,
-            schemas, dirs, keys, sigs)) return
-        // lost the EEXIST race: loop re-reads the winner
-      }
-    }
-    if (fs.exists(p)) {
-      // remnant manifest (no END): not committed, reclaim in place.
-      // Re-check committedness right before overwriting — in-JVM racers
-      // are excluded by the commit lock, but a CROSS-PROCESS writer may
-      // have completed this very file between the classification above
-      // and here; overwriting a now-committed manifest would drop the
-      // winner. (The residual cross-process window is this re-check-to-
-      // write gap on a filesystem without atomic exclusive create —
-      // reachable only with a crash remnant AND a concurrent foreign
-      // writer inside a millisecond window; named in SURVEY §5.)
-      if (readManifest(spark, statePath, version).isDefined) {
-        if (!winnerEquals()) loseTo("remnant completed by another writer")
+    // the manifest only ever APPEARS complete (one hardlink/rename of a
+    // fully-written tmp), so there is no re-check-to-write gap to race —
+    // a publish either lands first or fails EEXIST and the loop
+    // re-classifies the winner
+    val text = renderManifest(cfg, pointers, schemas, dirs, keys, sigs)
+    var attempts = 0
+    while (true) {
+      attempts += 1
+      if (attempts > 5) {
         dropStaging()
-      } else {
-        // r12 lease/grace: a YOUNG terminator-less manifest may be a
-        // cross-process writer's IN-FLIGHT create, not a crash — refuse
-        // retryably until it ages past the grace window (a healthy
-        // manifest write is ms; see Config.remnantGraceMs). This closes
-        // the r11 residual to the pathological stalled-foreign-writer
-        // case; ClusterProbe's two-JVM remnant legs pin both halves.
+        throw new ConcurrentWriteException(
+          s"v$version under $statePath: lost the atomic manifest publish " +
+            s"$attempts times in a row without a readable winner appearing — " +
+            "another writer is churning this version; retry the fold")
+      }
+      if (readManifest(spark, statePath, version).isDefined) {
+        if (!winnerEquals()) loseTo("atomic publish raced")
+        dropStaging() // identical winner: idempotent redelivery
+        return
+      }
+      if (fs.exists(p)) {
+        // a terminator-less file: a pre-upgrade writer's crash remnant, or
+        // that writer still mid-create — refuse it while it is young
         val age = System.currentTimeMillis() - fs.getFileStatus(p).getModificationTime
-        if (age < cfg.remnantGraceMs) {
+        if (age < RemnantGraceMs) {
           dropStaging()
           throw new ConcurrentWriteException(
             s"terminator-less manifest for v$version under $statePath is " +
-              s"${age}ms old — younger than the ${cfg.remnantGraceMs}ms remnant " +
-              "grace window, so it may be a cross-process writer mid-commit " +
-              "rather than a crash remnant; retry after the window")
+              s"${age}ms old — younger than the ${RemnantGraceMs}ms remnant " +
+              "grace window; a writer may be mid-commit; retry after the window")
         }
-        writeManifest(spark, statePath, version, cfg, pointers, overwrite = true,
-          schemas = schemas, dirs = dirs, keys = keys, sigs = sigs)
+        fs.delete(p, false): Unit // aged remnant: clear, then re-race
       }
-    } else {
-      // CAS leg 2: exclusive create — of two racers, exactly one succeeds
-      try writeManifest(spark, statePath, version, cfg, pointers, overwrite = false,
-        schemas = schemas, dirs = dirs, keys = keys, sigs = sigs)
-      catch {
-        case e: java.io.IOException =>
-          // lost the exclusive-create race in the exists-check window:
-          // this attempt's promoted dir is garbage either way (the
-          // winner's manifest records the WINNER's dir token)
-          if (fs.exists(p)) {
-            if (!winnerEquals()) loseTo("create raced")
-            dropStaging()
-          } else {
-            // genuine filesystem failure (manifest still absent): the
-            // just-promoted d-<token> dir is unreferenced garbage and a
-            // retrying writer stages a FRESH token — reclaim now like
-            // every other failure path, or each retry leaks a dir that
-            // lingers until the version ages below prune's keepFrom
-            dropStaging()
+      val published =
+        try publishManifestAtomic(spark, statePath, version, text)
+        catch {
+          case e: java.io.IOException =>
+            // the tmp is already gone; with no manifest at the final path
+            // the promoted d-<token> dir is unreferenced garbage, and a
+            // retrying writer stages a FRESH token — reclaim it now
+            if (!fs.exists(p)) dropStaging()
             throw e
-          }
-      }
+        }
+      if (published) return
+      // lost the EEXIST race: loop re-reads the winner
     }
   }
 

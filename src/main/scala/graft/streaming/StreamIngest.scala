@@ -208,8 +208,8 @@ object StreamIngest {
       // message was applied — persist that prefix as this batch's
       // version, THEN propagate the (non-retryable) halt. Redelivery
       // recomputes the identical prefix and overwrites idempotently.
-      case e: Pipeline.StrictHaltException if e.prefix.isDefined =>
-        val (st, ch) = e.prefix.get
+      case e: Pipeline.StrictHaltException =>
+        val (st, ch) = e.prefix
         retrying(attempts = 3)(
           StateStore.write(spark, statePath, batchId, st, Some(ch), store, loaded))
         throw e
@@ -223,19 +223,4 @@ object StreamIngest {
     // consumers poll with lag — see keepVersions)
     StateStore.prune(spark, statePath, keepFrom = batchId - keepVersions)
   }
-
-  /** Full state at one committed version (resolved via its manifest). */
-  def readState(spark: SparkSession, statePath: String, version: Long): State =
-    StateStore.read(spark, statePath, version)
-
-  /** Committed (manifest-complete) version ids with id <= maxVersion — a
-    * half-written v<batchId> from a crashed attempt has no complete
-    * manifest and is never listed.
-    */
-  def listVersions(spark: SparkSession, statePath: String, maxVersion: Long): Seq[Long] =
-    StateStore.committedVersions(spark, statePath, maxVersion)
-
-  /** Latest committed state with id <= maxVersion. */
-  def loadLatestState(spark: SparkSession, statePath: String, maxVersion: Long): Option[State] =
-    StateStore.readLatest(spark, statePath, maxVersion).map(_._2)
 }

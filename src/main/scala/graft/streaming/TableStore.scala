@@ -10,7 +10,8 @@ import StateStore.{Config, Manifest, manifestAt}
   * sets, so long-lived derived artifacts (the trained vector indexes,
   * see [[graft.ext.VectorIndex]]) get the same durability contract as
   * the graph state: writer-unique staging dirs promoted under a
-  * crc32-checked manifest committed with an exclusive create, bucket
+  * crc32-checked manifest published whole by an atomic no-replace
+  * link or rename, bucket
   * pointers inherited across versions, prune-reclaimable garbage.
   *
   * The write model matches the store's append-only reverse index

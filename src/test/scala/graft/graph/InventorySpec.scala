@@ -81,7 +81,7 @@ class InventorySpec extends AnyFunSuite with SparkSpec with Matchers {
     val rows = graft.sources.Fixtures.loadJson(spark,
       getClass.getResource("/fixtures/scenario.json").getPath)
     graft.streaming.StreamIngest.applyBatch(rows, 0L, stateDir, graft.ingest.Pipeline.Config(), 1704067200L)
-    val full = graft.streaming.StreamIngest.loadLatestState(spark, stateDir, Long.MaxValue).get
+    val full = graft.streaming.StateStore.readLatest(spark, stateDir, Long.MaxValue).get._2
 
     val id = "Hostname/web0.example.org"
     val p = Inventory.lookup(spark, stateDir, assetIds = Seq(id), teamIds = Seq("alpha")).get

@@ -71,16 +71,10 @@ class PipelineStrictSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("strict halt applies the valid prefix before the first bad message") {
     val e = intercept[Pipeline.StrictHaltException](Pipeline.replay(spark, midBadBatch))
     e.haltOffset shouldBe 2L
-    val (st, _) = e.prefix.get
+    val (st, _) = e.prefix
     // w0/w1 (before the bad offset) applied; w3 (after it) NOT applied
     st.assets.collect().map(_.getAs[String]("identifier")).toSet shouldBe
       Set("w0.example.org", "w1.example.org")
-  }
-
-  test("whole-batch reject stays available as strictApplyPrefix = false") {
-    val e = intercept[Pipeline.StrictHaltException](Pipeline.replay(
-      spark, midBadBatch, Pipeline.Config(strictApplyPrefix = false)))
-    e.prefix shouldBe None
   }
 
   test("the streaming sink persists the valid prefix before halting") {
@@ -89,7 +83,7 @@ class PipelineStrictSpec extends AnyFunSuite with SparkSpec with Matchers {
       graft.streaming.StreamIngest.applyBatch(
         midBadBatch, 0L, stateDir, Pipeline.Config(), 1704067200L))
     // prior-good state survives the halt, like the reference's PUTs do
-    val st = graft.streaming.StreamIngest.readState(spark, stateDir, 0L)
+    val st = graft.streaming.StateStore.read(spark, stateDir, 0L)
     st.assets.collect().map(_.getAs[String]("identifier")).toSet shouldBe
       Set("w0.example.org", "w1.example.org")
   }
@@ -112,7 +106,7 @@ class PipelineStrictSpec extends AnyFunSuite with SparkSpec with Matchers {
       graft.streaming.StreamIngest.applyBatch(
         batch1, 1L, stateDir, Pipeline.Config(), 1704067300L))
     // v1 = batch-0 state (inherited, untouched buckets) + batch-1 prefix
-    val st = graft.streaming.StreamIngest.readState(spark, stateDir, 1L)
+    val st = graft.streaming.StateStore.read(spark, stateDir, 1L)
     st.assets.collect().map(_.getAs[String]("identifier")).toSet shouldBe
       Set("w0.example.org", "w1.example.org")
   }

@@ -279,7 +279,7 @@ class StoreCdcSpec extends AnyFunSuite with SparkSpec with Matchers {
     } finally q.stop()
   }
 
-  test("CDC across a rebucket: one full-table batch, exact as a multiset delta") {
+  test("CDC across a rebucket: moved rows cancel in their slice, the rebucket batch is empty") {
     // a stream tailing a store across a TableStore.rebucket (modulus
     // change) must NOT stop or mis-emit. Contract: slices pair bucket
     // residues mod gcd(8, 32), so a row that only moved buckets cancels

@@ -52,6 +52,6 @@ class CodegenReuseSpec extends AnyFunSuite with SparkSpec with Matchers {
     info(s"classes compiled per refresh trigger: ${perTrigger.mkString(", ")}")
     perTrigger.last shouldBe 0L
     // the triggers really folded: the hosts plus their four AWS accounts
-    StreamIngest.readState(spark, stateDir, 3L).assets.count() shouldBe Assets + 4L
+    StateStore.read(spark, stateDir, 3L).assets.count() shouldBe Assets + 4L
   }
 }

@@ -12,9 +12,10 @@ import java.sql.Timestamp
 
 /** The store's crash matrix (VERDICT r8 next #3): a kill point at EACH
   * step of the commit path — staging data write, promote rename,
-  * manifest create, torn manifest body, prune's reclaim delete — must
-  * leave the PREDECESSOR version fully readable, and a retried fold
-  * must converge to content identical to a never-faulted control store.
+  * manifest tmp create, torn manifest tmp, manifest publish rename,
+  * prune's reclaim delete — must leave the PREDECESSOR version fully
+  * readable, and a retried fold must converge to content identical to a
+  * never-faulted control store.
   * Plus the prune-vs-pinned-reader leg: a batch reader's pin is a
   * retention watermark prune may never reclaim past.
   *
@@ -131,33 +132,40 @@ class FaultInjectionSpec extends AnyFunSuite with SparkSpec with Matchers
     checkRecovery(root)
   }
 
+  /** What a failed manifest publish must leave under `v1`: no promoted
+    * `d-<token>` dir, no `.MANIFEST.tmp-*`, nothing at the final path.
+    */
+  private def v1Clean(root: String): Unit = {
+    val v1 = new java.io.File(root.stripPrefix("faulty://"), "v1")
+    val left = Option(v1.list()).getOrElse(Array.empty[String])
+    left.filter(n => n.startsWith("d-") || n.startsWith(".MANIFEST.tmp")) shouldBe empty
+    left should not contain "MANIFEST"
+  }
+
   test("kill point: manifest create fails after promote (no orphan dir left)") {
     val root = tmp(); seedV0(root)
-    FaultyFs.arm("create", "v1/MANIFEST")
+    FaultyFs.arm("create", "v1/.MANIFEST.tmp")
     intercept[java.io.IOException] { writeV1(root) }
-    // the r8 advisory fix: the just-promoted d-<token> dir must have been
-    // reclaimed on the rethrow path, not left to age out under prune
-    val v1 = new java.io.File(root.stripPrefix("faulty://"), "v1")
-    Option(v1.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.startsWith("d-")) shouldBe empty
+    v1Clean(root)
+    checkRecovery(root)
+  }
+
+  test("kill point: manifest publish rename fails (no orphan dir or tmp left)") {
+    val root = tmp(); seedV0(root)
+    FaultyFs.arm("rename", "v1/.MANIFEST.tmp")
+    intercept[java.io.IOException] { writeV1(root) }
+    v1Clean(root)
     checkRecovery(root)
   }
 
   test("kill point: torn manifest body (crash mid-write, no END)") {
     val root = tmp(); seedV0(root)
-    FaultyFs.armTorn("v1/MANIFEST", bytes = 24)
-    // the torn CAS create leaves a partial manifest; the commit path
-    // classifies it retryably (the remnant is indistinguishable from a
-    // racer's in-flight create at this point) — either way it throws
-    intercept[Exception] { writeV1(root) }
-    // the remnant file exists but has no END terminator: never readable,
-    // never listed as committed
-    val remnant = new java.io.File(root.stripPrefix("faulty://"), "v1/MANIFEST")
-    remnant should exist
+    FaultyFs.armTorn("v1/.MANIFEST.tmp", bytes = 24)
+    intercept[java.io.IOException] { writeV1(root) }
+    // the torn bytes stay in the tmp, which is deleted: no remnant to age
+    // out, so the retried fold commits at once
+    v1Clean(root)
     StateStore.readManifest(spark, root, 1L) shouldBe None
-    // age the remnant past the r12 reclaim grace window (a fresh one is
-    // refused retryably — it could be a foreign writer mid-commit)
-    remnant.setLastModified(System.currentTimeMillis() - 120000L)
     checkRecovery(root)
   }
 

@@ -55,7 +55,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       query.processAllAvailable()
     } finally query.stop()
 
-    val streamed = StreamIngest.loadLatestState(spark, stateDir, Long.MaxValue).get
+    val streamed = StateStore.readLatest(spark, stateDir, Long.MaxValue).get._2
     val path = getClass.getResource("/fixtures/scenario.json").getPath
     val batch = Pipeline.replay(spark, Fixtures.loadJson(spark, path))
     collectShape(streamed) shouldBe collectShape(batch)
@@ -84,7 +84,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     paced.max should be <= 7L
     paced.length should be >= 3
 
-    val streamed = StreamIngest.loadLatestState(spark, stateDir, Long.MaxValue).get
+    val streamed = StateStore.readLatest(spark, stateDir, Long.MaxValue).get._2
     val batch = Pipeline.replay(spark, Fixtures.loadJson(spark, fixture))
     collectShape(streamed) shouldBe collectShape(batch)
   }
@@ -110,7 +110,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
       .map(m => Option(m.getMessage).getOrElse("")).mkString(" | ") should include("strict")
 
-    val streamed = StreamIngest.loadLatestState(spark, stateDir, Long.MaxValue).get
+    val streamed = StateStore.readLatest(spark, stateDir, Long.MaxValue).get._2
     val prefix = Pipeline.replay(spark,
       Fixtures.loadJson(spark, fixture).filter($"offset" < 2))
     collectShape(streamed) shouldBe collectShape(prefix)
@@ -140,7 +140,7 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
       q2.processAllAvailable()
     } finally q2.stop()
 
-    val streamed = StreamIngest.loadLatestState(spark, stateDir, Long.MaxValue).get
+    val streamed = StateStore.readLatest(spark, stateDir, Long.MaxValue).get._2
     val path = getClass.getResource("/fixtures/scenario.json").getPath
     val batch = Pipeline.replay(spark, Fixtures.loadJson(spark, path))
     collectShape(streamed) shouldBe collectShape(batch)
@@ -152,11 +152,11 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     val cfg = Pipeline.Config()
     StreamIngest.applyBatch(batch1.toDF(), 0L, stateDir, cfg, 1704067200L)
     StreamIngest.applyBatch(batch2.toDF(), 1L, stateDir, cfg, 1704067200L)
-    val once = collectShape(StreamIngest.readState(spark, stateDir, 1L))
+    val once = collectShape(StateStore.read(spark, stateDir, 1L))
     // redelivery: the driver crashed before committing the checkpoint and
     // batch 1 arrives again — the rebuild must not double-apply
     StreamIngest.applyBatch(batch2.toDF(), 1L, stateDir, cfg, 1704067200L)
-    val twice = collectShape(StreamIngest.readState(spark, stateDir, 1L))
+    val twice = collectShape(StateStore.read(spark, stateDir, 1L))
     twice shouldBe once
   }
 
@@ -171,9 +171,9 @@ class StreamingSpec extends AnyFunSuite with SparkSpec with Matchers {
     // only committed READ POINTS (older versions lose their manifests; their
     // still-referenced bucket dirs survive as backing files)
     val n = batches.length.toLong // 3 batches => keep v1 (predecessor) + v2
-    StreamIngest.listVersions(spark, stateDir, Long.MaxValue) shouldBe Seq(n - 2, n - 1)
+    StateStore.committedVersions(spark, stateDir, Long.MaxValue) shouldBe Seq(n - 2, n - 1)
     // the latest state still reads complete through inherited pointers
-    val streamed = collectShape(StreamIngest.readState(spark, stateDir, n - 1))
+    val streamed = collectShape(StateStore.read(spark, stateDir, n - 1))
     val path = getClass.getResource("/fixtures/scenario.json").getPath
     streamed shouldBe collectShape(Pipeline.replay(spark, Fixtures.loadJson(spark, path)))
   }

@@ -372,7 +372,7 @@ class TableStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
       Map(Some("a") -> 1L, Some("b") -> 2L)
   }
 
-  test("diff across a rebucket boundary stays exact (global exceptAll, full read)") {
+  test("diff across a rebucket boundary stays exact and minimal (slices by the moduli's gcd)") {
     // 8 -> 32 slices by gcd 8, 8 -> 12 by gcd 4: either way a row's old
     // and new buckets share a slice, so the diff stays exact and minimal
     for (to <- Seq(32, 12)) withClue(s"rebucket 8 -> $to: ") {

@@ -47,13 +47,12 @@ object ConcurrencySoak {
   private val KeySpace = 20L
 
   def run(spark: SparkSession, root: String, threads: Int,
-      targetVersions: Long,
-      cfg: StateStore.Config = StateStore.Config()): Result = {
+      targetVersions: Long): Result = {
     import spark.implicits._
     def frame(rows: Map[Long, String]) =
       rows.toSeq.sortBy(_._1).toDF("k", "v")
     val init = (0L until KeySpace).map(k => k -> "init").toMap
-    TableStore.write(spark, root, 0L, Seq(spec), Map("t" -> frame(init)), cfg = cfg)
+    TableStore.write(spark, root, 0L, Seq(spec), Map("t" -> frame(init)))
 
     val winners = new java.util.concurrent.ConcurrentHashMap[Long, (Int, Op)]
     val falseSuccesses = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -98,14 +97,13 @@ object ConcurrencySoak {
             try {
               op match {
                 case FullOp(rows) =>
-                  TableStore.write(spark, root, v, Seq(spec), Map("t" -> frame(rows)), cfg = cfg)
+                  TableStore.write(spark, root, v, Seq(spec), Map("t" -> frame(rows)))
                 case UpsertOp(rows) =>
                   TableStore.write(spark, root, v, Seq(spec), Map("t" -> frame(rows)),
-                    delta = true, cfg = cfg)
+                    delta = true)
                 case DeleteOp(keys) =>
                   TableStore.write(spark, root, v, Seq(spec), Map.empty,
-                    delta = true, deletes = Map("t" -> keys.toSeq.toDF("k")),
-                    cfg = cfg)
+                    delta = true, deletes = Map("t" -> keys.toSeq.toDF("k")))
               }
               // success: exactly one thread may ever believe it won v —
               // UNLESS both raced the byte-identical op (e.g. the same
@@ -178,19 +176,17 @@ object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
     val threads = args.headOption.map(_.toInt).getOrElse(8)
     val versions = args.lift(1).map(_.toLong).getOrElse(50L)
-    val atomic = args.contains("atomic")
     val spark = graft.GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val root = java.nio.file.Files.createTempDirectory("graft-conc-probe").toString
-    val r = ConcurrencySoak.run(spark, root, threads, versions,
-      StateStore.Config(atomicPublish = atomic))
+    val r = ConcurrencySoak.run(spark, root, threads, versions)
     val ok = r.falseSuccesses == 0 &&
       r.winners.keySet == (1L to r.versions).toSet &&
       r.finalRows == r.replayRows
     val hist = r.retryHistogram.toSeq.sortBy(_._1)
       .map { case (k, n) => s""""$k":$n""" }.mkString("{", ",", "}")
-    println(s"""{"probe":"concurrency","atomic":$atomic,"threads":${r.threads},""" +
+    println(s"""{"probe":"concurrency","threads":${r.threads},""" +
       s""""versions":${r.versions},"false_successes":${r.falseSuccesses},""" +
       s""""benign_double_wins":${r.benignDoubleWins},""" +
       s""""total_retries":${r.totalRetries},"retry_histogram":$hist,""" +

@@ -5,27 +5,28 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import graft.streaming.{StateStore, TableStore}
 
-/** TWO-JVM remnant-reclaim probe (sbt "Test/runMain
+/** TWO-JVM manifest-publish probe (sbt "Test/runMain
   * graft.tools.RemnantProbe [outJson]") — the cross-process half the
-  * in-JVM commit lock cannot cover, exercising the r12 lease/grace
-  * protocol with a genuinely FOREIGN writer (a forked java process with
-  * its own SparkSession, not a thread):
+  * in-JVM commit lock cannot cover, exercising the atomic publish with a
+  * genuinely FOREIGN writer (a forked java process with its own
+  * SparkSession, not a thread):
   *
-  *   Leg 1  fresh remnant, foreign writer: the parent plants a
-  *          terminator-less v1 MANIFEST (what a crashed — or still
-  *          in-flight — writer leaves) and forks a child JVM to commit
-  *          v1. The child must REFUSE retryably (grace window), because
-  *          from another process a fresh remnant is indistinguishable
-  *          from someone mid-commit.
-  *   Leg 2  aged remnant, foreign writer: the parent ages the remnant
-  *          past the grace window and forks the child again. Now the
-  *          child must reclaim it and commit; the parent (a third
+  *   Leg 1  fresh legacy remnant, foreign writer: the parent writes a
+  *          terminator-less v1 MANIFEST by hand (what a crashed — or
+  *          still in-flight — writer that predates the atomic publish
+  *          leaves) and forks a child JVM to commit v1. The child must
+  *          REFUSE retryably (grace window), because a fresh remnant is
+  *          indistinguishable from such a writer mid-create.
+  *   Leg 2  aged legacy remnant, foreign writer: the parent ages the
+  *          remnant past the grace window and forks the child again. Now
+  *          the child must delete it and publish; the parent (a third
   *          process-perspective) verifies the committed content.
-  *   Leg 3  completed-in-the-gap: the parent plants a fresh remnant,
-  *          COMPLETES it as a valid manifest with different content
-  *          (the foreign writer finishing its in-flight create), then
-  *          forks the child to commit different rows at v1. The child
-  *          must lose retryably (content CAS), never overwrite.
+  *   Leg 3  committed winner: the parent commits v1, then forks the
+  *          child to commit different rows at v1. The child must lose
+  *          retryably (content CAS), never overwrite.
+  *   Leg 4  stalled writer: a complete manifest sits unpublished in a
+  *          tmp; the child commits with no grace wait, and the stalled
+  *          writer's resumed link fails EEXIST.
   *
   * Exit code 0 and a JSON record (HARDENING-compatible) on success;
   * non-zero with the failing leg otherwise. Child mode:
@@ -34,7 +35,7 @@ import graft.streaming.{StateStore, TableStore}
 object RemnantProbe {
 
   private val spec = Seq(TableStore.Spec("t", Seq("k")))
-  private val cfg = StateStore.Config(buckets = 4, remnantGraceMs = 60000L)
+  private val cfg = StateStore.Config(buckets = 4)
 
   private def session(app: String): SparkSession = {
     val s = graft.GraftSession.builder(shufflePartitions = 4)
@@ -54,13 +55,11 @@ object RemnantProbe {
     * 3 = retryable ConcurrentWrite refusal (message on stdout), 1 = any
     * other failure.
     */
-  private def childCommit(root: String, version: Long, tag: String,
-      atomic: Boolean): Unit = {
+  private def childCommit(root: String, version: Long, tag: String): Unit = {
     val spark = session(s"remnant-child-$tag")
     try {
       TableStore.write(spark, root, version, spec,
-        Map("t" -> rows(spark, tag)),
-        cfg = cfg.copy(atomicPublish = atomic))
+        Map("t" -> rows(spark, tag)), cfg = cfg)
       println(s"[child] committed v$version tag=$tag")
       sys.exit(0)
     } catch {
@@ -74,8 +73,7 @@ object RemnantProbe {
   }
 
   /** Fork a child JVM running [[childCommit]]; returns (exit, stdout). */
-  private def fork(root: String, version: Long, tag: String,
-      atomic: Boolean = false): (Int, String) = {
+  private def fork(root: String, version: Long, tag: String): (Int, String) = {
     val java = s"${sys.props("java.home")}/bin/java"
     // the same JDK-17 module opens build.sbt forks the parent with
     val opens = Seq(
@@ -89,8 +87,7 @@ object RemnantProbe {
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     val cmd = Seq(java, "-Xmx2g", "-cp", sys.props("java.class.path")) ++ opens ++
       Seq("-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-        "graft.tools.RemnantProbe", "commit", root, version.toString, tag) ++
-      (if (atomic) Seq("atomic") else Nil)
+        "graft.tools.RemnantProbe", "commit", root, version.toString, tag)
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
     val p = pb.start()
@@ -99,7 +96,9 @@ object RemnantProbe {
     (code, out)
   }
 
-  /** Plant a terminator-less v<version> MANIFEST (crash/in-flight shape). */
+  /** Write a terminator-less v<version> MANIFEST by hand — the
+    * crash/in-flight shape of a writer that predates the atomic publish.
+    */
   private def plantRemnant(root: String, version: Long): java.io.File = {
     val v0 = Paths.get(s"$root/v0/MANIFEST")
     val text = new String(Files.readAllBytes(v0), "UTF-8")
@@ -108,13 +107,12 @@ object RemnantProbe {
     Files.createDirectories(dir)
     val p = dir.resolve("MANIFEST")
     Files.write(p, torn.getBytes("UTF-8"))
-    Files.deleteIfExists(dir.resolve(".MANIFEST.crc"))
     p.toFile
   }
 
   def main(args: Array[String]): Unit = args.toList match {
-    case "commit" :: root :: v :: tag :: rest =>
-      childCommit(root, v.toLong, tag, atomic = rest.contains("atomic"))
+    case "commit" :: root :: v :: tag :: _ =>
+      childCommit(root, v.toLong, tag)
     case rest =>
       val outJson = rest.headOption.getOrElse("/tmp/remnant_probe.json")
       val spark = session("remnant-probe-parent")
@@ -125,7 +123,7 @@ object RemnantProbe {
         legs :+= ((name, ok, detail))
       }
 
-      // ---- leg 1: fresh remnant, foreign writer refused --------------------
+      // ---- leg 1: fresh legacy remnant, foreign writer refused -------------
       val root1 = Files.createTempDirectory("graft_remnant1").toString
       TableStore.write(spark, root1, 0L, spec, Map("t" -> rows(spark, "base")), cfg = cfg)
       plantRemnant(root1, 1L)
@@ -135,10 +133,10 @@ object RemnantProbe {
           s"exit=$code, grace-window refusal=${out.contains("grace window")}")
       }
 
-      // ---- leg 2: aged remnant, foreign writer reclaims ---------------------
-      leg("aged remnant: foreign JVM reclaims and commits") {
+      // ---- leg 2: aged legacy remnant, foreign writer reclaims --------------
+      leg("aged remnant: foreign JVM deletes it and publishes") {
         val remnant = new java.io.File(s"$root1/v1/MANIFEST")
-        remnant.setLastModified(System.currentTimeMillis() - 2 * cfg.remnantGraceMs)
+        remnant.setLastModified(System.currentTimeMillis() - 2 * StateStore.RemnantGraceMs)
         val (code, out) = fork(root1, 1L, "alien2")
         val committed = StateStore.readManifest(spark, root1, 1L).isDefined
         val content = TableStore.read(spark, root1, 1L, "t")
@@ -147,11 +145,11 @@ object RemnantProbe {
           s"exit=$code committed=$committed rows=${content.take(2).mkString(",")}...")
       }
 
-      // ---- leg 3: remnant completed in the gap — different content loses ----
+      // ---- leg 3: committed winner — different content loses ---------------
       val root3 = Files.createTempDirectory("graft_remnant3").toString
       TableStore.write(spark, root3, 0L, spec, Map("t" -> rows(spark, "base")), cfg = cfg)
-      leg("remnant completed by foreign writer: different-content racer loses") {
-        // the "foreign writer finishes": a real committed v1 with its rows
+      leg("committed by another writer: different-content racer loses") {
+        // the winner: a real committed v1 with its rows
         TableStore.write(spark, root3, 1L, spec, Map("t" -> rows(spark, "winner")),
           delta = true, cfg = cfg)
         val (code, out) = fork(root3, 1L, "loser")
@@ -161,24 +159,20 @@ object RemnantProbe {
           s"exit=$code winnerIntact=${content.forall(_.startsWith("winner"))}")
       }
 
-      // ---- legs 4-6: the r13 ATOMIC-PUBLISH mode ----------------------------
-
-      // leg 4: the pathological case the lease/grace protocol documents —
-      // a writer stalled mid-commit — is IMPOSSIBLE BY CONSTRUCTION under
-      // atomic publish: a mid-commit atomic writer leaves only a tmp,
-      // NOTHING at the final path, so a foreign writer commits with no
-      // grace wait; the stalled writer's resumed publish fails EEXIST.
+      // ---- leg 4: stalled writer leaves no remnant --------------------------
+      // a writer stalled mid-commit leaves only a tmp, NOTHING at the final
+      // path, so a foreign writer commits with no grace wait; the stalled
+      // writer's resumed publish fails EEXIST.
       val root4 = Files.createTempDirectory("graft_remnant4").toString
-      TableStore.write(spark, root4, 0L, spec, Map("t" -> rows(spark, "base")),
-        cfg = cfg.copy(atomicPublish = true))
-      leg("atomic: stalled writer leaves no remnant; resume loses EEXIST") {
+      TableStore.write(spark, root4, 0L, spec, Map("t" -> rows(spark, "base")), cfg = cfg)
+      leg("stalled writer leaves no remnant; resume loses EEXIST") {
         // the stalled writer: a COMPLETE manifest sitting in its tmp,
         // unpublished (copy v0's manifest text as stand-in content)
         val v1 = Paths.get(s"$root4/v1"); Files.createDirectories(v1)
         val stalledTmp = v1.resolve(".MANIFEST.tmp-stalled")
         Files.write(stalledTmp, Files.readAllBytes(Paths.get(s"$root4/v0/MANIFEST")))
         // the foreign writer commits immediately — no grace refusal
-        val (code, _) = fork(root4, 1L, "winner", atomic = true)
+        val (code, _) = fork(root4, 1L, "winner")
         // the stalled writer resumes: its atomic publish must fail EEXIST
         val resumed =
           try { Files.createLink(v1.resolve("MANIFEST"), stalledTmp); false }
@@ -190,34 +184,10 @@ object RemnantProbe {
             s"${content.forall(_.startsWith("winner"))}")
       }
 
-      // leg 5: a fresh LEGACY remnant still gets the grace window under
-      // atomic mode (mixed-deployment defense)
-      val root5 = Files.createTempDirectory("graft_remnant5").toString
-      TableStore.write(spark, root5, 0L, spec, Map("t" -> rows(spark, "base")),
-        cfg = cfg.copy(atomicPublish = true))
-      plantRemnant(root5, 1L)
-      leg("atomic: fresh legacy remnant refused within the grace window") {
-        val (code, out) = fork(root5, 1L, "alien", atomic = true)
-        (code == 3 && out.contains("grace window"),
-          s"exit=$code, grace-window refusal=${out.contains("grace window")}")
-      }
-
-      // leg 6: an aged legacy remnant is deleted and re-raced atomically
-      leg("atomic: aged legacy remnant reclaimed via delete + atomic link") {
-        val remnant = new java.io.File(s"$root5/v1/MANIFEST")
-        remnant.setLastModified(System.currentTimeMillis() - 2 * cfg.remnantGraceMs)
-        val (code, _) = fork(root5, 1L, "alien6", atomic = true)
-        val committed = StateStore.readManifest(spark, root5, 1L).isDefined
-        val content = TableStore.read(spark, root5, 1L, "t")
-          .collect().map(_.getString(1)).sorted.toSeq
-        (code == 0 && committed && content == (1 to 8).map(i => s"alien6-$i").sorted,
-          s"exit=$code committed=$committed rows=${content.take(2).mkString(",")}...")
-      }
-
       val ok = legs.forall(_._2)
       val json =
-        s"""{"probe": "RemnantProbe (two-JVM remnant reclaim lease)",
-           |"grace_ms": ${cfg.remnantGraceMs},
+        s"""{"probe": "RemnantProbe (two-JVM atomic manifest publish)",
+           |"grace_ms": ${StateStore.RemnantGraceMs},
            |"legs": [${legs.map { case (n, o, d) =>
                s"""{"name": "$n", "ok": $o, "detail": ${ujson(d)}}"""
              }.mkString(", ")}],
