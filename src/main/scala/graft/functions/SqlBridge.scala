@@ -60,8 +60,7 @@ object GraftSql {
 
   /** Whether `df` provably holds no row, decided WITHOUT running a shuffle.
     * A sub-plan with no exchange answers by its partition count: a
-    * zero-partition RDD (an empty-state placeholder, an empty ChangeSet)
-    * cannot hold a row, and asking costs no job. Under adaptive execution,
+    * zero-partition RDD (an empty-state placeholder) cannot hold a row, and asking costs no job. Under adaptive execution,
     * asking a frame WITH an exchange for its partitions runs that
     * exchange's shuffle as a job of its own, so above an exchange the walk
     * asks the operator's inputs instead, through operators that emit

@@ -3,7 +3,7 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.GraftSql
-import graft.state.{ChangeSet, Merge, Upserts}
+import graft.state.{Merge, Upserts}
 import graft.state.Merge.MergeCols
 
 /** Graph traversals and the cascading temporal expiration
@@ -187,14 +187,13 @@ object GraphOps {
   final case class State(assets: DataFrame, teams: DataFrame,
                          owns: DataFrame, parentOf: DataFrame)
 
-  /** Result of a tracked cascade: the new state, the natural keys it
-    * changed per table (for partition-limited sink writes), and the
-    * persisted intermediates its plans reference. Call [[release]] once
-    * the state has been materialized (written / checkpointed) — before
-    * that, unpersisting would force the shared subtrees to recompute on
-    * next use.
+  /** Result of a tracked cascade: the new state and the persisted
+    * intermediates its plans reference. Call [[release]] once the state
+    * has been materialized (written / checkpointed) — before that,
+    * unpersisting would force the shared subtrees to recompute on next
+    * use.
     */
-  final case class Cascade(state: State, changes: ChangeSet, cached: Seq[DataFrame]) {
+  final case class Cascade(state: State, cached: Seq[DataFrame]) {
     def release(): Unit = cached.foreach(_.unpersist())
   }
 
@@ -314,7 +313,6 @@ object GraphOps {
       .filter(col("e.expiration") > col("d.death_first"))
       .groupBy(col("e.parent_id").as("parent_id"), col("e.child_id").as("child_id"))
       .agg(min(col("d.death_first")).as("exp_ts"))
-      .persist() // referenced by the parent_of merge AND the change set
     val parentOf2 = Merge.mergeUpdateOnly(st.parentOf,
       touched.select(col("parent_id"), col("child_id"),
         col("exp_ts").as("last_seen"), col("exp_ts").as("expiration")),
@@ -322,16 +320,6 @@ object GraphOps {
         "last_seen" -> ((c: MergeCols) => when(c.matched, c.update).otherwise(c.existing)),
         "expiration" -> ((c: MergeCols) => when(c.matched, c.update).otherwise(c.existing))))
 
-    // changed keys: expired owns edges are keyed by the resolved tombstone
-    // pairs; dead assets and touched parent_of edges are exactly the merge
-    // update keys (supersets are safe for the partition-limited sink)
-    val changes = ChangeSet(
-      assets = deadAssets.select(col("asset_id").as("id")),
-      teams = st.teams.select("identifier").limit(0),
-      owns = resolved.select("team_id", "asset_id"),
-      parentOf = touched.select("parent_id", "child_id"))
-
-    Cascade(State(assets2, st.teams, owns2, parentOf2), changes,
-      Seq(resolved, owns2, deadAssets, touched))
+    Cascade(State(assets2, st.teams, owns2, parentOf2), Seq(resolved, owns2, deadAssets))
   }
 }

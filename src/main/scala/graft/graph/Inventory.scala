@@ -97,7 +97,8 @@ object Inventory {
         teamIds = teamIds.toDF("identifier"),
         ownsAssetIds = assetIds.toDF("asset_id"),
         parentIds = assetIds.toDF("parent_id"),
-        childIds = assetIds.toDF("child_id")),
+        childIds = assetIds.toDF("child_id"),
+        edgeChildIds = Seq.empty[String].toDF("child_id")),
       store)
   }
 

@@ -7,7 +7,7 @@ import graft.graph.GraphOps
 import graft.graph.GraphOps.State
 import graft.normalize.Normalize
 import graft.schema.Schemas
-import graft.state.{ChangeSet, Upserts}
+import graft.state.Upserts
 import graft.streaming.StateStore
 import graft.temporal.Temporal
 import org.apache.spark.sql.GraftSql
@@ -57,27 +57,20 @@ object Pipeline {
     * non-tombstone events carrying per-event `proc_ts` + `offset`. The
     * batch may hold MANY events per key (one tombstone-free segment);
     * upsert inputs are aggregated per merge key, so state application
-    * stays one MERGE per table. Also returns the natural keys it upserts
-    * per table — the write-side input for partition-limited sink writes.
+    * stays one MERGE per table.
     */
-  def refreshTracked(st: State, batch: DataFrame, cfg: Config): (State, ChangeSet) = {
+  def refresh(st: State, batch: DataFrame, cfg: Config): State = {
     val b = batch.select(
       col("payload.AssetType").as("type"),
       col("payload.Identifier").as("identifier"),
       col("payload.Team.Id").as("team_identifier"),
       col("payload.Team.Name").as("team_name"),
-      col("payload.Annotations").as("annotations"),
       col("proc_ts"),
       col("offset"))
 
-    // AWS-account parents derived from matching annotations
-    // (reference: main.go:131-138, 223-243); an un-normalizable account
-    // id is skipped here — strict mode has already halted before it
-    // (firstInvalid)
-    val aws = Normalize.matchingAnnotations(b, "annotations", cfg.awsAccountAnnotationKey)
-      .withColumn("aws_arn", Normalize.normalizeAwsAccountId(col("annotation_value")))
-      .filter(col("aws_arn").isNotNull)
-      .select(col("type"), col("identifier"), col("aws_arn"), col("proc_ts"))
+    // an un-normalizable account id is skipped here — strict mode has
+    // already halted before it (firstInvalid)
+    val aws = awsAnnotations(batch, cfg, "proc_ts").filter(col("aws_arn").isNotNull)
 
     val assetUpdates = b.select(col("type"), col("identifier"), col("proc_ts"))
       .unionByName(aws.select(lit("AWSAccount").as("type"),
@@ -108,25 +101,32 @@ object Pipeline {
 
     val parentUpdates = aws.select(
         concat(lit("AWSAccount/"), col("aws_arn")).as("parent_id"),
-        Upserts.assetId(col("type"), col("identifier")).as("child_id"),
+        col("child_id"),
         col("proc_ts"))
       .groupBy(col("parent_id"), col("child_id"))
       .agg(min("proc_ts").as("first_seen"), max("proc_ts").as("last_seen"))
       .withColumn("expiration", lit(Schemas.Unexpired))
 
-    val next = State(
+    State(
       assets = Upserts.upsertAssets(st.assets, assetUpdates),
       teams = Upserts.upsertTeams(st.teams, teamUpdates),
       owns = Upserts.upsertOwns(st.owns, ownsUpdates),
       parentOf = Upserts.upsertParentOf(st.parentOf, parentUpdates))
-    val changes = ChangeSet(
-      assets = assetUpdates.select(
-        Upserts.assetId(col("type"), col("identifier")).as("id")),
-      teams = teamUpdates.select("identifier"),
-      owns = ownsUpdates.select("team_id", "asset_id"),
-      parentOf = parentUpdates.select("parent_id", "child_id"))
-    (next, changes)
   }
+
+  /** The AWS-account parents of decoded refresh events (reference:
+    * main.go:131-138, 223-243): one row per annotation under the account
+    * key, with the refreshed asset's id `child_id`, the raw
+    * `annotation_value` and its normalized `aws_arn` — null when the
+    * account id cannot be normalized — beside the `keep` columns.
+    */
+  private def awsAnnotations(refresh: DataFrame, cfg: Config, keep: String*): DataFrame =
+    Normalize.matchingAnnotations(
+        refresh.select(keep.map(col) ++ Seq(
+          Upserts.assetId(col("payload.AssetType"), col("payload.Identifier")).as("child_id"),
+          col("payload.Annotations").as("annotations")): _*),
+        "annotations", cfg.awsAccountAnnotationKey)
+      .withColumn("aws_arn", Normalize.normalizeAwsAccountId(col("annotation_value")))
 
   /** Expire path (reference: main.go:270-364) for a batch of tombstones
     * carrying per-event `proc_ts`, keeping the cascade's persisted
@@ -156,7 +156,7 @@ object Pipeline {
 
   /** Apply one single-sided epoch, returning the cascade's persisted
     * intermediates (the caller releases them after checkpointing the
-    * state) plus the epoch's change set. `side` skips the provably-empty
+    * state) with the new state. `side` skips the provably-empty
     * half — the `is_nil` filters stay in place either way, so a mislabeled
     * side drops the other half's rows rather than mis-applying them (and
     * the differential replay/golden-state suites would catch it).
@@ -164,8 +164,7 @@ object Pipeline {
   def applyEpochTracked(st: State, epoch: DataFrame, cfg: Config,
       side: EpochSide): GraphOps.Cascade = side match {
     case RefreshEpoch =>
-      val (refreshed, refreshChanges) = refreshTracked(st, epoch.filter(!col("is_nil")), cfg)
-      GraphOps.Cascade(refreshed, refreshChanges, cached = Nil)
+      GraphOps.Cascade(refresh(st, epoch.filter(!col("is_nil")), cfg), cached = Nil)
     case TombstoneEpoch =>
       expireTracked(st, epoch.filter(col("is_nil")))
   }
@@ -187,21 +186,20 @@ object Pipeline {
     *    live in `parentIds` buckets and their in-edges are discovered via
     *    the reverse index from `childIds`;
     *  - edges a refresh inserts mid-batch land in already-loaded buckets
-    *    (their parents are batch AWS-account ids).
+    *    (their parents are batch AWS-account ids), and their reverse-index
+    *    keys in the `edgeChildIds` buckets.
     * Supersets are safe (extra bucket loads); the strict-halt prefix is a
-    * subset of the batch, so the same candidates cover it.
+    * subset of the batch, so the same candidates cover it. A miss is
+    * caught at staging: [[StateStore.write]] fails on a row outside the
+    * buckets it loaded instead of writing it.
     */
   def candidatesOf(decoded: DataFrame, cfg: Config): StateStore.Candidates = {
     val refresh = decoded.filter(col("valid") && !col("is_nil"))
     val tomb = decoded.filter(col("valid") && col("is_nil"))
     val refreshAsset = refresh.select(
       Upserts.assetId(col("payload.AssetType"), col("payload.Identifier")).as("id"))
-    val aws = Normalize.matchingAnnotations(
-        refresh.select(col("payload.Annotations").as("annotations")),
-        "annotations", cfg.awsAccountAnnotationKey)
-      .withColumn("aws_arn", Normalize.normalizeAwsAccountId(col("annotation_value")))
-      .filter(col("aws_arn").isNotNull)
-      .select(concat(lit("AWSAccount/"), col("aws_arn")).as("id"))
+    val edges = awsAnnotations(refresh, cfg).filter(col("aws_arn").isNotNull)
+    val aws = edges.select(concat(lit("AWSAccount/"), col("aws_arn")).as("id"))
     val tombAsset = tomb.select(
       Upserts.assetId(col("asset_type"), col("identifier")).as("id"))
     StateStore.Candidates(
@@ -210,13 +208,21 @@ object Pipeline {
         .unionByName(tomb.select(col("team_id").as("identifier"))),
       ownsAssetIds = refreshAsset.unionByName(tombAsset).select(col("id").as("asset_id")),
       parentIds = aws.unionByName(tombAsset).select(col("id").as("parent_id")),
-      childIds = tombAsset.select(col("id").as("child_id")))
+      childIds = tombAsset.select(col("id").as("child_id")),
+      edgeChildIds = edges.select(col("child_id")))
   }
 
   /** Fold an envelope batch (with an `offset` column giving total input
-    * order) into an existing snapshot state. Shared by batch [[replay]]
-    * and the streaming foreachBatch sink
-    * ([[graft.streaming.StreamIngest]]).
+    * order) into a snapshot state. Shared by batch [[replay]] and the
+    * streaming foreachBatch sink ([[graft.streaming.StreamIngest]]).
+    *
+    * The base state is SUPPLIED from the batch's candidate keys
+    * ([[candidatesOf]]) — the bucket-pruned streaming path: the supplier
+    * (typically `StateStore.readPartialLatest`) loads only the state
+    * buckets the batch can touch, so per-epoch merge + checkpoint cost is
+    * O(loaded buckets) ~ O(batch), not O(state). The candidate frames are
+    * lazy plans over the (persisted) decoded batch; a supplier that
+    * ignores them costs nothing.
     *
     * @param baseEpochSecs processing-time base; event at `offset` o is
     *        stamped baseEpochSecs + o seconds (the deterministic analog of
@@ -224,13 +230,87 @@ object Pipeline {
     */
   def fold(
       spark: SparkSession,
-      st0: State,
+      stateFor: StateStore.Candidates => State,
       envelopes: DataFrame,
       cfg: Config,
-      baseEpochSecs: Long): State =
-    // trackChanges=false: batch replay never consumes the change set, and
-    // materializing it costs 4 extra jobs per epoch
-    foldImpl(spark, _ => st0, envelopes, cfg, baseEpochSecs, trackChanges = false)._1
+      baseEpochSecs: Long): State = {
+    // persist the decode output BEFORE the strict scan so the batch is
+    // decoded once, not once for the halt-point scan and again for the
+    // event pipeline
+    val decoded = Decode.decode(envelopes).persist()
+    var events: DataFrame = null
+    try {
+      val st0 = tagged(spark, "fold:partial-read")(stateFor(candidatesOf(decoded, cfg)))
+      events = tagged(spark, "fold:epoch-label")(Temporal.withTombstoneRunEpochs(
+          decoded.filter(col("valid")), "offset", "is_nil"))
+        .withColumn("proc_ts", timestamp_seconds(lit(baseEpochSecs) + col("offset")))
+        .persist()
+
+      /** Apply all epochs of `evs` (already segment-epoched). */
+      def run(evs: DataFrame): State = {
+        // epochs PRESENT in the batch, ascending — the run-epoch numbering
+        // leaves odd gaps where two tombstone runs are offset-adjacent, so
+        // iterating 1..max would pay empty-epoch machinery for nothing.
+        // Bounded: <= 2 * (4096-run cap) + 1 rows collected.
+        val present = tagged(spark, "fold:epoch-scan") {
+          // RDD-level distinct: the projection has no exchange (AQE never
+          // engages) and the collect is ONE job — the SQL distinct paid
+          // ~3 AQE stage-jobs of scheduling latency per batch for a
+          // bounded (<= 2 * run-cap + 1) answer
+          evs.select(col("__epoch")).rdd.map(_.getInt(0))
+            .distinct(numPartitions = 2).collect().sorted.toSeq
+        }
+        var st = st0
+        for (e <- present) {
+          // run epochs are single-sided by construction (odd=refresh,
+          // even=tombstone): skip the other side's whole operator chain
+          val side = if (e % 2 == 1) RefreshEpoch else TombstoneEpoch
+          val casc = applyEpochTracked(st, evs.filter(col("__epoch") === e), cfg, side)
+          // truncate lineage: each epoch's state feeds the next, and the
+          // checkpointed copies stay valid once the cascade's caches are
+          // released below
+          // (measured twice: parallelizing these four jobs does NOT help —
+          // the per-epoch wall-clock sits in each plan's sequential AQE
+          // query stages — and leaving the FINAL epoch's state lazy is a
+          // net LOSS: the store write's per-table jobs each replay the
+          // merge plan with their own AQE stages, 7+3 jobs becoming 21).
+          // MEASURED-stats checkpoints, not plain localCheckpoint: the
+          // plain form carries the origin plan's ESTIMATED sizeInBytes
+          // into the next round's leaf, and the size-only estimator's
+          // product-over-join-children rule then compounds the estimates
+          // geometrically across epochs — a 9-tombstone-run batch ended
+          // with 41-MILLION-bit BigInt "sizes" and planning (BigInt
+          // multiplication inside every stats visit) dominating the fold
+          // at 45 s per epoch. See GraftSql.localCheckpointMeasuredStats.
+          st = tagged(spark, s"fold:epoch$e-state-checkpoint")(State(
+            GraftSql.localCheckpointMeasuredStats(casc.state.assets),
+            GraftSql.localCheckpointMeasuredStats(casc.state.teams),
+            GraftSql.localCheckpointMeasuredStats(casc.state.owns),
+            GraftSql.localCheckpointMeasuredStats(casc.state.parentOf)))
+          casc.release()
+        }
+        st
+      }
+
+      if (cfg.strict) {
+        tagged(spark, "fold:strict-scan")(firstInvalid(decoded, cfg)) match {
+          case Some((off, why)) =>
+            // reference parity: everything BEFORE the first bad message is
+            // applied, then the stream halts; the sink persists this prefix
+            val prefix = run(events.filter(col("offset") < off))
+            throw new StrictHaltException(
+              s"strict mode: $why at offset $off (valid prefix applied)", off, prefix)
+          case None => ()
+        }
+      }
+      run(events)
+    } finally {
+      // `events` is null only if state load / epoch labeling / persist
+      // themselves threw — still release the decoded cache on that path
+      if (events != null) events.unpersist()
+      decoded.unpersist()
+    }
+  }
 
   /** First message (by offset) strict mode must halt on, with the reason:
     * undecodable/unsupported envelopes, or a refresh whose AWS-account
@@ -240,11 +320,7 @@ object Pipeline {
   private def firstInvalid(decoded: DataFrame, cfg: Config): Option[(Long, String)] = {
     val badDecode = decoded.filter(!col("valid"))
       .select(col("offset"), lit("undecodable/unsupported message").as("why"))
-    val badAws = Normalize.matchingAnnotations(
-        decoded.filter(col("valid") && !col("is_nil"))
-          .select(col("offset"), col("payload.Annotations").as("annotations")),
-        "annotations", cfg.awsAccountAnnotationKey)
-      .withColumn("aws_arn", Normalize.normalizeAwsAccountId(col("annotation_value")))
+    val badAws = awsAnnotations(decoded.filter(col("valid") && !col("is_nil")), cfg, "offset")
       .filter(col("aws_arn").isNull)
       .select(col("offset"),
         concat(lit("invalid AWS account id format: "), col("annotation_value")).as("why"))
@@ -264,27 +340,7 @@ object Pipeline {
   final class StrictHaltException(
       msg: String,
       val haltOffset: Long,
-      val prefix: (State, ChangeSet)) extends IllegalArgumentException(msg)
-
-  /** [[fold]], also returning the union of every epoch's changed natural
-    * keys — the contract the partition-limited state sink needs. The
-    * change frames are eagerly checkpointed (they are batch-key sized), so
-    * they stay valid after the per-epoch caches are released. The base
-    * state is SUPPLIED from the batch's candidate keys — the
-    * bucket-pruned streaming path: the supplier (typically
-    * `StateStore.readPartialLatest`) loads only the state buckets the
-    * batch can touch, so per-epoch merge + checkpoint cost is
-    * O(loaded buckets) ~ O(batch), not O(state). The candidate frames are
-    * lazy plans over the (persisted) decoded batch; a supplier that
-    * ignores them costs nothing.
-    */
-  def foldTracked(
-      spark: SparkSession,
-      stateFor: StateStore.Candidates => State,
-      envelopes: DataFrame,
-      cfg: Config,
-      baseEpochSecs: Long): (State, ChangeSet) =
-    foldImpl(spark, stateFor, envelopes, cfg, baseEpochSecs, trackChanges = true)
+      val prefix: State) extends IllegalArgumentException(msg)
 
   /** Tag every Spark job started inside `f` with a fold-phase name —
     * free driver-side bookkeeping that makes the per-batch floor
@@ -299,110 +355,11 @@ object Pipeline {
     try f finally sc.setJobDescription(prev)
   }
 
-  private def foldImpl(
-      spark: SparkSession,
-      stateFor: StateStore.Candidates => State,
-      envelopes: DataFrame,
-      cfg: Config,
-      baseEpochSecs: Long,
-      trackChanges: Boolean): (State, ChangeSet) = {
-    // persist the decode output BEFORE the strict scan so the batch is
-    // decoded once, not once for the halt-point scan and again for the
-    // event pipeline
-    val decoded = Decode.decode(envelopes).persist()
-    var events: DataFrame = null
-    try {
-      val st0 = tagged(spark, "fold:partial-read")(stateFor(candidatesOf(decoded, cfg)))
-      events = tagged(spark, "fold:epoch-label")(Temporal.withTombstoneRunEpochs(
-          decoded.filter(col("valid")), "offset", "is_nil"))
-        .withColumn("proc_ts", timestamp_seconds(lit(baseEpochSecs) + col("offset")))
-        .persist()
-
-      /** Apply all epochs of `evs` (already segment-epoched). `track`
-        * forces change-set materialization even on the plain fold path —
-        * the strict-halt prefix is always tracked, because the sink
-        * persists it.
-        */
-      def run(evs: DataFrame, track: Boolean): (State, ChangeSet) = {
-        // epochs PRESENT in the batch, ascending — the run-epoch numbering
-        // leaves odd gaps where two tombstone runs are offset-adjacent, so
-        // iterating 1..max would pay empty-epoch machinery for nothing.
-        // Bounded: <= 2 * (4096-run cap) + 1 rows collected.
-        val present = tagged(spark, "fold:epoch-scan") {
-          // RDD-level distinct: the projection has no exchange (AQE never
-          // engages) and the collect is ONE job — the SQL distinct paid
-          // ~3 AQE stage-jobs of scheduling latency per batch for a
-          // bounded (<= 2 * run-cap + 1) answer
-          evs.select(col("__epoch")).rdd.map(_.getInt(0))
-            .distinct(numPartitions = 2).collect().sorted.toSeq
-        }
-        var st = st0
-        var changes = ChangeSet.empty(spark)
-        for (e <- present) {
-          // run epochs are single-sided by construction (odd=refresh,
-          // even=tombstone): skip the other side's whole operator chain
-          val side = if (e % 2 == 1) RefreshEpoch else TombstoneEpoch
-          val casc = applyEpochTracked(st, evs.filter(col("__epoch") === e), cfg, side)
-          // truncate lineage: each epoch's state feeds the next
-          // (measured twice: parallelizing these four jobs does NOT help —
-          // the per-epoch wall-clock sits in each plan's sequential AQE
-          // query stages — and leaving the FINAL epoch's state lazy is a
-          // net LOSS: the store write's per-table jobs each replay the
-          // merge plan with their own AQE stages, 7+3 jobs becoming 21).
-          // MEASURED-stats checkpoints, not plain localCheckpoint: the
-          // plain form carries the origin plan's ESTIMATED sizeInBytes
-          // into the next round's leaf, and the size-only estimator's
-          // product-over-join-children rule then compounds the estimates
-          // geometrically across epochs — a 9-tombstone-run batch ended
-          // with 41-MILLION-bit BigInt "sizes" and planning (BigInt
-          // multiplication inside every stats visit) dominating the fold
-          // at 45 s per epoch. See GraftSql.localCheckpointMeasuredStats.
-          st = tagged(spark, s"fold:epoch$e-state-checkpoint")(State(
-            GraftSql.localCheckpointMeasuredStats(casc.state.assets),
-            GraftSql.localCheckpointMeasuredStats(casc.state.teams),
-            GraftSql.localCheckpointMeasuredStats(casc.state.owns),
-            GraftSql.localCheckpointMeasuredStats(casc.state.parentOf)))
-          // change keys checkpoint BEFORE release (their plans reference
-          // the cascade's caches); checkpointed copies are then independent
-          // and the per-epoch caches can be dropped. The fused form is ONE
-          // round trip for all four frames — leaving them lazy instead is
-          // NOT an option: the store write consumes them after the batch
-          // caches unpersist, so lazy plans would re-scan the source batch
-          // four times (measured as 4x numInputRows read amplification)
-          if (track) changes = changes.union(
-            tagged(spark, s"fold:epoch$e-changes-checkpoint")(
-              casc.changes.localCheckpointFused()))
-          casc.release()
-        }
-        (st, changes)
-      }
-
-      if (cfg.strict) {
-        tagged(spark, "fold:strict-scan")(firstInvalid(decoded, cfg)) match {
-          case Some((off, why)) =>
-            // reference parity: everything BEFORE the first bad message is
-            // applied, then the stream halts. Always tracked: the sink
-            // persists this prefix through the partition-limited store.
-            val prefix = run(events.filter(col("offset") < off), track = true)
-            throw new StrictHaltException(
-              s"strict mode: $why at offset $off (valid prefix applied)", off, prefix)
-          case None => ()
-        }
-      }
-      run(events, track = trackChanges)
-    } finally {
-      // `events` is null only if state load / epoch labeling / persist
-      // themselves threw — still release the decoded cache on that path
-      if (events != null) events.unpersist()
-      decoded.unpersist()
-    }
-  }
-
   /** Batch replay from empty state. */
   def replay(
       spark: SparkSession,
       envelopes: DataFrame,
       cfg: Config = Config(),
       baseEpochSecs: Long = 1704067200L /* 2024-01-01T00:00:00Z */): State =
-    fold(spark, emptyState(spark), envelopes, cfg, baseEpochSecs)
+    fold(spark, _ => emptyState(spark), envelopes, cfg, baseEpochSecs)
 }

@@ -706,11 +706,12 @@ object CoreQueries {
   // -- A4/E10: versioned-store CDC — write two versions, diff them -----------
   // End-to-end proof of the store's time-travel diff as a DECLARED query:
   // v0 holds the asset snapshot aggregated from events before the split
-  // instant, v1 is an INCREMENTAL write (ChangeSet = keys with events
-  // after the split; only their buckets are rewritten), and the result is
-  // StateStore.diffVersions — which reads ONLY the buckets whose manifest
-  // pointers differ between v0 and v1. The oracle reaches the same rows
-  // by EXCEPT-ing the two aggregates computed directly from events.
+  // instant, v1 is an INCREMENTAL write (only the buckets of keys with
+  // events after the split, rewritten from v1's rows of those buckets),
+  // and the result is StateStore.diffVersions — which reads ONLY the
+  // buckets whose manifest pointers differ between v0 and v1. The oracle
+  // reaches the same rows by EXCEPT-ing the two aggregates computed
+  // directly from events.
   // Output excludes the Unexpired sentinel column (timestamp-overflow
   // contract, see q_validat_asof).
   val q_store_diff: QueryDef = QueryDef(
@@ -756,9 +757,11 @@ object CoreQueries {
     // over 32 buckets pays ~30 dir round-trips per write/read for no
     // parallelism gain
     val cfg = StateStore.Config(buckets = 8)
-    StateStore.write(s, out, 0L, empty.copy(assets = v0), changes = None, cfg)
-    StateStore.write(s, out, 1L, empty.copy(assets = v1),
-      changes = Some(graft.state.ChangeSet.empty(s).copy(assets = changedKeys)), cfg)
+    StateStore.write(s, out, 0L, empty.copy(assets = v0), None, cfg)
+    val idBucket = StateStore.bucket(Seq("id"), cfg.buckets)
+    val changed = changedKeys.select(idBucket).distinct().collect().map(_.getInt(0)).toSet
+    StateStore.write(s, out, 1L, empty.copy(assets = v1.filter(idBucket.isin(changed.toSeq: _*))),
+      Some(Map("assets" -> changed)), cfg)
     StateStore.diffVersions(s, out, 0L, 1L).find(_.table == "assets").get.changed
       .select(col("id"), col("first_seen"), col("last_seen"), col("change"))
       .orderBy(col("id"), col("change"))

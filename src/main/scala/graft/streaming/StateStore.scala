@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StringType, StructField, StructType}
 import graft.graph.GraphOps.State
 import graft.schema.Schemas
-import graft.state.ChangeSet
 import scala.util.control.NonFatal
 
 /** Versioned, hash-partitioned snapshot store for the four graph tables —
@@ -19,9 +18,9 @@ import scala.util.control.NonFatal
   * stores without the segment keep reading) plus a `MANIFEST` file per
   * version mapping every live `(table, bucket)` to the VERSION whose files
   * hold its current rows. A micro-batch rewrites ONLY
-  * the buckets its [[ChangeSet]] keys hash into — untouched buckets stay
-  * as pointers into earlier versions — so per-batch write I/O is
-  * O(touched buckets), not O(state).
+  * the buckets its partial read loaded ([[readPartialLatest]]) —
+  * untouched buckets stay as pointers into earlier versions — so
+  * per-batch write I/O is O(loaded buckets), not O(state).
   *
   * This is shadow paging, not an LSM: every bucket is always exactly ONE
   * complete directory (a write rewrites the whole bucket), so reads are
@@ -51,7 +50,7 @@ import scala.util.control.NonFatal
   *     index only ever grows by the batch's inserted edge keys.
   *
   * Determinism/idempotence: a redelivered batchId reads the same
-  * predecessor manifest, computes the same touched buckets, stages the
+  * predecessor manifest, loads the same buckets, stages the
   * same rows and arrives at the same MANIFEST — pointers AND per-bucket
   * content signatures — so the commit accepts it idempotently, while a
   * DIFFERENT fold racing the same version loses retryably even when it
@@ -60,11 +59,12 @@ import scala.util.control.NonFatal
   * without a complete manifest is an uncommitted crash remnant and is
   * never read.
   *
-  * There is one write path: [[write]] (the graph tables, elected from a
-  * [[ChangeSet]]) and [[TableStore.write]] (any table set, elected from
-  * delta and delete frames) only decide which buckets each table
-  * rewrites and with which rows; [[stageAndCommit]] stages, signs and
-  * commits for both.
+  * There is one write path: [[write]] (the graph tables, rewriting the
+  * buckets its partial state loaded) and [[TableStore.write]] (any table
+  * set, elected from delta and delete frames) only decide which buckets
+  * each table rewrites and with which rows; [[stageAndCommit]] stages,
+  * signs and commits for both, and refuses a staging whose rows land in
+  * buckets the table did not declare.
   */
 object StateStore {
 
@@ -95,8 +95,7 @@ object StateStore {
 
   private final case class TableSpec(name: String, schema: StructType,
       /** columns whose hash places a row in its bucket — a deterministic
-        * function of the natural key, present in both the state frame and
-        * that table's ChangeSet key frame */
+        * function of the natural key */
       bucketCols: Seq[String])
 
   private val tables = Seq(
@@ -119,17 +118,10 @@ object StateStore {
     case "parent_of" => st.parentOf
   }
 
-  private def changesOf(ch: ChangeSet, name: String): DataFrame = name match {
-    case "assets" => ch.assets
-    case "teams" => ch.teams
-    case "owns" => ch.owns
-    case "parent_of" => ch.parentOf
-  }
-
   /** Murmur3 bucket of a table's bucket columns — deterministic across
     * runs and engine versions (Spark's `hash` is seed-42 Murmur3).
     */
-  private[streaming] def bucket(keys: Seq[String], buckets: Int): Column =
+  private[graft] def bucket(keys: Seq[String], buckets: Int): Column =
     pmod(hash(keys.map(col): _*), lit(buckets))
 
   /** Rows whose `pt` bucket is one of `buckets` — the touched-bucket
@@ -517,93 +509,65 @@ object StateStore {
 
   // --- write ---------------------------------------------------------------
 
-  /** Write state as version `version`. With a predecessor manifest and a
-    * ChangeSet, only buckets containing changed keys are rewritten; the
-    * rest inherit the predecessor's pointers. Returns the written pointers.
+  /** Write state as version `version`. `loaded` is the incremental
+    * contract: `None` writes `st` in full; `Some(m)` says `st` holds
+    * exactly the complete rows of buckets `m(table)` (a
+    * [[readPartialLatest]] view, folded), so each table stages its frame
+    * as is, exactly those buckets are rewritten — one that came out empty
+    * drops out of the manifest — and every other bucket inherits the
+    * predecessor's pointer. `m("parent_of_idx")` names the reverse-index
+    * buckets to rewrite: those of the children of edges the fold may have
+    * inserted. Returns the written pointers.
+    *
     * Stages and commits through [[stageAndCommit]], the one write path it
     * shares with [[TableStore.write]], so the graph tables' manifests
-    * carry content signatures like every other store's.
-    *
-    * `st` may be a PARTIAL state (only some buckets loaded, from
-    * [[readPartial]]) as long as `loaded` declares which — the write
-    * asserts every touched bucket was loaded, because writing a bucket
-    * from a frame that does not hold ALL of that bucket's rows would
+    * carry content signatures like every other store's, and a staged row
+    * outside its table's declared buckets fails the write: rewriting a
+    * bucket from a frame that does not hold ALL of its rows would
     * silently drop the missing ones.
     */
   def write(spark: SparkSession, statePath: String, version: Long, st: State,
-      changes: Option[ChangeSet], cfg: Config = Config(),
-      loaded: Option[Map[String, Set[Int]]] = None): Pointers =
-    stageAndCommit(spark, statePath, version, cfg, incremental = changes.nonEmpty) { base =>
+      loaded: Option[Map[String, Set[Int]]], cfg: Config = Config()): Pointers =
+    stageAndCommit(spark, statePath, version, cfg, incremental = loaded.nonEmpty) { base =>
       // each version records the schema its state frames carried
       val schemas: Map[String, StructType] =
         tables.map(t => t.name -> tableOf(st, t.name).schema).toMap
+      def rewritten(name: String): Set[Int] =
+        loaded.fold(Set.empty[Int])(_.getOrElse(name, Set.empty))
 
-      // touched buckets per table, from the batch's changed keys — ONE
-      // tagged union+distinct job for every table's set (driver-side
-      // collect of at most `buckets` ints per table) instead of one job
-      // per table: the collects are fixed PER-BATCH latency on the
-      // streaming hot path, so their count matters at every scale
-      val touched: Map[String, Set[Int]] = (base, changes) match {
-        case (Some(_), Some(ch)) =>
-          // idx buckets follow the changed edges' child ids
-          val frames = tables.map(t => (t.name, changesOf(ch, t.name), t.bucketCols)) :+
-            ((idxTable.name, ch.parentOf, Seq("child_id")))
-          val collected = collectBucketsTagged(
-            frames.map { case (n, df, cols) => (n, df, bucket(cols, cfg.buckets)) })
-          (tables :+ idxTable).map(t =>
-            t.name -> collected.getOrElse(t.name, Set.empty)).toMap
-        case _ => (tables :+ idxTable).map(_.name -> Set.empty[Int]).toMap // full write
-      }
-      loaded.foreach { lm =>
-        for (t <- tables)
-          require(touched(t.name).subsetOf(lm.getOrElse(t.name, Set.empty)),
-            s"partial-state write for '${t.name}': touched buckets " +
-              s"${touched(t.name).diff(lm.getOrElse(t.name, Set.empty)).toSeq.sorted.mkString(",")} " +
-              "were never loaded — the state frame cannot hold their full contents")
-      }
-      val full = base.isEmpty
-
-      // a full write stages every bucket; an incremental one rewrites only
-      // the touched buckets — a touched bucket that produced no rows this
-      // version is now EMPTY and drops out of the manifest (inheriting its
-      // old pointer would resurrect deleted rows on read)
       def stageMain(t: TableSpec): Stager = stage => {
-        val df = tableOf(st, t.name).withColumn("pt", bucket(t.bucketCols, cfg.buckets))
-        if (full) { if (!provablyNoRows(df)) stage(df) }
-        else if (touched(t.name).nonEmpty)
-          stage(df.filter(inBuckets(touched(t.name))))
-        touched(t.name)
+        val df = tableOf(st, t.name)
+        if (!provablyNoRows(df)) stage(df.withColumn("pt", bucket(t.bucketCols, cfg.buckets)))
+        rewritten(t.name)
       }
 
-      // reverse index: full write projects it from parent_of; an incremental
-      // write read-modify-writes ONLY the touched index buckets — old keys of
-      // those buckets (edge keys never change, so no anti-join is needed)
-      // union the batch's changed edge keys, distinct
+      // reverse index: a full write projects it from parent_of; an
+      // incremental write read-modify-writes the loaded index buckets —
+      // their old keys union the partial state's edge keys, distinct. Edge
+      // keys never change and edges are never deleted, and every edge the
+      // fold inserted has a loaded parent, so no anti-join is needed
       val stageIdx: Stager = stage => {
         val idxKeys = st.parentOf.select(col("child_id"), col("parent_id"))
-        val tb = touched(idxTable.name)
-        if (full) {
-          // checked BEFORE the distinct, whose exchange hides an empty input
-          if (!provablyNoRows(idxKeys))
-            stage(idxKeys.distinct().withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets)))
-        } else if (tb.nonEmpty) {
-          val oldPaths = base.get.pointers.getOrElse(idxTable.name, Map.empty)
-            .filter { case (pt, _) => tb(pt) }
-            .map { case (pt, v) =>
-              s"${tableDataDir(statePath, base.get.dirs, v, idxTable.name)}/pt=$pt" }.toSeq
-          val old = readPaths(spark, idxTable.schema, oldPaths)
-          val changedKeys = changes.get.parentOf.select(col("child_id"), col("parent_id"))
-          stage(old.unionByName(changedKeys).distinct()
-            .withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets))
-            .filter(inBuckets(tb)))
+        val ib = rewritten(idxTable.name)
+        base match {
+          case None =>
+            // checked BEFORE the distinct, whose exchange hides an empty input
+            if (!provablyNoRows(idxKeys))
+              stage(idxKeys.distinct().withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets)))
+          case Some(b) if ib.nonEmpty =>
+            val old = readPaths(spark, idxTable.schema, bucketPaths(statePath, b, idxTable.name, Some(ib)))
+            stage(old.unionByName(idxKeys).distinct()
+              .withColumn("pt", bucket(idxTable.bucketCols, cfg.buckets))
+              .filter(inBuckets(ib)))
+          case _ => ()
         }
-        tb
+        ib
       }
       (schemas, tables.map(t => t.name -> stageMain(t)) :+ (idxTable.name -> stageIdx))
     }._1
 
-  /** A frame with ZERO partitions (an empty-state placeholder or empty
-    * ChangeSet) can't hold a row; skipping its write job is free and makes
+  /** A frame with ZERO partitions (an empty-state placeholder) can't hold
+    * a row; skipping its write job is free and makes
     * a sparse write (one populated table of several) cost one table's
     * I/O. Checked on partition COUNT, not a scan — a big table never pays
     * for the probe. A frame with an exchange is probed below it
@@ -732,6 +696,15 @@ object StateStore {
 
     def run(name: String, s: Stager): (String, Map[Int, Long]) = {
       val rewritten = s(writeDir(name))
+      // an incremental stager's rows must land in the buckets it rewrites:
+      // a row anywhere else would replace a bucket the stager never held
+      // whole. Checked on the observed buckets, so it costs no pass; the
+      // throw deletes the staging dir, and no manifest is written
+      val stray = written.getOrElse(name, Set.empty[Int]).diff(rewritten)
+      require(base.isEmpty || stray.isEmpty,
+        s"incremental write of '$name' staged rows in buckets " +
+          s"${stray.toSeq.sorted.mkString(",")}, which it does not rewrite — " +
+          "the frame cannot hold their full contents")
       val inherited = base.fold(Map.empty[Int, Long])(_.pointers.getOrElse(name, Map.empty))
       name -> ((inherited -- rewritten) ++
         written.getOrElse(name, Set.empty[Int]).map(_ -> version))
@@ -966,9 +939,12 @@ object StateStore {
     }
   }
 
-  /** One job for MANY tables' touched-bucket sets: tag each key frame,
+  /** One job for MANY tables' bucket sets (the partial read's candidate
+    * buckets, [[TableStore.write]]'s touched buckets): tag each key frame,
     * union, distinct, collect — at most `buckets` ints per tag. Frames
-    * that provably hold no rows (zero partitions) are skipped for free.
+    * that provably hold no rows (zero partitions) are skipped for free,
+    * asked on the same tagged projection the union reads, so each frame
+    * is planned once.
     *
     * The union/distinct/collect runs at the RDD layer DELIBERATELY: each
     * branch is a pure projection (no exchange, so Catalyst plans it in
@@ -979,15 +955,14 @@ object StateStore {
     * hot path; r9 amortization profile: fold:partial-read was the
     * largest marginal phase at 12 jobs/batch).
     */
-  private def collectBucketsTagged(
+  private[streaming] def collectBucketsTagged(
       frames: Seq[(String, DataFrame, Column)]): Map[String, Set[Int]] = {
-    val nonEmpty = frames.filter { case (_, df, _) => df.rdd.getNumPartitions > 0 }
+    val nonEmpty = frames
+      .map { case (n, df, b) => df.select(lit(n).as("t"), b.as("pt")).rdd }
+      .filter(_.getNumPartitions > 0)
     if (nonEmpty.isEmpty) Map.empty
     else nonEmpty
-      .map { case (n, df, b) =>
-        df.select(lit(n).as("t"), b.as("pt")).rdd
-          .map(r => (r.getString(0), r.getInt(1)))
-      }
+      .map(_.map(r => (r.getString(0), r.getInt(1))))
       .reduce(_ union _).distinct(numPartitions = 2)
       .collect()
       .groupBy(_._1)
@@ -1038,15 +1013,20 @@ object StateStore {
     *    plus tombstoned assets (their child edges);
     *  - `childIds` (`child_id`): in-edge DISCOVERY — tombstoned assets; the
     *    reverse index turns these into the parent buckets that hold their
-    *    incoming edges.
+    *    incoming edges;
+    *  - `edgeChildIds` (`child_id`): children of the batch's AWS-account
+    *    edges — the reverse-index buckets the edges it may insert land in.
     */
   final case class Candidates(assetIds: DataFrame, teamIds: DataFrame,
-      ownsAssetIds: DataFrame, parentIds: DataFrame, childIds: DataFrame)
+      ownsAssetIds: DataFrame, parentIds: DataFrame, childIds: DataFrame,
+      edgeChildIds: DataFrame)
 
   /** A bucket-pruned view of one committed version: `state` frames hold
     * ALL rows of the `loaded` buckets and nothing else, and were built
     * from exactly `paths` (so a test — or a skeptic — can bound the
-    * batch's read I/O by inspection).
+    * batch's read I/O by inspection). `loaded` also names the
+    * `parent_of_idx` buckets of `edgeChildIds`, which [[write]] rewrites
+    * from the index's own files.
     */
   final case class Partial(version: Long, state: State,
       loaded: Map[String, Set[Int]], paths: Map[String, Seq[String]])
@@ -1070,7 +1050,7 @@ object StateStore {
     def keyBucket(df: DataFrame, cols: Seq[String]): (DataFrame, Column) =
       (df.filter(cols.map(col(_).isNotNull).reduce(_ && _)),
         bucket(cols, cfg.buckets))
-    // ONE job for the five candidate frames' bucket sets (fixed per-batch
+    // ONE job for the six candidate frames' bucket sets (fixed per-batch
     // latency on the streaming hot path), then one more for the in-edge
     // discovery join, which needs the index bucket set first
     val collected = collectBucketsTagged(Seq(
@@ -1078,6 +1058,7 @@ object StateStore {
       ("teams", keyBucket(cand.teamIds, Seq("identifier"))),
       ("owns", keyBucket(cand.ownsAssetIds, Seq("asset_id"))),
       ("idx", keyBucket(cand.childIds, Seq("child_id"))),
+      (idxTable.name, keyBucket(cand.edgeChildIds, Seq("child_id"))),
       ("parent", keyBucket(cand.parentIds, Seq("parent_id")))
     ).map { case (n, (df, b)) => (n, df, b) })
     val assetB = collected.getOrElse("assets", Set.empty)
@@ -1105,7 +1086,7 @@ object StateStore {
       readPaths(spark, m.schemaOf(spec.name), paths(spec.name))
     Some(Partial(version,
       State(tbl(tables(0)), tbl(tables(1)), tbl(tables(2)), tbl(tables(3))),
-      loaded, paths))
+      loaded + (idxTable.name -> collected.getOrElse(idxTable.name, Set.empty)), paths))
   }
 
   // --- DSv2 planning surface (graft.sources.StoreTable) --------------------

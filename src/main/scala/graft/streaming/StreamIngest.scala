@@ -167,11 +167,11 @@ object StreamIngest {
     * are bucket-pruned: the read loads only the state buckets the batch's
     * candidate keys can touch ([[Pipeline.candidatesOf]] +
     * [[StateStore.readPartialLatest]]), the fold merges and checkpoints
-    * only those partial frames, and the write rewrites only the buckets
-    * the change set actually touched — per-batch read, compute and write
-    * are O(touched buckets), not O(state). A touched bucket is rewritten
-    * whole, so that is not O(batch): a 50-event trigger stages 228 KB of
-    * a 586 KB store. Reprocessing the same batchId
+    * only those partial frames, and the write rewrites exactly the
+    * buckets the read loaded — per-batch read, compute and write are
+    * O(loaded buckets), not O(state). A loaded bucket is rewritten whole,
+    * so that is not O(batch): a 50-event trigger stages about 215 KB of
+    * a 554 KB store. Reprocessing the same batchId
     * (at-least-once restart) overwrites the same version with the same
     * deterministic result.
     */
@@ -191,9 +191,9 @@ object StreamIngest {
       store: StateStore.Config = StateStore.Config(),
       keepVersions: Int = 1): Unit = {
     val spark = batch.sparkSession
-    // which buckets the partial read loaded, for the write-side
-    // touched-subset-of-loaded assertion (None on the first batch: no
-    // predecessor manifest => the write is a full snapshot)
+    // which buckets the partial read loaded — the ones the write rewrites
+    // (None on the first batch: no predecessor manifest => the write is a
+    // full snapshot)
     var loaded: Option[Map[String, Set[Int]]] = None
     val stateFor: StateStore.Candidates => State = { cand =>
       StateStore.readPartialLatest(spark, statePath, batchId - 1, cand, store) match {
@@ -201,23 +201,22 @@ object StreamIngest {
         case None => Pipeline.emptyState(spark)
       }
     }
-    val (next, changes) = try {
-      Pipeline.foldTracked(spark, stateFor, batch, cfg, baseEpochSecs)
+    val next = try {
+      Pipeline.fold(spark, stateFor, batch, cfg, baseEpochSecs)
     } catch {
       // reference halt-point parity: everything before the first bad
       // message was applied — persist that prefix as this batch's
       // version, THEN propagate the (non-retryable) halt. Redelivery
       // recomputes the identical prefix and overwrites idempotently.
       case e: Pipeline.StrictHaltException =>
-        val (st, ch) = e.prefix
         retrying(attempts = 3)(
-          StateStore.write(spark, statePath, batchId, st, Some(ch), store, loaded))
+          StateStore.write(spark, statePath, batchId, e.prefix, loaded, store))
         throw e
     }
     // transient write failures retry in place; anything still failing
     // aborts the batch and Spark redelivers it from the checkpoint (E4)
     retrying(attempts = 3)(Pipeline.tagged(spark, "fold:store-write")(
-      StateStore.write(spark, statePath, batchId, next, Some(changes), store, loaded)))
+      StateStore.write(spark, statePath, batchId, next, loaded, store)))
     // drop versions no surviving manifest references; keep at least the
     // predecessor for crash-recovery of the next batch (more when CDC
     // consumers poll with lag — see keepVersions)

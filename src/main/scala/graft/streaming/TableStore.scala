@@ -112,7 +112,17 @@ object TableStore {
       s"frames ${frames.keySet.diff(specs.map(_.name).toSet)} not in specs")
     require(deletes.keySet.subsetOf(specs.map(_.name).toSet),
       s"deletes ${deletes.keySet.diff(specs.map(_.name).toSet)} not in specs")
-    StateStore.stageAndCommit(spark, statePath, version, cfg, incremental = delta,
+    // an incremental delta frame feeds TWO actions — the bucket election
+    // and the merged staging write. Lazy re-derivation measured cheaper
+    // than an EAGER localCheckpoint (1.74 s vs 2.21 s on
+    // q_token_incremental: the checkpoint's blocking block write costs
+    // more than a second derivation); a plain lazy persist gets the single
+    // derivation WITHOUT the blocking write — the election job populates
+    // the cache, the staging write reads it, and it is released once the
+    // write ends. The cache is O(delta rows) by the incremental-write
+    // contract.
+    val persisted = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try StateStore.stageAndCommit(spark, statePath, version, cfg, incremental = delta,
         // record each table's key columns: the manifest alone then fully
         // describes this store to the DSv2/catalog read path
         keys = specs.map(t => t.name -> t.bucketCols).toMap) { base =>
@@ -130,83 +140,66 @@ object TableStore {
           .getOrElse(throw new IllegalArgumentException(
             s"no frame and no predecessor schema for '${t.name}'"))
       }.toMap
+      def keyBucket(t: Spec) = StateStore.bucket(t.bucketCols, cfg.buckets)
+      def keysOf(t: Spec, df: DataFrame) = df.select(t.bucketCols.map(col): _*)
 
-      def stageTable(t: Spec): StateStore.Stager = stage => {
-        val keyBucket = StateStore.bucket(t.bucketCols, cfg.buckets)
-        // retracted key tuples, reduced to the key columns (a frame with
-        // extra columns is fine — only the key participates)
-        val delKeys: Option[DataFrame] = deletes.get(t.name)
-          .filterNot(StateStore.provablyNoRows)
-          .map(_.select(t.bucketCols.map(col): _*).distinct())
-        (frames.get(t.name), delKeys) match {
-          case (None, None) =>
-            Set.empty // untouched: every bucket pointer carries forward
-          case (Some(df), _) if base.isEmpty =>
-            if (!StateStore.provablyNoRows(df)) stage(df.withColumn("pt", keyBucket))
-            Set.empty
-          case (dfOpt, del) =>
-            // the delta frame feeds TWO actions — the bucket election and
-            // the merged staging write. Lazy re-derivation measured
-            // cheaper than an EAGER localCheckpoint (1.74 s vs 2.21 s on
-            // q_token_incremental: the checkpoint's blocking block write
-            // costs more than a second derivation); a plain lazy persist
-            // gets the single derivation WITHOUT the blocking write —
-            // the election job populates the cache, the staging
-            // write reads it, and it is released right after staging. The
-            // cache is O(delta rows) by the incremental-write contract.
-            val cached = dfOpt.filterNot(StateStore.provablyNoRows)
-              .map(_.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-            // every key this commit touches: the delta's keys (upserts —
-            // stored rows of these keys are replaced) plus the retracted
-            // keys (deletes — stored rows of these keys vanish)
-            val touchedKeys = (cached
-              .map(_.select(t.bucketCols.map(col): _*).distinct()).toSeq ++ del.toSeq)
-              .reduceOption(_.unionByName(_)).map(_.distinct())
-            // touched buckets — a bounded driver collect (at most `buckets`
-            // ints), the same shape as StateStore's touched-bucket
-            // election. Computed from the PRE-distinct key projections at
-            // the RDD layer: buckets of keys == buckets
-            // of distinct keys, each branch is then a pure projection, and
-            // the RDD distinct+collect is ONE two-stage job — the SQL
-            // distinct form paid several AQE stage-jobs of scheduling
-            // latency for the same bounded answer (the
-            // StateStore.collectBucketsTagged rationale).
-            val electionFrames = cached.toSeq ++ del.toSeq
-            val touched: Set[Int] = electionFrames
-              .map(_.select(keyBucket.as("pt")).rdd.map(_.getInt(0)))
-              .reduceOption(_ union _)
-              .map(_.distinct(numPartitions = 2).collect().toSet)
-              .getOrElse(Set.empty)
-            try if (touched.nonEmpty) {
-              // read-modify-write ONLY the touched buckets: stored rows
-              // lose to delta/delete rows on key equality, then the delta
-              // rows re-enter (so a key in both survives with the delta's
-              // rows — delete-then-reinsert). A bucket every row left
-              // simply writes nothing, and its pointer drops.
-              val oldPaths = base.get.pointers.getOrElse(t.name, Map.empty[Int, Long])
-                .filter { case (pt, _) => touched(pt) }
-                .map { case (pt, v) =>
-                  s"${StateStore.tableDataDir(statePath, base.get.dirs, v, t.name)}/pt=$pt"
-                }.toSeq
-              val old = StateStore.readPaths(spark, base.get.schemaOf(t.name), oldPaths)
-              // null-SAFE key equality (<=>): a plain usingColumns anti-join
-              // never matches NULL keys, so a stored null-key row could
-              // neither be replaced nor retracted — redelivery would
-              // duplicate it and a tombstone would silently no-op while the
-              // commit reports success. distinct() upstream
-              // already treats nulls as equal, so <=> is the consistent leg.
-              val tk = touchedKeys.get
-              val kept = old.join(tk,
-                t.bucketCols.map(c => old(c) <=> tk(c)).reduce(_ && _), "left_anti")
-              stage(cached.fold(kept)(kept.unionByName(_, allowMissingColumns = true))
-                .withColumn("pt", keyBucket)
-                .filter(StateStore.inBuckets(touched)))
-            } finally cached.foreach(_.unpersist(blocking = false))
-            touched
+      // an incremental write's inputs per table: its delta rows and the
+      // key tuples it retracts (a frame with extra columns is fine — only
+      // the key participates)
+      val inputs: Map[String, (Option[DataFrame], Option[DataFrame])] =
+        if (base.isEmpty) Map.empty
+        else specs.map { t =>
+          val d = frames.get(t.name).filterNot(StateStore.provablyNoRows).map { df =>
+            val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            persisted += p
+            p
+          }
+          t.name -> ((d, deletes.get(t.name).filterNot(StateStore.provablyNoRows).map(keysOf(t, _))))
+        }.toMap
+      // every table's touched buckets — the buckets of its delta keys
+      // (stored rows of these keys are replaced) and of its retracted keys
+      // (stored rows of these keys vanish) — in ONE bounded election job
+      val touched = StateStore.collectBucketsTagged(specs.flatMap { t =>
+        inputs.get(t.name).toSeq.flatMap { case (d, del) =>
+          (d.toSeq ++ del.toSeq).map(df => (t.name, df, keyBucket(t)))
         }
+      })
+
+      def stageTable(t: Spec): StateStore.Stager = stage => base match {
+        case None =>
+          frames.get(t.name).filterNot(StateStore.provablyNoRows)
+            .foreach(df => stage(df.withColumn("pt", keyBucket(t))))
+          Set.empty
+        case Some(b) =>
+          // read-modify-write ONLY the touched buckets: stored rows lose to
+          // delta/delete rows on key equality, then the delta rows re-enter
+          // (so a key in both survives with the delta's rows —
+          // delete-then-reinsert). A bucket every row left simply writes
+          // nothing, and its pointer drops. An untouched table's pointers
+          // all carry forward.
+          val tb = touched.getOrElse(t.name, Set.empty)
+          if (tb.nonEmpty) {
+            val (d, del) = inputs(t.name)
+            val old = StateStore.readPaths(spark, b.schemaOf(t.name),
+              StateStore.bucketPaths(statePath, b, t.name, Some(tb)))
+            // null-SAFE key equality (<=>): a plain usingColumns anti-join
+            // never matches NULL keys, so a stored null-key row could
+            // neither be replaced nor retracted — redelivery would
+            // duplicate it and a tombstone would silently no-op while the
+            // commit reports success. distinct() already treats nulls as
+            // equal, so <=> is the consistent leg.
+            val tk = (d.map(keysOf(t, _)).toSeq ++ del.toSeq).reduce(_.unionByName(_)).distinct()
+            val kept = old.join(tk,
+              t.bucketCols.map(c => old(c) <=> tk(c)).reduce(_ && _), "left_anti")
+            stage(d.fold(kept)(kept.unionByName(_, allowMissingColumns = true))
+              .withColumn("pt", keyBucket(t))
+              .filter(StateStore.inBuckets(tb)))
+          }
+          tb
       }
       (schemas, specs.map(t => t.name -> stageTable(t)))
     }._2
+    finally persisted.foreach(_.unpersist(blocking = false))
   }
 
   /** One table at `version`, resolved through its manifest pointers and
@@ -217,19 +210,6 @@ object TableStore {
     val m = manifestAt(spark, statePath, version)
     StateStore.readPaths(spark, m.schemaOf(table),
       StateStore.bucketPaths(statePath, m, table))
-  }
-
-  /** Bucket-pruned point read: only the buckets the `keys` frame hashes
-    * into are opened — the read twin of the incremental write.
-    */
-  def readForKeys(spark: SparkSession, statePath: String, version: Long,
-      spec: Spec, keys: DataFrame): DataFrame = {
-    val m = manifestAt(spark, statePath, version)
-    val touched = keys
-      .select(StateStore.bucket(spec.bucketCols, m.buckets).as("pt"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    StateStore.readPaths(spark, m.schemaOf(spec.name),
-      StateStore.bucketPaths(statePath, m, spec.name, Some(touched)))
   }
 
   def latestVersion(spark: SparkSession, statePath: String,

@@ -146,7 +146,6 @@ class InventorySpec extends AnyFunSuite with SparkSpec with Matchers {
   test("changesSince spans an additive schema evolution; narrowing is rejected") {
     import org.apache.spark.sql.functions.{col, lit, when}
     import graft.streaming.StateStore
-    import graft.state.ChangeSet
     val stateDir = java.nio.file.Files.createTempDirectory("graft_cdc_evolve").toString
     val cfg = StateStore.Config(buckets = 8)
     def mk(n: Int, bump: Set[String]): State = {
@@ -160,9 +159,9 @@ class InventorySpec extends AnyFunSuite with SparkSpec with Matchers {
     }
     StateStore.write(spark, stateDir, 0L, mk(16, Set.empty), None, cfg)
     val base = mk(16, Set("a3"))
-    StateStore.write(spark, stateDir, 1L, base.copy(assets = base.assets
-        .withColumn("region", when(col("id") === "a3", lit("eu")))),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))), cfg)
+    val (st1, l1) = graft.streaming.AssetBuckets(base.copy(assets = base.assets
+      .withColumn("region", when(col("id") === "a3", lit("eu")))), Seq("a3"), cfg)
+    StateStore.write(spark, stateDir, 1L, st1, l1, cfg)
     // the poller's diff spans the evolution: changed rows arrive in the
     // NEWER schema — the added row carries the value, the removed
     // (pre-evolution) row null-fills

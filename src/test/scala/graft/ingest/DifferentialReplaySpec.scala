@@ -7,6 +7,8 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
 import graft.schema.Schemas
 import graft.schema.Schemas.MetadataEntry
+import graft.graph.GraphOps
+import graft.streaming.{StateStore, StreamIngest}
 
 /** Differential test of the set-at-a-time pipeline against a trivially
   * correct SEQUENTIAL interpreter of the reference semantics (one event at
@@ -111,7 +113,27 @@ class DifferentialReplaySpec extends AnyFunSuite with SparkSpec with Matchers {
 
   private def run(seed: Long, n: Int, tombP: Double = 0.10): Unit = {
     val evs = genEvents(seed, n, tombP)
-    val st = Pipeline.replay(spark, envelopes(evs))
+    check(seed, Pipeline.replay(spark, envelopes(evs)), evs)
+  }
+
+  /** The same events through [[StreamIngest.applyBatch]] in `batches`
+    * offset-contiguous micro-batches over a 4-bucket store: the
+    * bucket-pruned read and the incremental write must fold to the
+    * interpreter's state too. Offsets are global, so each event keeps the
+    * processing time replay gives it.
+    */
+  private def runStreamed(seed: Long, n: Int, tombP: Double, batches: Int): Unit = {
+    val evs = genEvents(seed, n, tombP)
+    val env = envelopes(evs)
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_diff_stream_$seed").toString
+    val cuts = (0 to batches).map(b => b.toLong * n / batches)
+    for (b <- 0 until batches)
+      StreamIngest.applyBatch(env.filter($"offset" >= cuts(b) && $"offset" < cuts(b + 1)),
+        b.toLong, dir, Pipeline.Config(), Base, StateStore.Config(buckets = 4))
+    check(seed, StateStore.readLatest(spark, dir, Long.MaxValue).get._2, evs)
+  }
+
+  private def check(seed: Long, st: GraphOps.State, evs: Seq[Ev]): Unit = {
     val (ea, et, eo, ep) = sequentialOracle(evs)
 
     val ga = st.assets.collect().map(r => (r.getAs[String]("type"), r.getAs[String]("identifier")) ->
@@ -153,5 +175,14 @@ class DifferentialReplaySpec extends AnyFunSuite with SparkSpec with Matchers {
   }
   test("tombstone-heavy streams (40%): deep epoch alternation matches the interpreter (seed 29)") {
     run(29L, 30, tombP = 0.40)
+  }
+
+  // the streaming leg: the same seeds through the bucket-pruned read and
+  // the loaded-bucket incremental write, in micro-batches
+  test("micro-batched through applyBatch: the store folds to the interpreter's state (seed 11)") {
+    runStreamed(11L, 50, tombP = 0.10, batches = 4)
+  }
+  test("micro-batched through applyBatch: the store folds to the interpreter's state (seed 5, 40%)") {
+    runStreamed(5L, 40, tombP = 0.40, batches = 3)
   }
 }

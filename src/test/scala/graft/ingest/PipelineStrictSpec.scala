@@ -71,7 +71,7 @@ class PipelineStrictSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("strict halt applies the valid prefix before the first bad message") {
     val e = intercept[Pipeline.StrictHaltException](Pipeline.replay(spark, midBadBatch))
     e.haltOffset shouldBe 2L
-    val (st, _) = e.prefix
+    val st = e.prefix
     // w0/w1 (before the bad offset) applied; w3 (after it) NOT applied
     st.assets.collect().map(_.getAs[String]("identifier")).toSet shouldBe
       Set("w0.example.org", "w1.example.org")

@@ -9,8 +9,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
 import graft.graph.GraphOps.State
 import graft.ingest.Pipeline
-import graft.state.ChangeSet
-import graft.streaming.StateStore
+import graft.streaming.{AssetBuckets, StateStore}
 
 /** The store as a Spark catalog: plain SQL table access, native
   * `VERSION AS OF` time travel, pushdown surviving the catalog path, and
@@ -37,8 +36,8 @@ class StoreCatalogSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory(s"graft_cat_$tag").toString
     val cfg = StateStore.Config(buckets = 8)
     StateStore.write(spark, root, 0L, mkState(64, Set.empty), None, cfg)
-    StateStore.write(spark, root, 1L, mkState(64, Set("a5")),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))), cfg)
+    val (st1, l1) = AssetBuckets(mkState(64, Set("a5")), Seq("a5"), cfg)
+    StateStore.write(spark, root, 1L, st1, l1, cfg)
     val cat = s"graftstore_$tag"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[StoreCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.path", root)
@@ -92,10 +91,9 @@ class StoreCatalogSpec extends AnyFunSuite with SparkSpec with Matchers {
     val cfg = StateStore.Config(buckets = 8)
     StateStore.write(spark, root, 0L, mkState(64, Set.empty), None, cfg)
     val base = mkState(64, Set("a5"))
-    StateStore.write(spark, root, 1L,
-      base.copy(assets = base.assets
-        .withColumn("region", when(col("id") === "a5", lit("eu")))),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))), cfg)
+    val (st1, l1) = AssetBuckets(base.copy(assets = base.assets
+      .withColumn("region", when(col("id") === "a5", lit("eu")))), Seq("a5"), cfg)
+    StateStore.write(spark, root, 1L, st1, l1, cfg)
     val cat = "graftstore_evolve"
     spark.conf.set(s"spark.sql.catalog.$cat", classOf[StoreCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$cat.path", root)

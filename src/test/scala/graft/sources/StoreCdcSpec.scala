@@ -10,8 +10,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
 import graft.graph.GraphOps.State
 import graft.ingest.Pipeline
-import graft.state.ChangeSet
-import graft.streaming.{ExceptAllDiff, StateStore}
+import graft.streaming.{AssetBuckets, ExceptAllDiff, StateStore}
 
 /** The `graft-store-cdc` DataSource V2 change feed: version-offset
   * semantics, genesis vs future-only starts, checkpointed restart, the
@@ -35,10 +34,12 @@ class StoreCdcSpec extends AnyFunSuite with SparkSpec with Matchers {
   private val cfg = StateStore.Config(buckets = 8)
 
   private def writeV(root: String, v: Long, n: Int,
-      bump: Map[String, Timestamp], changedIds: Seq[String]): Unit =
-    StateStore.write(spark, root, v, mkState(n, bump),
-      if (changedIds.isEmpty) None
-      else Some(ChangeSet.empty(spark).copy(assets = changedIds.toDF("id"))), cfg)
+      bump: Map[String, Timestamp], changedIds: Seq[String]): Unit = {
+    val (st, loaded) =
+      if (changedIds.isEmpty) (mkState(n, bump), None)
+      else AssetBuckets(mkState(n, bump), changedIds, cfg)
+    StateStore.write(spark, root, v, st, loaded, cfg)
+  }
 
   private def stream(root: String, startingVersion: Option[Long]): DataFrame = {
     val r = spark.readStream.format("graft-store-cdc")
@@ -207,11 +208,11 @@ class StoreCdcSpec extends AnyFunSuite with SparkSpec with Matchers {
       Pipeline.emptyState(spark).copy(assets = assets)
     }
     StateStore.write(spark, root, 0L, typed(0 until 30, Map.empty), None, cfg)
-    StateStore.write(spark, root, 1L, typed(0 until 30, Map("a5" -> t1)),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))), cfg)
+    val (st1, l1) = AssetBuckets(typed(0 until 30, Map("a5" -> t1)), Seq("a5"), cfg)
+    StateStore.write(spark, root, 1L, st1, l1, cfg)
     // v2 drops a0 and a1 entirely
-    StateStore.write(spark, root, 2L, typed(2 until 30, Map("a5" -> t1)),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a0", "a1").toDF("id"))), cfg)
+    val (st2, l2) = AssetBuckets(typed(2 until 30, Map("a5" -> t1)), Seq("a0", "a1"), cfg)
+    StateStore.write(spark, root, 2L, st2, l2, cfg)
 
     val view = scala.collection.mutable.HashMap.empty[String, Long]
     val q = spark.readStream.format("graft-store-cdc")
@@ -259,9 +260,10 @@ class StoreCdcSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = base + "/store"
     writeV(root, 0L, 8, Map.empty, Nil)
     val b1 = mkState(8, Map("a3" -> t1))
-    StateStore.write(spark, root, 1L,
+    val (st1, l1) = AssetBuckets(
       b1.copy(assets = b1.assets.withColumn("region", when(col("id") === "a3", lit("eu")))),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))), cfg)
+      Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, st1, l1, cfg)
     val q = stream(root, Some(-1L))
       .writeStream.format("memory").queryName("cdc_evolved")
       .option("checkpointLocation", base + "/ckpt")
@@ -342,9 +344,10 @@ class StoreCdcSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_cdc_evolve_mid").toString
     writeV(root, 0L, 8, Map.empty, Nil)
     val b1 = mkState(8, Map("a3" -> t1))
-    StateStore.write(spark, root, 1L,
+    val (st1, l1) = AssetBuckets(
       b1.copy(assets = b1.assets.withColumn("region", when(col("id") === "a3", lit("eu")))),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))), cfg)
+      Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, st1, l1, cfg)
     // a stream BOUND to the pre-evolution schema (started before v1) must
     // not emit v1 through the narrower shape — that would silently drop
     // the new column from the change feed

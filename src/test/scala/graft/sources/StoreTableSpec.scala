@@ -10,8 +10,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
 import graft.graph.GraphOps.State
 import graft.ingest.Pipeline
-import graft.state.ChangeSet
-import graft.streaming.StateStore
+import graft.streaming.{AssetBuckets, StateStore}
 
 /** The `graft-store` DataSource V2 table: SQL-facing time travel over the
   * versioned store plus bucket pruning from pushed-down key filters — the
@@ -35,8 +34,8 @@ class StoreTableSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_dsv2_store").toString
     val cfg = StateStore.Config(buckets)
     StateStore.write(spark, root, 0L, mkState(64), None, cfg)
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))
-    StateStore.write(spark, root, 1L, mkState(64, bump = Set("a5")), Some(ch), cfg)
+    val (st1, l1) = AssetBuckets(mkState(64, bump = Set("a5")), Seq("a5"), cfg)
+    StateStore.write(spark, root, 1L, st1, l1, cfg)
     (root, cfg)
   }
 
@@ -174,8 +173,8 @@ class StoreTableSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = mkState(64, bump = Set("a5"))
     val st1 = base.copy(assets = base.assets
       .withColumn("region", when(col("id") === "a5", lit("eu"))))
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))
-    StateStore.write(spark, root, 1L, st1, Some(ch), cfg)
+    val (p1, l1) = AssetBuckets(st1, Seq("a5"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
     // version 0 through the DSv2 table: pre-evolution shape
     load(root, Some(0L)).schema.fieldNames should not contain "region"
     // version 1 (and latest): evolved shape; the rewritten bucket carries

@@ -7,7 +7,6 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 import graft.graph.GraphOps.State
 import graft.ingest.Pipeline
-import graft.state.ChangeSet
 import java.sql.Timestamp
 
 /** The store's crash matrix (VERDICT r8 next #3): a kill point at EACH
@@ -52,20 +51,18 @@ class FaultInjectionSpec extends AnyFunSuite with SparkSpec with Matchers
     e.copy(assets = assets)
   }
 
-  private def changed(ids: String*): ChangeSet =
-    ChangeSet.empty(spark).copy(assets = ids.toDF("id"))
-
   private def assetRows(df: DataFrame): Set[(String, Timestamp)] =
     df.select("id", "last_seen").as[(String, Timestamp)].collect().toSet
 
   /** v0 = 40 assets; the v1 fold bumps a3/a17/a29. Returns the root. */
   private def seedV0(root: String): Unit = {
-    StateStore.write(spark, root, 0L, mkState(40), changes = None, cfg)
+    StateStore.write(spark, root, 0L, mkState(40), None, cfg)
   }
   private val bumped = Set("a3", "a17", "a29")
-  private def writeV1(root: String): Unit =
-    StateStore.write(spark, root, 1L, mkState(40, bumped),
-      changes = Some(changed(bumped.toSeq: _*)), cfg)
+  private def writeV1(root: String): Unit = {
+    val (st, loaded) = AssetBuckets(mkState(40, bumped), bumped.toSeq, cfg)
+    StateStore.write(spark, root, 1L, st, loaded, cfg)
+  }
 
   /** Control store: the same two folds with no fault anywhere. */
   private lazy val control: (Set[(String, Timestamp)], StateStore.Pointers) = {
@@ -112,7 +109,7 @@ class FaultInjectionSpec extends AnyFunSuite with SparkSpec with Matchers
     FaultyFs.arm("create", "/teams/")
     graft.JobLog.during(spark) { log =>
       spark.sparkContext.setJobGroup("faulted-write", "faulted-write")
-      try intercept[Exception] { StateStore.write(spark, root, 1L, multi, changes = None, cfg) }
+      try intercept[Exception] { StateStore.write(spark, root, 1L, multi, None, cfg) }
       finally spark.sparkContext.clearJobGroup()
       val staging = log.jobs.filter(_.group.contains("faulted-write"))
       staging.size should be >= 2
@@ -171,8 +168,8 @@ class FaultInjectionSpec extends AnyFunSuite with SparkSpec with Matchers
 
   test("kill point: prune's reclaim delete fails mid-sweep") {
     val root = tmp(); seedV0(root); writeV1(root)
-    StateStore.write(spark, root, 2L, mkState(40, bumped + "a5"),
-      changes = Some(changed("a5")), cfg)
+    val (st2, loaded2) = AssetBuckets(mkState(40, bumped + "a5"), Seq("a5"), cfg)
+    StateStore.write(spark, root, 2L, st2, loaded2, cfg)
     FaultyFs.arm("delete", "pt=")
     intercept[java.io.IOException] { StateStore.prune(spark, root, keepFrom = 2L) }
     FaultyFs.disarm()
@@ -187,8 +184,8 @@ class FaultInjectionSpec extends AnyFunSuite with SparkSpec with Matchers
 
   test("prune vs pinned batch reader: the pin is a retention watermark") {
     val root = tmp(); seedV0(root); writeV1(root)
-    StateStore.write(spark, root, 2L, mkState(40, bumped + "a5"),
-      changes = Some(changed("a5")), cfg)
+    val (st2, loaded2) = AssetBuckets(mkState(40, bumped + "a5"), Seq("a5"), cfg)
+    StateStore.write(spark, root, 2L, st2, loaded2, cfg)
     // a batch reader resolves v0 and pins it for the span of its read
     StateStore.pinVersion(spark, root, 0L, token = "reader-1")
     val pinnedRead = StateStore.read(spark, root, 0L).assets // lazy!

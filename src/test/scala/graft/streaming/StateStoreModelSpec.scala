@@ -8,7 +8,6 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkSpec
 import graft.graph.GraphOps.State
 import graft.ingest.Pipeline
-import graft.state.ChangeSet
 
 /** Model-based property test for the versioned store: random sequences of
   * incremental writes (adds, updates, drops) and prunes are replayed
@@ -16,7 +15,7 @@ import graft.state.ChangeSet
   * committed version must read back exactly its model snapshot, and every
   * adjacent version diff must equal the model's row diff. This is the
   * randomized complement of StateStoreSpec's targeted cases — shadow
-  * paging, pointer chasing, change-set bucket election, and per-bucket
+  * paging, pointer chasing, loaded-bucket rewrites, and per-bucket
   * pruning all have to hold simultaneously for the whole CHAIN, not just
   * the scripted shapes.
   */
@@ -63,9 +62,10 @@ class StateStoreModelSpec extends AnyFunSuite with SparkSpec with Matchers {
         val next = (model -- dropped) ++
           bumped.map(id => id -> (model(id) + 1)) ++ added.map(_ -> 0)
         val changedIds = (bumped ++ added ++ dropped).distinct
-        StateStore.write(spark, root, step.toLong, toState(next),
-          if (changedIds.isEmpty) None
-          else Some(ChangeSet.empty(spark).copy(assets = changedIds.toDF("id"))), cfg)
+        val (st, loaded) =
+          if (changedIds.isEmpty) (toState(next), None)
+          else AssetBuckets(toState(next), changedIds, cfg)
+        StateStore.write(spark, root, step.toLong, st, loaded, cfg)
         model = next
         versions :+= (step.toLong -> model)
       }
@@ -118,10 +118,10 @@ class StateStoreModelSpec extends AnyFunSuite with SparkSpec with Matchers {
         val next = (model -- dropped) ++
           bumped.map(id => id -> (model(id) + 1)) ++ added.map(_ -> 0)
         val changedIds = (bumped ++ added ++ dropped).distinct
-        val changes =
-          if (changedIds.isEmpty) None
-          else Some(ChangeSet.empty(spark).copy(assets = changedIds.toDF("id")))
-        StateStore.write(spark, root, step.toLong, toState(next), changes, cfg)
+        val (st, loaded) =
+          if (changedIds.isEmpty) (toState(next), None)
+          else AssetBuckets(toState(next), changedIds, cfg)
+        StateStore.write(spark, root, step.toLong, st, loaded, cfg)
         model = next
         versions :+= (step.toLong -> model)
 
@@ -187,8 +187,8 @@ class StateStoreModelSpec extends AnyFunSuite with SparkSpec with Matchers {
         var winner: Option[Model] = None
         attempts.foreach { case (m, id) =>
           try {
-            StateStore.write(spark, root, v, toState(m),
-              Some(ChangeSet.empty(spark).copy(assets = Seq(id).toDF("id"))), cfg)
+            val (st, loaded) = AssetBuckets(toState(m), Seq(id), cfg)
+            StateStore.write(spark, root, v, st, loaded, cfg)
             winner match {
               case None => winner = Some(m) // first attempt commits
               case Some(w) => m shouldBe w // only redelivery may succeed
@@ -253,9 +253,9 @@ class StateStoreModelSpec extends AnyFunSuite with SparkSpec with Matchers {
           df.withColumn(c,
             when(col("id").isin(changed: _*), concat_lit(c, v)).otherwise(lit(null)))
         }
-        StateStore.write(spark, root, v.toLong,
-          graft.ingest.Pipeline.emptyState(spark).copy(assets = frame),
-          Some(ChangeSet.empty(spark).copy(assets = changed.toDF("id"))), cfg)
+        val (st, loaded) = AssetBuckets(
+          graft.ingest.Pipeline.emptyState(spark).copy(assets = frame), changed, cfg)
+        StateStore.write(spark, root, v.toLong, st, loaded, cfg)
         perVersion :+= ((model, cols, colVals))
 
         // EVERY committed version reads back its own schema + values

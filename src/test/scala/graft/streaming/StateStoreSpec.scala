@@ -6,7 +6,6 @@ import graft.SparkSpec
 import graft.graph.GraphOps.State
 import graft.ingest.Pipeline
 import graft.sources.Fixtures
-import graft.state.ChangeSet
 import java.nio.file.Files
 import java.sql.Timestamp
 
@@ -59,13 +58,13 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_store").toString
     val cfg = StateStore.Config(buckets = 16)
 
-    StateStore.write(spark, root, 0L, mkState(64), changes = None, cfg)
+    StateStore.write(spark, root, 0L, mkState(64), None, cfg)
     val v0Assets = ptDirs(root, 0L, "assets")
     v0Assets.size should be > 10 // 64 keys over 16 buckets: all/most populated
 
-    // bump one key, declare only that key changed
-    val changes = ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))
-    val m1 = StateStore.write(spark, root, 1L, mkState(64, bump = Set("a5")), Some(changes), cfg)
+    // bump one key, write only that key's bucket
+    val (p1, l1) = AssetBuckets(mkState(64, bump = Set("a5")), Seq("a5"), cfg)
+    val m1 = StateStore.write(spark, root, 1L, p1, l1, cfg)
 
     val v1Assets = ptDirs(root, 1L, "assets")
     v1Assets.size shouldBe 1 // O(batch), not O(state)
@@ -85,8 +84,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_store").toString
     val cfg = StateStore.Config(buckets = 16)
     StateStore.write(spark, root, 0L, mkState(64), None, cfg)
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))
-    StateStore.write(spark, root, 1L, mkState(64, bump = Set("a5")), Some(ch), cfg)
+    val (p1, l1) = AssetBuckets(mkState(64, bump = Set("a5")), Seq("a5"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
 
     val diffs = StateStore.diffVersions(spark, root, 0L, 1L)
     val assets = diffs.find(_.table == "assets").get
@@ -112,9 +111,9 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_store").toString
     val cfg = StateStore.Config(buckets = 16)
     StateStore.write(spark, root, 0L, mkState(8), None, cfg)
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    val first = StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
-    val again = StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+    val (p1, l1) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), cfg)
+    val first = StateStore.write(spark, root, 1L, p1, l1, cfg)
+    val again = StateStore.write(spark, root, 1L, p1, l1, cfg)
     again shouldBe first
     assetRows(StateStore.read(spark, root, 1L)) shouldBe assetRows(mkState(8, Set("a3")))
   }
@@ -122,13 +121,13 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
   test("changing Config.buckets against an existing chain is refused") {
     val root = Files.createTempDirectory("graft_store").toString
     StateStore.write(spark, root, 0L, mkState(8), None, StateStore.Config(buckets = 16))
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
+    val (p1, l1) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), StateStore.Config(buckets = 8))
     // incremental write under a different modulus would leave changed rows
     // outside the rewritten partitions silently stale (ADVICE r3)
     an[IllegalArgumentException] should be thrownBy
-      StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch),
+      StateStore.write(spark, root, 1L, p1, l1,
         StateStore.Config(buckets = 8))
-    // a FULL write (changes=None) legitimately rebuckets
+    // a FULL write (loaded=None) legitimately rebuckets
     StateStore.write(spark, root, 1L, mkState(8, Set("a3")), None, StateStore.Config(buckets = 8))
     assetRows(StateStore.read(spark, root, 1L)) shouldBe assetRows(mkState(8, Set("a3")))
   }
@@ -140,8 +139,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     var bumped = Set.empty[String]
     for (v <- 1L to 3L) {
       bumped += s"a${v * 7}"
-      val ch = ChangeSet.empty(spark).copy(assets = Seq(s"a${v * 7}").toDF("id"))
-      StateStore.write(spark, root, v, mkState(64, bumped), Some(ch), cfg)
+      val (pv, lv) = AssetBuckets(mkState(64, bumped), Seq(s"a${v * 7}"), cfg)
+      StateStore.write(spark, root, v, pv, lv, cfg)
       // shadow paging: EVERY incremental write stays O(batch) — exactly the
       // one bucket the changed key hashes to, never a compaction rewrite
       ptDirs(root, v, "assets").size shouldBe 1
@@ -182,7 +181,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
       teamIds = Seq("t1").toDF("identifier"),
       ownsAssetIds = Seq("Asset/a5").toDF("asset_id"),
       parentIds = Seq("Asset/a5").toDF("parent_id"),
-      childIds = Seq("Asset/a5").toDF("child_id"))
+      childIds = Seq("Asset/a5").toDF("child_id"),
+      edgeChildIds = Seq.empty[String].toDF("child_id"))
     val p = StateStore.readPartialLatest(spark, root, Long.MaxValue, cand, cfg).get
 
     // read I/O is bounded by candidate count, not state size: one asset
@@ -226,8 +226,7 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
       val p = StateStore.readPartialLatest(spark, root, 0L, cand, cfg).get
       partial = Some(p); p.state
     }
-    val (next, changes) =
-      Pipeline.foldTracked(spark, stateFor, batch, Pipeline.Config(), 1704067200L)
+    val next = Pipeline.fold(spark, stateFor, batch, Pipeline.Config(), 1704067200L)
 
     // read I/O bound, by path inspection: the event touches two asset keys
     // (the hostname + its derived AWS account), one team, one owns pair,
@@ -239,7 +238,7 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     p.paths("parent_of").size should be <= 1
 
     // the loaded-subset assertion is armed and the write is incremental
-    val m1 = StateStore.write(spark, root, 1L, next, Some(changes), cfg, Some(p.loaded))
+    val m1 = StateStore.write(spark, root, 1L, next, Some(p.loaded), cfg)
     m1("assets").values.count(_ == 1L) should be <= 2
     // full read-back: all 512 old assets intact + hostname + AWS account
     val full = StateStore.read(spark, root, 1L)
@@ -278,6 +277,63 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     shape(streamed) shouldBe shape(replayed)
   }
 
+  test("an incremental write holding a row outside its loaded buckets fails and commits nothing") {
+    val root = Files.createTempDirectory("graft_store").toString
+    val cfg = StateStore.Config(buckets = 16)
+    StateStore.write(spark, root, 0L, mkState(64), None, cfg)
+    // a5's bucket is loaded; one row of a bucket the write never loaded
+    // rides along in the partial state
+    val stray = (0 until 64).map(i => s"a$i")
+      .find(id => StateStore.bucketIdFor(id, 16) != StateStore.bucketIdFor("a5", 16)).get
+    val (p1, l1) = AssetBuckets(mkState(64, bump = Set("a5")), Seq("a5"), cfg)
+    val withStray = p1.copy(assets = p1.assets.unionByName(
+      mkState(64, bump = Set(stray)).assets.filter($"id" === stray)))
+    val e = intercept[IllegalArgumentException] {
+      StateStore.write(spark, root, 1L, withStray, l1, cfg)
+    }
+    e.getMessage should include("does not rewrite")
+    // the head stays at the predecessor, and the failed write left nothing
+    StateStore.latestCommitted(spark, root) shouldBe Some(0L)
+    new java.io.File(s"$root/v1/MANIFEST").exists() shouldBe false
+    Option(new java.io.File(s"$root/v1").list()).toSeq.flatten
+      .filter(_.startsWith("d-")) shouldBe empty
+    new java.io.File(root).list().filter(_.startsWith(".staging-")) shouldBe empty
+    assetRows(StateStore.readLatest(spark, root, Long.MaxValue).get._2) shouldBe
+      assetRows(mkState(64))
+  }
+
+  test("a refresh-only trigger runs no change checkpoint, and its store write only stages") {
+    val stateDir = Files.createTempDirectory("graft_state").toString
+    val path = getClass.getResource("/fixtures/scenario.json").getPath
+    val cfg = Pipeline.Config()
+    StreamIngest.applyBatch(Fixtures.loadJson(spark, path), 0L, stateDir, cfg, 1704067200L)
+    // one refresh touching all four graph tables and the reverse index:
+    // an asset, its team, the owns edge, and an AWS-account parent edge
+    val json = """{"Id": "web9", "Team": {"Id": "alpha", "Name": "alpha name"},
+      "AssetType": "Hostname", "Identifier": "web9.example.org",
+      "Annotations": [{"Key": "discovery/aws/account", "Value": "000000000000"}]}"""
+    val batch = Seq(Env(100L, "alpha/web9", json, Seq(
+      graft.schema.Schemas.MetadataEntry("version", "0.1.2"),
+      graft.schema.Schemas.MetadataEntry("type", "Hostname"),
+      graft.schema.Schemas.MetadataEntry("identifier", "web9.example.org")))).toDF()
+    graft.JobLog.during(spark) { log =>
+      StreamIngest.applyBatch(batch, 1L, stateDir, cfg, 1704067200L)
+      val jobs = log.jobs
+      jobs.flatMap(_.description).filter(_.endsWith("-changes-checkpoint")) shouldBe empty
+      val writes = jobs.filter(_.description.contains("fold:store-write"))
+      // every store-write job is a staging (run through graft.exec, which
+      // tags its actions' jobs): no bucket election precedes them
+      writes.filterNot(_.tags.exists(_.startsWith("graft-exec-"))) shouldBe empty
+      // at most one staging per graph table with rows, plus the index's
+      // (its distinct adds a shuffle job)
+      val m1 = StateStore.readManifest(spark, stateDir, 1L).get
+      val staged = m1.pointers.count { case (t, ps) =>
+        t != "parent_of_idx" && ps.values.exists(_ == 1L) }
+      staged shouldBe 4
+      writes.size should be <= staged + 2
+    }
+  }
+
   // --- write-concurrency + corruption (VERDICT r6 next #3) -----------------
 
   test("two folds racing one version: exactly one wins, loser gets a retryable error") {
@@ -286,11 +342,11 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     StateStore.write(spark, root, 0L, mkState(8), None, cfg)
     // writer A commits v1 (bumps a3); writer B then tries to commit ITS v1
     // (bumps a5 — a genuinely different fold, not a redelivery)
-    val chA = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(chA), cfg)
-    val chB = ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))
+    val (pA, lA) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, pA, lA, cfg)
+    val (pB, lB) = AssetBuckets(mkState(8, Set("a5")), Seq("a5"), cfg)
     val lost = intercept[StateStore.ConcurrentWriteException] {
-      StateStore.write(spark, root, 1L, mkState(8, Set("a5")), Some(chB), cfg)
+      StateStore.write(spark, root, 1L, pB, lB, cfg)
     }
     // the loser's error is RETRYABLE (re-read head, re-run fold) ...
     StreamIngest.isRetryable(lost) shouldBe true
@@ -303,8 +359,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val cfg = StateStore.Config(buckets = 16)
     val p0 = StateStore.write(spark, root, 0L, mkState(8), None, cfg)
     // writer B computed v2 against head=v0; writer A commits v1 in between
-    val chA = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(chA), cfg)
+    val (pA, lA) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, pA, lA, cfg)
     // B's commit carries expectedPrev = v0 — the inherited pointers would
     // silently drop A's v1 changes (lost update), so the CAS rejects it
     val lost = intercept[StateStore.ConcurrentWriteException] {
@@ -318,8 +374,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_store").toString
     val cfg = StateStore.Config(buckets = 16)
     StateStore.write(spark, root, 0L, mkState(8), None, cfg)
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+    val (p1, l1) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
     // flip a pointer digit in v1's manifest, keeping crc/END lines in
     // place; drop the LocalFileSystem .crc sidecar so the corruption
     // reaches the manifest's OWN integrity line (bit rot on a filesystem
@@ -345,8 +401,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_store").toString
     val cfg = StateStore.Config(buckets = 16)
     StateStore.write(spark, root, 0L, mkState(8), None, cfg)
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+    val (p1, l1) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
     // truncate v1's manifest (drop crc+END): what a writer that predates
     // the atomic publish leaves when it crashes mid-write — not corruption
     // of a COMMITTED manifest
@@ -361,13 +417,13 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     // a FRESH remnant is refused retryably (it may be such a writer
     // mid-create, not a crash)
     val fresh = intercept[StateStore.ConcurrentWriteException] {
-      StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+      StateStore.write(spark, root, 1L, p1, l1, cfg)
     }
     fresh.getMessage should include("grace window")
     // once the remnant ages past the window, a RE-COMMIT of v1 reclaims
     // it (the redelivery path)
     mp.toFile.setLastModified(System.currentTimeMillis() - 2 * StateStore.RemnantGraceMs)
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
     assetRows(StateStore.read(spark, root, 1L)) shouldBe assetRows(mkState(8, Set("a3")))
   }
 
@@ -382,8 +438,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val base = mkState(8, Set("a3"))
     val st1 = base.copy(assets = base.assets
       .withColumn("region", when(col("id") === "a3", lit("eu"))))
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
-    StateStore.write(spark, root, 1L, st1, Some(ch), cfg)
+    val (p1, l1) = AssetBuckets(st1, Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
     // v0 keeps its own (pre-evolution) shape
     StateStore.read(spark, root, 0L).assets.schema.fieldNames should not contain "region"
     // v1 reads through ITS schema: changed bucket has the value, inherited
@@ -403,11 +459,11 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val wide = mkState(8)
     StateStore.write(spark, root, 0L,
       wide.copy(assets = wide.assets.withColumn("region", lit("eu"))), None, cfg)
-    val ch = ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
+    val (p1, l1) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), cfg)
     // dropping `region` incrementally would leave inherited buckets
     // silently disagreeing with rewritten ones
     val e = intercept[IllegalArgumentException] {
-      StateStore.write(spark, root, 1L, mkState(8, Set("a3")), Some(ch), cfg)
+      StateStore.write(spark, root, 1L, p1, l1, cfg)
     }
     e.getMessage should include("narrows")
     // a FULL write rewrites every bucket — narrowing is then well-defined
@@ -441,8 +497,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     var bumped = Set.empty[String]
     for (v <- 1L to 3L) {
       bumped += s"a${v * 7}"
-      val ch = ChangeSet.empty(spark).copy(assets = Seq(s"a${v * 7}").toDF("id"))
-      StateStore.write(spark, root, v, mkState(64, bumped), Some(ch), cfg)
+      val (pv, lv) = AssetBuckets(mkState(64, bumped), Seq(s"a${v * 7}"), cfg)
+      StateStore.write(spark, root, v, pv, lv, cfg)
     }
     // a racer that crashed after promoting but before the manifest CAS
     // leaves a writer-unique dir no manifest references — plant one
@@ -461,8 +517,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val root = Files.createTempDirectory("graft_store").toString
     val cfg = StateStore.Config(buckets = 16)
     StateStore.write(spark, root, 0L, mkState(8), None, cfg)
-    StateStore.write(spark, root, 1L, mkState(8, Set("a3")),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))), cfg)
+    val (p1, l1) = AssetBuckets(mkState(8, Set("a3")), Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
     // a writer that crashed mid-write leaves its staging dir behind
     val orphan = new java.io.File(s"$root/.staging-v2-deadbeef/assets")
     orphan.mkdirs() shouldBe true
@@ -478,9 +534,9 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
     val cfg = StateStore.Config(buckets = 16)
     StateStore.write(spark, root, 0L, mkState(32), None, cfg)
     val base = mkState(32, Set("a3"))
-    StateStore.write(spark, root, 1L, base.copy(assets = base.assets
-        .withColumn("region", when(col("id") === "a3", lit("eu")))),
-      Some(ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))), cfg)
+    val (p1, l1) = AssetBuckets(base.copy(assets = base.assets
+      .withColumn("region", when(col("id") === "a3", lit("eu")))), Seq("a3"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg)
     // candidates spanning a REWRITTEN bucket (a3) and an INHERITED one
     // (some other id): the fold's partial read must see the evolved
     // column in both, value in the former, null-fill in the latter
@@ -489,7 +545,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
       teamIds = Seq.empty[String].toDF("identifier"),
       ownsAssetIds = Seq.empty[String].toDF("asset_id"),
       parentIds = Seq.empty[String].toDF("parent_id"),
-      childIds = Seq.empty[String].toDF("child_id"))
+      childIds = Seq.empty[String].toDF("child_id"),
+      edgeChildIds = Seq.empty[String].toDF("child_id"))
     val p = StateStore.readPartialLatest(spark, root, Long.MaxValue, cand, cfg).get
     p.state.assets.schema.fieldNames should contain("region")
     val regions = p.state.assets.select("id", "region").collect()

@@ -86,35 +86,35 @@ class StoreConcurrencySpec extends AnyFunSuite with SparkSpec with Matchers {
       .select("last_seen").head().getTimestamp(0)
 
   test("graph store: same-version same-bucket-set racers with DIFFERENT content: loser fails retryably") {
-    import spark.implicits._
     // the graph twin of the TableStore leg above: two folds of v1 that
-    // change the same asset (so the same ChangeSet, the same touched
-    // bucket and the same pointer map) but to different values
+    // change the same asset (so the same loaded bucket and the same
+    // pointer map) but to different values
     val root = Files.createTempDirectory("graft-conc").toString
     val cfg = StateStore.Config(buckets = 8)
-    val ch = graft.state.ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
+    def v1(a3Seen: String) = AssetBuckets(graphState(a3Seen), Seq("a3"), cfg)
     StateStore.write(spark, root, 0L, graphState("2024-01-01 00:00:00"), None, cfg)
-    StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
+    val (feb, l1) = v1("2024-02-01 00:00:00")
+    StateStore.write(spark, root, 1L, feb, l1, cfg)
     val ex = intercept[StateStore.ConcurrentWriteException] {
-      StateStore.write(spark, root, 1L, graphState("2024-03-01 00:00:00"), Some(ch), cfg)
+      StateStore.write(spark, root, 1L, v1("2024-03-01 00:00:00")._1, l1, cfg)
     }
     ex.getMessage should include("different content")
     StreamIngest.isRetryable(ex) shouldBe true
     // ...while a byte-identical redelivery still succeeds silently
-    StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
+    StateStore.write(spark, root, 1L, feb, l1, cfg)
     a3Seen(root, 1L) shouldBe java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
     StateStore.readManifest(spark, root, 1L).get.sigs.keySet should contain("assets")
   }
 
   test("graph store: a manifest without signatures still reads and takes redelivery, pointer-only") {
-    import spark.implicits._
     // manifests committed before the graph tables recorded signatures:
     // rewrite v1's manifest as such a store left it (no sig: lines)
     val root = Files.createTempDirectory("graft-conc").toString
     val cfg = StateStore.Config(buckets = 8)
-    val ch = graft.state.ChangeSet.empty(spark).copy(assets = Seq("a3").toDF("id"))
+    def v1(a3Seen: String) = AssetBuckets(graphState(a3Seen), Seq("a3"), cfg)
     StateStore.write(spark, root, 0L, graphState("2024-01-01 00:00:00"), None, cfg)
-    StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
+    val (feb, l1) = v1("2024-02-01 00:00:00")
+    StateStore.write(spark, root, 1L, feb, l1, cfg)
     val m = StateStore.readManifest(spark, root, 1L).get
     Files.writeString(java.nio.file.Paths.get(s"$root/v1/MANIFEST"),
       StateStore.renderManifest(cfg, m.pointers, m.schemas, m.dirs, m.keys,
@@ -125,13 +125,13 @@ class StoreConcurrencySpec extends AnyFunSuite with SparkSpec with Matchers {
     // succeeds, and so does a different fold onto the same buckets, which
     // is exactly what a pointer map cannot tell apart — the committed
     // content stays the first writer's either way
-    StateStore.write(spark, root, 1L, graphState("2024-02-01 00:00:00"), Some(ch), cfg)
-    StateStore.write(spark, root, 1L, graphState("2024-03-01 00:00:00"), Some(ch), cfg)
+    StateStore.write(spark, root, 1L, feb, l1, cfg)
+    StateStore.write(spark, root, 1L, v1("2024-03-01 00:00:00")._1, l1, cfg)
     a3Seen(root, 1L) shouldBe java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
     StateStore.readManifest(spark, root, 1L).get.sigs shouldBe empty
     // the next version builds on it and is signed again
-    val ch2 = graft.state.ChangeSet.empty(spark).copy(assets = Seq("a5").toDF("id"))
-    StateStore.write(spark, root, 2L, graphState("2024-02-01 00:00:00"), Some(ch2), cfg)
+    val (st2, l2) = AssetBuckets(graphState("2024-02-01 00:00:00"), Seq("a5"), cfg)
+    StateStore.write(spark, root, 2L, st2, l2, cfg)
     StateStore.readManifest(spark, root, 2L).get.sigs.keySet should contain("assets")
   }
 

@@ -76,19 +76,6 @@ class TableStoreSpec extends AnyFunSuite with SparkSpec with Matchers {
       .as[(Long, String)].collect().toMap shouldBe Map(1L -> "x", 2L -> "y2")
   }
 
-  test("readForKeys opens only the keys' buckets") {
-    val root = tmp()
-    TableStore.write(spark, root, 0L, specs,
-      Map("dim" -> dim("a" -> 1L),
-        "facts" -> facts((1L to 50L).map(i => i -> s"p$i"): _*)), cfg = cfg)
-    val keys = Seq(5L).toDF("id")
-    val got = TableStore.readForKeys(spark, root, 0L, specs(1), keys)
-      .as[(Long, String)].collect().toMap
-    got(5L) shouldBe "p5"
-    // a pruned read returns a subset, never the whole table
-    got.size should be < 50
-  }
-
   test("version history: older versions keep reading their own content") {
     val root = tmp()
     TableStore.write(spark, root, 0L, specs,

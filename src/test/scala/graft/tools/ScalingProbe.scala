@@ -159,14 +159,15 @@ object ScalingProbe {
         lit(t0).as("first_seen"), lit(t0).as("last_seen"),
         lit(graft.schema.Schemas.Unexpired).as("expiration"))
     val st = graft.ingest.Pipeline.emptyState(spark).copy(assets = assets)
-    StateStore.write(spark, root, 0L, st, changes = None, cfg) // untimed build
+    StateStore.write(spark, root, 0L, st, None, cfg) // untimed build
     import spark.implicits._
     val cand = StateStore.Candidates(
       assetIds = Seq("a7").toDF("id"),
       teamIds = Seq.empty[String].toDF("identifier"),
       ownsAssetIds = Seq.empty[String].toDF("asset_id"),
       parentIds = Seq.empty[String].toDF("parent_id"),
-      childIds = Seq.empty[String].toDF("child_id"))
+      childIds = Seq.empty[String].toDF("child_id"),
+      edgeChildIds = Seq.empty[String].toDF("child_id"))
     record("store_1key_read")(timeMin(3, spark) {
       val p = StateStore.readPartialLatest(spark, root, 0L, cand, cfg).get
       p.state.assets.count()
@@ -180,8 +181,8 @@ object ScalingProbe {
     val tBump = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
     val bumped = st.copy(assets = assets.withColumn("last_seen",
       when(col("id") === "a7", lit(tBump)).otherwise(col("last_seen"))))
-    StateStore.write(spark, root, 1L, bumped, // untimed build
-      Some(graft.state.ChangeSet.empty(spark).copy(assets = Seq("a7").toDF("id"))), cfg)
+    val (p1, l1) = graft.streaming.AssetBuckets(bumped, Seq("a7"), cfg)
+    StateStore.write(spark, root, 1L, p1, l1, cfg) // untimed build
     record("store_diff_1key")(timeMin(3, spark) {
       StateStore.diffVersions(spark, root, 0L, 1L)
         .find(_.table == "assets").get.changed.count()
